@@ -13,11 +13,15 @@ import graft.plans.Pins.PinnedOps
   * of joins+aggregations with `localCheckpoint` lineage truncation per
   * iteration.
   *
-  * Scale notes: every iteration is one shuffle keyed by node id — the
-  * natural co-partitioning for a 1000-executor run is hash(id) on both
-  * ranks and edges so the join is local after the first shuffle; Spark's
-  * AQE reuses the exchange. Nothing collects to the driver except loop
-  * counters and convergence checks (single-row aggregates).
+  * Scale notes: an iteration is not one Spark job. Measured on Spark
+  * 4.1.2 at local[2] (a 200-node, 400-edge graph), each two-round
+  * [[pageRankFixed]] pin costs 7 jobs and 2 executed shuffle-map stages:
+  * one shuffle keyed by node id per round executes, while AQE runs every
+  * query stage and broadcast as a job of its own. The natural
+  * co-partitioning for a 1000-executor run is hash(id) on both ranks and
+  * edges so the join is local after the first shuffle. Nothing collects
+  * to the driver except loop counters and convergence checks (single-row
+  * aggregates).
   */
 object Graph {
 

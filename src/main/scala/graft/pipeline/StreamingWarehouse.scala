@@ -116,18 +116,16 @@ object StreamingWarehouse {
     val committed = persistState(
       Warehouse.loadBatch(spark, state, batch), s"$stateDir/v$next")
     pruneOldVersions(stateDir, keep = 2)
-    // release the per-batch caches loadBatch pinned — the state now
-    // reads from parquet, so nothing references them anymore
-    spark.catalog.clearCache()
-    // …and the batch's localCheckpoint blocks (the key-minting ranks'
-    // eager boundary pins — Ranking's default mode): the catalog never
+    // release the batch's localCheckpoint blocks (loadBatch's pins and
+    // the key-minting ranks' eager boundary pins): the catalog never
     // knew them, and without this they accumulate one set per
     // micro-batch until the JVM happens to GC the superseded State
     // plans — the GC-timing-dependent 3-4x degradation BASELINE.md
     // documents for Bench, whose between-runs sweep this mirrors.
     // Safe even though unpersisting a localCheckpoint is irreversible
     // (lineage is truncated): the committed state re-reads parquet,
-    // so no surviving plan references these blocks.
+    // so no surviving plan references these blocks. The sweep is scoped
+    // to RDDs this batch created — caches the caller owns stay.
     val sc = spark.sparkContext
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!persistedBefore.contains(id)) { rdd.unpersist(false); () }
@@ -221,7 +219,6 @@ object StreamingWarehouse {
       next, authors)
     pruneOldVersions(stateDir, keep = 2)
     authors.vacuum(keep = 2)
-    spark.catalog.clearCache()
     val sc = spark.sparkContext
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!persistedBefore.contains(id)) { rdd.unpersist(false); () }

@@ -185,6 +185,23 @@ class StreamingWarehouseSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"stream left persisted RDDs behind: $leaked")
   }
 
+  test("a commit leaves caches the caller owns in place") {
+    // the commit releases only what its own batch persisted; a frame the
+    // caller cached before the stream must still be cached afterwards
+    val src = Files.createTempDirectory("wh-src-own").toString
+    val selectCols = StreamingWarehouse.stagedSchema.fieldNames.map(col)
+    b1.select(selectCols: _*).coalesce(1).write.mode("append").parquet(src)
+    val mine = spark.range(100).toDF("x").cache()
+    assert(mine.count() == 100L)
+    try {
+      StreamingWarehouse.run(spark, src,
+        Files.createTempDirectory("wh-ck-own").toString,
+        Files.createTempDirectory("wh-state-own").toString)
+      assert(mine.storageLevel.useMemory,
+        "the commit dropped a cache the caller owns")
+    } finally { mine.unpersist(); () }
+  }
+
   test("ParquetUpsertTable redoes a crashed partial write (no _SUCCESS)") {
     val dir = Files.createTempDirectory("upsert").toString
     val t = new graft.streaming.ParquetUpsertTable(spark, dir, "k", Seq("v"))
