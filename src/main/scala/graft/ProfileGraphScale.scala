@@ -27,10 +27,6 @@ object ProfileGraphScale {
       val t0 = System.nanoTime(); val r = f
       println(f"[gs] $l%-16s ${(System.nanoTime() - t0) / 1e9}%7.2fs"); r
     }
-    // r9 A/B: pin cadence 1 (every round — the r8 behavior) vs 2 (unroll
-    // two rounds per pin — VERDICT r8 #2) on the three single-consumer
-    // fixed-point loops. harmonic/fastrp dropped from the sweep: their
-    // loops keep multi-consumer frames and are untouched by the knob.
     def sweep(): Unit =
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => protectedIds.contains(id) }
@@ -63,21 +59,19 @@ object ProfileGraphScale {
         }
         sweep()
       }
-      if (ops("kcore") || ops("pagerank")) for (p <- Seq(1, 2)) {
-        if (ops("kcore")) {
-          t(s"kcore x$m p$p") {
-            println("rows: " +
-              graft.operators.Graph.kCoreFixed(e, 12, pinEvery = p).count())
-          }
-          sweep()
+      if (ops("kcore")) {
+        t(s"kcore x$m") {
+          println("rows: " +
+            graft.operators.Graph.kCoreFixed(e, 12).count())
         }
-        if (ops("pagerank")) {
-          t(s"pagerank x$m p$p") {
-            println("rows: " +
-              graft.operators.Graph.pageRankFixed(e, 10, pinEvery = p).count())
-          }
-          sweep()
+        sweep()
+      }
+      if (ops("pagerank")) {
+        t(s"pagerank x$m") {
+          println("rows: " +
+            graft.operators.Graph.pageRankFixed(e, 10).count())
         }
+        sweep()
       }
     }
     spark.stop()

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Pins
 import graft.plans.Pins.PinnedOps
 
 /** Graph analytics as iterative DataFrame programs — the reference's
@@ -33,81 +34,80 @@ object Graph {
     new java.util.concurrent.ConcurrentHashMap[
       org.apache.spark.SparkContext, SparkSession]
 
-  /** Directed PageRank. Simple-uniform teleport, dangling mass dropped
-    * (matches the common simplified formulation; GDS normalizes
-    * differently — capability parity, not score-identical, per SURVEY
-    * §2.10 G1). */
-  def pageRank(edges: DataFrame, iters: Int = 20, damping: Double = 0.85): DataFrame = {
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().cache()
-    val n = nodes.count().toDouble
-    val withDeg = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .select(col("src"), col("dst"), col("deg")).cache()
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iters) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum("c").as("csum"))
-      ranks = nodes
-        .join(contribs, nodes("id") === contribs("dst"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) +
-            lit(damping) * coalesce(col("csum"), lit(0.0))).as("rank"))
-        .pinned
-    }
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks
-  }
+  private val PinEvery = 2 // see `rounds`
 
-  /** Exact fixed-point PageRank — the oracle-checkable twin of
-    * [[pageRank]] (same sim_kmeans technique: all arithmetic is
-    * order-independent BIGINT, so a DuckDB twin unrolling the same
-    * iterations is bit-identical; see [[pageRankCtesSql]]).
+  /** `iters` rounds of `step` from `init`, pinning every second round
+    * and always the last — the loop of [[rankFixed]],
+    * [[labelPropagation]] and [[kCoreFixed]]. Legal only when the round
+    * frame has ONE mid-loop consumer (the next round's join): pinning
+    * every second round then halves the eager-materialization job count
+    * without ever double-evaluating a two-consumer frame (the r8
+    * fifth-wave regression came from UNPINNING such frames, not from
+    * deeper per-pin plans; BASELINE.md "Round-9 pin-cadence A/B"
+    * measured cadence 1 vs 2). The final round always pins, so the
+    * result is a materialized leaf. */
+  private def rounds(init: DataFrame, iters: Int)(
+      step: DataFrame => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init) { (cur, t) =>
+      val next = step(cur)
+      if (t % PinEvery == 0 || t == iters) next.pinned else next
+    }
+
+  /** One rank variant's pieces: the per-edge contribution (over
+    * `rank_fp`, `deg`, edge columns), initial rank and teleport (`id`). */
+  private final case class RankTerms(contrib: Column, init: Column, teleport: Column)
+
+  private val plainContrib = "(rank_fp * 85) DIV (deg * 100)"
+
+  private def uniformTerms(n: Long, scale: Long, contrib: String): RankTerms =
+    RankTerms(expr(contrib), lit(scale / n), lit((15L * scale) / (100L * n)))
+
+  /** The fixed-point rank kernel behind [[pageRankFixed]],
+    * [[pageRankWeightedFixed]], [[personalizedPageRankFixed]] and
+    * [[articleRankFixed]]; [[rankCtesSql]] is its DuckDB twin.
     *
-    * Ranks are fixed-point BIGINTs scaled by `scale`; the per-edge
-    * contribution is the integer division `(rank_fp * 85) DIV (deg * 100)`
-    * (damping folded into the numerator) and the teleport term
-    * `(15 * scale) DIV (100 * n)`. Integer division loses at most
+    * Ranks are BIGINTs scaled by `scale`. Each round every source splits
+    * its rank over its out-edges by the variant's integer-division
+    * contribution, damping 0.85 folded into the numerator (`rank_fp * 85`
+    * over `deg * 100`), and each node's new rank is its teleport term
+    * plus the BIGINT sum of its inflow. Integer division loses at most
     * deg⁻¹·10⁻¹² of mass per edge — far below any ranking-relevant
-    * difference — and in exchange the BIGINT sum is independent of
-    * partition/summation order, unlike a double accumulation.
-    * `rank_fp * 85 ≤ 8.5e13 << 2^63`: no overflow at any graph size. */
-  def pageRankFixed(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L, pinEvery: Int = 2): DataFrame = {
+    * difference — and in exchange the sum is independent of
+    * partition/summation order, unlike a double accumulation; the twin
+    * unrolling the same rounds is therefore bit-identical (the sim_kmeans
+    * technique). Overflow: `rank_fp * 85 ≤ 8.5e13 << 2^63` at scale 1e12,
+    * at any graph size.
+    *
+    * `edges` is the projected edge frame (`src`, `dst`, plus any column
+    * the contribution reads); `degree` aggregates a source's out-edges
+    * into `deg`. `terms` sees the cached edges and nodes, so a variant
+    * runs exactly the actions it needs (a node or edge count) and no
+    * other. Rounds follow [[rounds]]: the rank frame has one mid-loop
+    * consumer. */
+  private def rankFixed(edges: DataFrame, degree: Column, iters: Int,
+      scale: Long)(terms: (DataFrame, DataFrame) => RankTerms): DataFrame = {
     // The input is a FOUR-consumer frame (both node-union branches, both
-    // sides of the degree self-join) — the r8 rule says it must not stay
+    // sides of the degree self-join; ArticleRank's edge count makes
+    // five) — the r8 rule says it must not stay
     // lazy. For cheap scan-join inputs (refEdges) this is neutral; for
     // an expensive input it is decisive: g_articlerank_capped's 147 M-row
     // projection was being re-derived ~4× inside this prelude (r13,
     // ProfileArcCapped: 38 s per derivation vs 117 s whole-query).
-    val e = edges.select(col("src"), col("dst")).cache()
+    val e = edges.cache()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().cache()
-    val n = nodes.count()
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .select(col("src"), col("dst"), col("deg")).cache()
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("rank_fp", lit(scale / n))
-    for (t <- 1 to iters) {
+    val withDeg = e.join(e.groupBy("src").agg(degree.as("deg")), "src")
+      .cache()
+    val t = terms(e, nodes)
+    val ranks = rounds(nodes.withColumn("rank_fp", t.init), iters) { r =>
       val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"),
-          expr("(rank_fp * 85) DIV (deg * 100)").as("c"))
+        .join(r, withDeg("src") === r("id"))
+        .select(col("dst"), t.contrib.as("c"))
         .groupBy("dst").agg(sum("c").as("csum"))
-      val next = nodes
+      nodes
         .join(contribs, nodes("id") === contribs("dst"), "left")
         .select(col("id"),
-          (lit(teleport) + coalesce(col("csum"), lit(0L))).as("rank_fp"))
-      // ranks has ONE mid-loop consumer (next round's join), so pinning
-      // every `pinEvery`-th round halves the eager-materialization job
-      // count without ever double-evaluating a two-consumer frame (the
-      // r8 fifth-wave regression came from UNPINNING such frames, not
-      // from deeper per-pin plans). The final round always pins.
-      ranks = if (t % pinEvery == 0 || t == iters) next.pinned else next
+          (t.teleport + coalesce(col("csum"), lit(0L))).as("rank_fp"))
     }
     e.unpersist()
     nodes.unpersist()
@@ -116,35 +116,145 @@ object Graph {
       col("rank_fp").cast("double") / lit(scale.toDouble))
   }
 
-  /** DuckDB twin of [[pageRankFixed]] over an existing CTE `edgesCte`
-    * (columns src, dst): an unrolled CTE chain, one contribs/ranks pair per
-    * iteration. Final ranks are `pr$iters(id, rank_fp)`. `//` is DuckDB's
+  /** DuckDB twin of [[rankFixed]] over an existing CTE `edgesCte`: an
+    * unrolled CTE chain, one contribs/ranks pair per round, every CTE
+    * named with prefix `p`; final ranks in `$p$iters(id, rank_fp)`. The
+    * fragments mirror the kernel's pieces: `degree` aggregates an
+    * edge group, `contrib` reads `r.rank_fp`, `d.deg` and `e.*`, `init`
+    * reads `id`, `teleport` reads `nd.id`, and any of them may read
+    * `${p}n(n)` (the node count) or an `extra` CTE. `//` is DuckDB's
     * integer division — identical to Spark's `DIV` for the non-negative
-    * operands used here. `AS MATERIALIZED` pins each round (and the shared
-    * deg/node tables, which every round references) to one evaluation —
-    * without it DuckDB may inline the chain and re-derive `edgesCte` per
-    * round. `CAST(SUM … AS BIGINT)` pins DuckDB's HUGEINT sum widening
-    * back to the BIGINT the Spark side produces. */
-  def pageRankCtesSql(edgesCte: String, iters: Int,
-      scale: Long = 1000000000000L): String = {
-    val init =
-      s"""prnodes AS MATERIALIZED (SELECT DISTINCT id FROM (
-         |  SELECT src AS id FROM $edgesCte UNION ALL SELECT dst FROM $edgesCte)),
-         |prdeg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM $edgesCte GROUP BY src),
-         |prn AS MATERIALIZED (SELECT COUNT(*) AS n FROM prnodes),
-         |pr0 AS MATERIALIZED (SELECT id, (SELECT $scale // n FROM prn) AS rank_fp FROM prnodes)""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s"""prc$t AS MATERIALIZED (SELECT e.dst AS id,
-         |    CAST(SUM((r.rank_fp * 85) // (d.deg * 100)) AS BIGINT) AS csum
-         |  FROM $edgesCte e JOIN prdeg d ON d.src = e.src
-         |       JOIN pr${t - 1} r ON r.id = e.src
+    * operands used here. `AS MATERIALIZED` pins each round (and the
+    * shared deg/node tables, which every round references) to one
+    * evaluation — without it DuckDB may inline the chain and re-derive
+    * `edgesCte` per round. `CAST(SUM … AS BIGINT)` pins DuckDB's HUGEINT
+    * sum widening back to the BIGINT the Spark side produces. */
+  private def rankCtesSql(p: String, edgesCte: String, iters: Int,
+      degree: String, contrib: String, init: String, teleport: String,
+      extra: Seq[String] = Nil): String = {
+    val prelude = Seq(
+      s"""${p}nodes AS MATERIALIZED (SELECT DISTINCT id FROM (
+         |  SELECT src AS id FROM $edgesCte UNION ALL SELECT dst FROM $edgesCte))""".stripMargin,
+      s"${p}deg AS MATERIALIZED (SELECT src, $degree AS deg FROM $edgesCte GROUP BY src)",
+      s"${p}n AS MATERIALIZED (SELECT COUNT(*) AS n FROM ${p}nodes)") ++ extra :+
+      s"${p}0 AS MATERIALIZED (SELECT id, $init AS rank_fp FROM ${p}nodes)"
+    val rs = (1 to iters).map { t =>
+      s"""${p}c$t AS MATERIALIZED (SELECT e.dst AS id,
+         |    CAST(SUM($contrib) AS BIGINT) AS csum
+         |  FROM $edgesCte e JOIN ${p}deg d ON d.src = e.src
+         |       JOIN $p${t - 1} r ON r.id = e.src
          |  GROUP BY e.dst),
-         |pr$t AS MATERIALIZED (SELECT nd.id,
-         |    (SELECT (15 * $scale) // (100 * n) FROM prn) + COALESCE(c.csum, 0) AS rank_fp
-         |  FROM prnodes nd LEFT JOIN prc$t c ON c.id = nd.id)""".stripMargin
+         |$p$t AS MATERIALIZED (SELECT nd.id,
+         |    $teleport + COALESCE(c.csum, 0) AS rank_fp
+         |  FROM ${p}nodes nd LEFT JOIN ${p}c$t c ON c.id = nd.id)""".stripMargin
     }
-    (init +: rounds).mkString(",\n")
+    (prelude ++ rs).mkString(",\n")
   }
+
+  private val plainContribSql = "(r.rank_fp * 85) // (d.deg * 100)"
+
+  /** [[rankCtesSql]] with [[uniformTerms]]' start and teleport. */
+  private def uniformCtesSql(p: String, edgesCte: String, iters: Int,
+      scale: Long, degree: String, contrib: String,
+      extra: Seq[String] = Nil): String =
+    rankCtesSql(p, edgesCte, iters, degree, contrib,
+      s"(SELECT $scale // n FROM ${p}n)",
+      s"(SELECT (15 * $scale) // (100 * n) FROM ${p}n)", extra)
+
+  /** Directed PageRank in the [[rankFixed]] fixed-point contract:
+    * simple-uniform teleport, dangling mass dropped (the common
+    * simplified formulation; GDS normalizes differently — capability
+    * parity, not score-identical, per SURVEY §2.10 G1). Contribution
+    * `(rank_fp * 85) DIV (deg * 100)`. Twin: [[pageRankCtesSql]]. */
+  def pageRankFixed(edges: DataFrame, iters: Int,
+      scale: Long = 1000000000000L): DataFrame =
+    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
+      scale) { (_, nodes) => uniformTerms(nodes.count(), scale, plainContrib) }
+
+  /** DuckDB twin of [[pageRankFixed]] over `edgesCte(src, dst)`; final
+    * ranks in `pr$iters(id, rank_fp)`. */
+  def pageRankCtesSql(edgesCte: String, iters: Int,
+      scale: Long = 1000000000000L): String =
+    uniformCtesSql("pr", edgesCte, iters, scale, "COUNT(*)", plainContribSql)
+
+  /** Weighted PageRank (GDS `relationshipWeightProperty`): each edge
+    * carries an integer weight and a source's rank splits ∝ weight —
+    * `(rank·85·w) DIV (wdeg·100)` with `wdeg = Σ out-weights`. Overflow
+    * bound rank·85·w ≤ 8.5e13·w_max, fine for weights up to ~10^5 at
+    * scale 1e12. Twin: [[pageRankWeightedCtesSql]]. */
+  def pageRankWeightedFixed(edges: DataFrame, iters: Int,
+      scale: Long = 1000000000000L): DataFrame =
+    rankFixed(edges.select(col("src"), col("dst"), col("w")),
+      sum(col("w")), iters, scale) { (_, nodes) =>
+      uniformTerms(nodes.count(), scale, "(rank_fp * 85 * w) DIV (deg * 100)")
+    }
+
+  /** DuckDB twin of [[pageRankWeightedFixed]] over `edgesCte(src, dst,
+    * w)`. Final ranks in `wpr$iters(id, rank_fp)`. */
+  def pageRankWeightedCtesSql(edgesCte: String, iters: Int,
+      scale: Long = 1000000000000L): String =
+    uniformCtesSql("wpr", edgesCte, iters, scale, "CAST(SUM(w) AS BIGINT)",
+      "(r.rank_fp * 85 * e.w) // (d.deg * 100)")
+
+  /** Personalized PageRank (GDS `sourceNodes`): the random surfer
+    * teleports only to the source set, so rank mass measures proximity
+    * to those seeds — the recommendation/expansion primitive. Init:
+    * `scale DIV |S|` on sources, 0 elsewhere; teleport term
+    * `15·scale DIV 100·|S|` added only to sources. Needs no node count.
+    * Twin [[personalizedPageRankCtesSql]]. */
+  def personalizedPageRankFixed(edges: DataFrame, sources: Seq[Long],
+      iters: Int, scale: Long = 1000000000000L): DataFrame = {
+    val nS = sources.size.toLong
+    val isSrc = col("id").isin(sources: _*)
+    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
+      scale) { (_, _) =>
+      RankTerms(expr(plainContrib),
+        when(isSrc, lit(scale / nS)).otherwise(lit(0L)),
+        when(isSrc, lit((15L * scale) / (100L * nS))).otherwise(lit(0L)))
+    }
+  }
+
+  /** DuckDB twin of [[personalizedPageRankFixed]]; final ranks in
+    * `ppr$iters(id, rank_fp)`. */
+  def personalizedPageRankCtesSql(edgesCte: String, sources: Seq[Long],
+      iters: Int, scale: Long = 1000000000000L): String = {
+    val srcList = sources.mkString(", ")
+    val nS = sources.size
+    rankCtesSql("ppr", edgesCte, iters, "COUNT(*)", plainContribSql,
+      s"CASE WHEN id IN ($srcList) THEN ${scale / nS} ELSE 0 END",
+      s"CASE WHEN nd.id IN ($srcList) THEN ${(15L * scale) / (100L * nS)} ELSE 0 END")
+  }
+
+  /** G2–G4 depth — GDS-normalized "ArticleRank": each source's
+    * contribution divides by `deg + avgDeg` instead of `deg`
+    * (ArticleRank's defining change — low-degree sources no longer hand
+    * their whole rank to a single target; GDS documents the denominator
+    * as outDegree + average outDegree). `avgDeg` is the FLOORED integer
+    * `E DIV n`: a floating average would put a double inside the
+    * otherwise order-independent BIGINT arithmetic, and multiplying
+    * through by n to keep an exact rational (`rank·85·n DIV ((deg·n +
+    * E)·100)`) overflows 2^63 once n·scale·85 does (n ≈ 10^8 at corpus
+    * scale) — the floor costs < 1 part in deg+1 of normalization accuracy
+    * and keeps the same overflow headroom as [[pageRankFixed]]. Scores
+    * are NOT meant to equal GDS's (GDS runs IEEE doubles with
+    * tolerance-based convergence); the normalization SHAPE is what this
+    * implements, oracle-checked via [[articleRankCtesSql]]. */
+  def articleRankFixed(edges: DataFrame, iters: Int,
+      scale: Long = 1000000000000L): DataFrame =
+    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
+      scale) { (e, nodes) =>
+      val n = nodes.count()
+      val avgDeg = e.count() / n // floored — see scaladoc
+      uniformTerms(n, scale, s"(rank_fp * 85) DIV ((deg + $avgDeg) * 100)")
+    }
+
+  /** DuckDB twin of [[articleRankFixed]] — [[pageRankCtesSql]] with the
+    * `deg + avgDeg` divisor; final ranks in `ar$iters(id, rank_fp)`. */
+  def articleRankCtesSql(edgesCte: String, iters: Int,
+      scale: Long = 1000000000000L): String =
+    uniformCtesSql("ar", edgesCte, iters, scale, "COUNT(*)",
+      "(r.rank_fp * 85) // ((d.deg + (SELECT avgdeg FROM aravg)) * 100)",
+      Seq(s"aravg AS MATERIALIZED (SELECT (SELECT COUNT(*) FROM $edgesCte) // n AS avgdeg FROM arn)"))
 
   /** Weighted single-source shortest paths by bounded Bellman–Ford
     * (gds.shortestPath.dijkstra's semantics for non-negative integer
@@ -188,212 +298,6 @@ object Graph {
          |  GROUP BY id)""".stripMargin
     }
     (init +: rs).mkString(",\n")
-  }
-
-  /** Weighted PageRank (GDS `relationshipWeightProperty`): identical
-    * fixed-point loop to [[pageRankFixed]], but each edge carries an
-    * integer weight and a source's rank splits ∝ weight —
-    * `(rank·85·w) DIV (wdeg·100)` with `wdeg = Σ out-weights`. All
-    * BIGINT; overflow bound rank·85·w ≤ 8.5e13·w_max, fine for weights
-    * up to ~10^5 at scale 1e12. Twin: [[pageRankWeightedCtesSql]]. */
-  def pageRankWeightedFixed(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L): DataFrame = {
-    // four-consumer input — cached like pageRankFixed's (r13)
-    val e = edges.select(col("src"), col("dst"), col("w")).cache()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val n = nodes.count()
-    val withDeg = e
-      .join(e.groupBy("src").agg(sum(col("w")).as("wdeg")), "src")
-      .select(col("src"), col("dst"), col("w"), col("wdeg")).cache()
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("rank_fp", lit(scale / n))
-    for (t <- 1 to iters) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"),
-          expr("(rank_fp * 85 * w) DIV (wdeg * 100)").as("c"))
-        .groupBy("dst").agg(sum("c").as("csum"))
-      val next = nodes
-        .join(contribs, nodes("id") === contribs("dst"), "left")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("csum"), lit(0L))).as("rank_fp"))
-      // one mid-loop consumer: pinEvery=2, the pageRankFixed unroll (r17)
-      ranks = if (t % 2 == 0 || t == iters) next.pinned else next
-    }
-    e.unpersist()
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks.withColumn("rank",
-      col("rank_fp").cast("double") / lit(scale.toDouble))
-  }
-
-  /** DuckDB twin of [[pageRankWeightedFixed]] over `edgesCte(src, dst,
-    * w)`. Final ranks in `wpr$iters(id, rank_fp)`. */
-  def pageRankWeightedCtesSql(edgesCte: String, iters: Int,
-      scale: Long = 1000000000000L): String = {
-    val init =
-      s"""wprnodes AS MATERIALIZED (SELECT DISTINCT id FROM (
-         |  SELECT src AS id FROM $edgesCte UNION ALL SELECT dst FROM $edgesCte)),
-         |wprdeg AS MATERIALIZED (SELECT src, CAST(SUM(w) AS BIGINT) AS wdeg
-         |  FROM $edgesCte GROUP BY src),
-         |wprn AS MATERIALIZED (SELECT COUNT(*) AS n FROM wprnodes),
-         |wpr0 AS MATERIALIZED (SELECT id, (SELECT $scale // n FROM wprn) AS rank_fp FROM wprnodes)""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s"""wprc$t AS MATERIALIZED (SELECT e.dst AS id,
-         |    CAST(SUM((r.rank_fp * 85 * e.w) // (d.wdeg * 100)) AS BIGINT) AS csum
-         |  FROM $edgesCte e JOIN wprdeg d ON d.src = e.src
-         |       JOIN wpr${t - 1} r ON r.id = e.src
-         |  GROUP BY e.dst),
-         |wpr$t AS MATERIALIZED (SELECT nd.id,
-         |    (SELECT (15 * $scale) // (100 * n) FROM wprn) + COALESCE(c.csum, 0) AS rank_fp
-         |  FROM wprnodes nd LEFT JOIN wprc$t c ON c.id = nd.id)""".stripMargin
-    }
-    (init +: rounds).mkString(",\n")
-  }
-
-  /** Personalized PageRank (GDS `sourceNodes`): the random surfer
-    * teleports only to the source set, so rank mass measures proximity
-    * to those seeds — the recommendation/expansion primitive. Init:
-    * `scale DIV |S|` on sources, 0 elsewhere; teleport term added only
-    * to sources. Same BIGINT arithmetic as [[pageRankFixed]]; twin
-    * [[personalizedPageRankCtesSql]]. */
-  def personalizedPageRankFixed(edges: DataFrame, sources: Seq[Long],
-      iters: Int, scale: Long = 1000000000000L): DataFrame = {
-    // four-consumer input — cached like pageRankFixed's (r13)
-    val e = edges.select(col("src"), col("dst")).cache()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .select(col("src"), col("dst"), col("deg")).cache()
-    val nS = sources.size.toLong
-    val isSrc = col("id").isin(sources: _*)
-    val teleport = (15L * scale) / (100L * nS)
-    var ranks = nodes.withColumn("rank_fp",
-      when(isSrc, lit(scale / nS)).otherwise(lit(0L)))
-    for (t <- 1 to iters) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"),
-          expr("(rank_fp * 85) DIV (deg * 100)").as("c"))
-        .groupBy("dst").agg(sum("c").as("csum"))
-      val next = nodes
-        .join(contribs, nodes("id") === contribs("dst"), "left")
-        .select(col("id"),
-          (when(isSrc, lit(teleport)).otherwise(lit(0L)) +
-            coalesce(col("csum"), lit(0L))).as("rank_fp"))
-      // one mid-loop consumer, so pinEvery=2 is legal — the same
-      // measured unroll as pageRankFixed's (r17: extended to the whole
-      // fixed-point family)
-      ranks = if (t % 2 == 0 || t == iters) next.pinned else next
-    }
-    e.unpersist()
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks.withColumn("rank",
-      col("rank_fp").cast("double") / lit(scale.toDouble))
-  }
-
-  /** DuckDB twin of [[personalizedPageRankFixed]]; final ranks in
-    * `ppr$iters(id, rank_fp)`. */
-  def personalizedPageRankCtesSql(edgesCte: String, sources: Seq[Long],
-      iters: Int, scale: Long = 1000000000000L): String = {
-    val srcList = sources.mkString(", ")
-    val nS = sources.size
-    val init =
-      s"""pprnodes AS MATERIALIZED (SELECT DISTINCT id FROM (
-         |  SELECT src AS id FROM $edgesCte UNION ALL SELECT dst FROM $edgesCte)),
-         |pprdeg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM $edgesCte GROUP BY src),
-         |ppr0 AS MATERIALIZED (SELECT id,
-         |  CASE WHEN id IN ($srcList) THEN ${scale / nS} ELSE 0 END AS rank_fp
-         |  FROM pprnodes)""".stripMargin
-    val teleport = (15L * scale) / (100L * nS)
-    val rounds = (1 to iters).map { t =>
-      s"""pprc$t AS MATERIALIZED (SELECT e.dst AS id,
-         |    CAST(SUM((r.rank_fp * 85) // (d.deg * 100)) AS BIGINT) AS csum
-         |  FROM $edgesCte e JOIN pprdeg d ON d.src = e.src
-         |       JOIN ppr${t - 1} r ON r.id = e.src
-         |  GROUP BY e.dst),
-         |ppr$t AS MATERIALIZED (SELECT nd.id,
-         |    CASE WHEN nd.id IN ($srcList) THEN $teleport ELSE 0 END
-         |      + COALESCE(c.csum, 0) AS rank_fp
-         |  FROM pprnodes nd LEFT JOIN pprc$t c ON c.id = nd.id)""".stripMargin
-    }
-    (init +: rounds).mkString(",\n")
-  }
-
-  /** G2–G4 depth — GDS-normalized "ArticleRank": identical fixed-point
-    * loop to [[pageRankFixed]], but each source's contribution divides by
-    * `deg + avgDeg` instead of `deg` (ArticleRank's defining change —
-    * low-degree sources no longer hand their whole rank to a single
-    * target; GDS documents the denominator as outDegree + average
-    * outDegree). `avgDeg` is the FLOORED integer `E DIV n`: a floating
-    * average would put a double inside the otherwise order-independent
-    * BIGINT arithmetic, and multiplying through by n to keep an exact
-    * rational (`rank·85·n DIV ((deg·n + E)·100)`) overflows 2^63 once
-    * n·scale·85 does (n ≈ 10^8 at corpus scale) — the floor costs < 1
-    * part in deg+1 of normalization accuracy and keeps the same overflow
-    * headroom as [[pageRankFixed]]. Scores are NOT meant to equal GDS's
-    * (GDS runs IEEE doubles with tolerance-based convergence); the
-    * normalization SHAPE is what this implements, oracle-checked via
-    * [[articleRankCtesSql]]. */
-  def articleRankFixed(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L): DataFrame = {
-    // FIVE-consumer input (node union ×2, degree self-join ×2, the
-    // avg-degree count) — cached like pageRankFixed's (r13)
-    val e = edges.select(col("src"), col("dst")).cache()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val n = nodes.count()
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .select(col("src"), col("dst"), col("deg")).cache()
-    val avgDeg = e.count() / n // floored — see scaladoc
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("rank_fp", lit(scale / n))
-    for (t <- 1 to iters) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst"),
-          expr(s"(rank_fp * 85) DIV ((deg + $avgDeg) * 100)").as("c"))
-        .groupBy("dst").agg(sum("c").as("csum"))
-      val next = nodes
-        .join(contribs, nodes("id") === contribs("dst"), "left")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("csum"), lit(0L))).as("rank_fp"))
-      // one mid-loop consumer: pinEvery=2, the pageRankFixed unroll (r17)
-      ranks = if (t % 2 == 0 || t == iters) next.pinned else next
-    }
-    e.unpersist()
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks.withColumn("rank",
-      col("rank_fp").cast("double") / lit(scale.toDouble))
-  }
-
-  /** DuckDB twin of [[articleRankFixed]] — [[pageRankCtesSql]] with the
-    * `deg + avgDeg` divisor; final ranks in `ar$iters(id, rank_fp)`. */
-  def articleRankCtesSql(edgesCte: String, iters: Int,
-      scale: Long = 1000000000000L): String = {
-    val init =
-      s"""arnodes AS MATERIALIZED (SELECT DISTINCT id FROM (
-         |  SELECT src AS id FROM $edgesCte UNION ALL SELECT dst FROM $edgesCte)),
-         |ardeg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM $edgesCte GROUP BY src),
-         |arn AS MATERIALIZED (SELECT COUNT(*) AS n FROM arnodes),
-         |aravg AS MATERIALIZED (SELECT (SELECT COUNT(*) FROM $edgesCte) // n AS avgdeg FROM arn),
-         |ar0 AS MATERIALIZED (SELECT id, (SELECT $scale // n FROM arn) AS rank_fp FROM arnodes)""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s"""arc$t AS MATERIALIZED (SELECT e.dst AS id,
-         |    CAST(SUM((r.rank_fp * 85) // ((d.deg + (SELECT avgdeg FROM aravg)) * 100)) AS BIGINT) AS csum
-         |  FROM $edgesCte e JOIN ardeg d ON d.src = e.src
-         |       JOIN ar${t - 1} r ON r.id = e.src
-         |  GROUP BY e.dst),
-         |ar$t AS MATERIALIZED (SELECT nd.id,
-         |    (SELECT (15 * $scale) // (100 * n) FROM arn) + COALESCE(c.csum, 0) AS rank_fp
-         |  FROM arnodes nd LEFT JOIN arc$t c ON c.id = nd.id)""".stripMargin
-    }
-    (init +: rounds).mkString(",\n")
   }
 
   /** DuckDB twin of [[kHopReach]] over `edgesCte(src, dst)` (must already
@@ -603,25 +507,31 @@ object Graph {
     * hop count. Default None = the reference's exact semantics.
     *
     * One action per hop (VERDICT r10 "What's wrong" #1 — the cap used to
-    * cost two extra count() jobs per hop): the frontier is cached and
-    * `count()` both materializes it and reports the cap/empty probe, and
-    * `reach` is never re-pinned — it stays a UNION of the per-hop
-    * materialized frames, so the anti-join scans each hop's pairs from
-    * the store they already live in and every pair is written once, in
-    * exactly one hop frame, instead of re-copied into a fresh reach pin
-    * on every later hop (O(Σ|reach_h|) → O(|reach|) materialized bytes —
-    * the difference between k·|V|² and |V|² writes at the saturation
-    * scale ProfileClosure measured). */
+    * cost two extra count() jobs per hop): the frontier is a non-eager
+    * `localCheckpoint`, a lineage-free leaf, and `count()` both writes its
+    * blocks and reports the cap/empty probe. `reach` is the union of the
+    * accepted hops' leaves, never re-pinned: the anti-join scans each
+    * hop's pairs from the store they already live in and every pair is
+    * written once, in exactly one hop frame, instead of re-copied into a
+    * fresh reach pin on every later hop (O(Σ|reach_h|) → O(|reach|)
+    * materialized bytes — the difference between k·|V|² and |V|² writes
+    * at the saturation scale ProfileClosure measured). The leaves keep
+    * each hop's plan a constant-size step over the previous hops; a hop
+    * frame that carries its derivation (a cached frame does) makes the
+    * frontier plan grow ×2.6 per hop — 3,393 nodes at hop 8, and a
+    * 12-node chain at k = 10 runs the JVM out of heap. An accepted
+    * leaf carries its counted size (`Pins.withRowCount`), so a small hop
+    * is broadcast into the next hop's join, not shuffled with the edges. */
   def kHopReach(edges: DataFrame, k: Int,
       maxPairs: Option[Long] = None): DataFrame = {
     val base = edges.select(col("src"), col("dst")).distinct()
       .pinned
     var reach = base
     var frontier = base
-    // accepted hop caches — freed after the final pin below (ADVICE r11:
-    // a returned plan that READS the caches can never release them, so a
-    // long shared session kept k hop frames in executor storage)
-    val hopCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // accepted hop frames — freed after the final pin below (ADVICE r11:
+    // a returned plan that READS the hop frames can never release them,
+    // so a long shared session kept k hop frames in executor storage)
+    val hops = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var total = if (maxPairs.isDefined) base.count() else 0L
     var hop = 2
     var done = k < 2
@@ -629,23 +539,25 @@ object Graph {
       // column-renamed join (not string aliases): self-join attribute
       // resolution is fragile across localCheckpoint'd plans
       val f = frontier.select(col("src").as("f_src"), col("dst").as("f_dst"))
-      frontier = f.join(base, col("f_dst") === col("src"))
+      val next = f.join(base, col("f_dst") === col("src"))
         .select(col("f_src").as("src"), col("dst"))
         .distinct()
         .join(reach.select(col("src").as("r_src"), col("dst").as("r_dst")),
           col("src") === col("r_src") && col("dst") === col("r_dst"),
           "left_anti")
-        .cache()
-      val fCount = frontier.count() // materializes the cache — the hop's ONE action
-      if (fCount == 0L) { frontier.unpersist(); done = true }
+      // a lineage-free leaf whose blocks the count below writes
+      val pin = next.localCheckpoint(false)
+      val fCount = pin.count() // materializes the pin — the hop's ONE action
+      if (fCount == 0L) { Pins.release(pin); done = true }
       else if (maxPairs.exists(cap => total + fCount > cap)) {
         System.err.println(s"[graft] kHopReach: stopping at hop ${hop - 1} — " +
           s"hop $hop would reach ${total + fCount} pairs > cap ${maxPairs.get}")
-        frontier.unpersist() // rejected hop — not part of the result
+        Pins.release(pin) // rejected hop — not part of the result
         done = true
       } else {
         // frontier is disjoint from reach by construction — plain union
-        hopCaches += frontier
+        hops += pin
+        frontier = Pins.withRowCount(pin, fCount)
         reach = reach.union(frontier)
         total += fCount
         hop += 1
@@ -654,15 +566,17 @@ object Graph {
     }
     // One final pin of the full reach set (still O(|reach|) materialized
     // bytes total — the loop wrote each pair once, this writes it once
-    // more), then release the per-hop caches so the operator leaves no
+    // more), then release the per-hop pins so the operator leaves no
     // executor storage behind in a shared session.
-    if (hopCaches.isEmpty) reach
+    if (hops.isEmpty) reach
     else {
       val out = reach.pinned
-      hopCaches.foreach(_.unpersist(false))
+      hops.foreach(Pins.release)
       out
     }
   }
+
+
 
   /** G5 — community detection via connected components (min-label
     * propagation to fixpoint over the undirected graph). Min is
@@ -677,28 +591,43 @@ object Graph {
     // Self-loops fold the node's OWN label into the neighborhood min, so
     // one join+groupBy per round replaces join + left-join-back — the
     // label frame is referenced exactly ONCE per round, which is what
-    // legalizes the pinEvery=2 unroll below (two-consumer frames must
+    // legalizes the two-round unroll below (two-consumer frames must
     // stay pinned — the r8 fifth-wave regression).
     val undSelf = und
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
       .select(col("src"), col("dst").as("id")).cache()
-    var labels = nodes.withColumn("component", col("id")).pinned
-    // Convergence probe (VERDICT r9 #2): labels only ever decrease, so
-    // the frame changed iff Σcomponent strictly dropped — one scan of the
-    // just-pinned checkpoint instead of the old self-join + count job.
-    // decimal(38,0) so a 100 TB id space can't overflow the sum.
+    val labels = minLabelFixpoint(undSelf, "src",
+      nodes.withColumn("component", col("id")).pinned, "component", maxIters)
+    und.unpersist()
+    undSelf.unpersist()
+    labels
+  }
+
+  /** Min-label propagation to its fixpoint, shared by
+    * [[connectedComponents]] and [[stronglyConnectedComponents]]: each
+    * round every node of `adj(id, to)` — self-loops included, so a
+    * node's own label is in its neighborhood min — hands `labels(id,
+    * label)` on to `to`, which keeps the minimum.
+    *
+    * Convergence probe (VERDICT r9 #2): labels only ever decrease, so
+    * the frame changed iff Σlabel strictly dropped — one scan of the
+    * just-pinned checkpoint instead of the old self-join + count job.
+    * decimal(38,0) so a 100 TB id space can't overflow the sum. */
+  private def minLabelFixpoint(adj: DataFrame, to: String,
+      labels0: DataFrame, label: String, maxIters: Int): DataFrame = {
     def labSum(l: DataFrame): java.math.BigDecimal = l
-      .agg(sum(col("component").cast("decimal(38,0)")).as("s"))
+      .agg(sum(col(label).cast("decimal(38,0)")).as("s"))
       .head.getDecimal(0)
-    def prop(l: DataFrame): DataFrame = undSelf
+    def prop(l: DataFrame): DataFrame = adj
       .join(l, Seq("id"))
-      .groupBy(col("src")).agg(min(col("component")).as("component"))
-      .select(col("src").as("id"), col("component"))
+      .groupBy(col(to)).agg(min(col(label)).as(label))
+      .select(col(to).as("id"), col(label))
+    var labels = labels0
     var lsum = labSum(labels)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      // two propagation rounds per pin+probe (pinEvery=2): the mid frame
+      // two propagation rounds per pin+probe (`PinEvery`): the mid frame
       // is lazy and single-consumer, so the unroll halves the job count
       // without double-evaluating anything. Propagation is monotone and
       // idempotent at the fixpoint, so probing only even rounds at worst
@@ -710,8 +639,6 @@ object Graph {
       lsum = s
       i += 2
     }
-    und.unpersist()
-    undSelf.unpersist()
     labels
   }
 
@@ -827,10 +754,10 @@ object Graph {
         .filter(col("b_src") === col("b_dst"))
         .select(col("src"), col("dst")).pinned
       // min-label propagation to fixpoint along `adj` (intra-block edges
-      // only, so labels never cross a block boundary). Same restructure
-      // as [[connectedComponents]] (VERDICT r9 #2): self-loops fold the
+      // only, so labels never cross a block boundary) through
+      // `minLabelFixpoint` (VERDICT r9 #2): self-loops fold the
       // own-label identity into one join+groupBy per round (label frame
-      // referenced ONCE → pinEvery=2 unroll is legal), and the
+      // referenced ONCE → the two-round unroll is legal), and the
       // convergence probe is a monotone Σlab comparison on the pinned
       // checkpoint instead of a self-join + count job per inner
       // iteration — inside outer-round × inner-iteration nesting where
@@ -839,25 +766,8 @@ object Graph {
         val adjSelf = adj
           .union(assign.select(col("id").as("src"), col("id").as("dst")))
           .select(col("src").as("id"), col("dst")).cache()
-        def labSum(l: DataFrame): java.math.BigDecimal = l
-          .agg(sum(col("lab").cast("decimal(38,0)")).as("s"))
-          .head.getDecimal(0)
-        def prop(l: DataFrame): DataFrame = adjSelf
-          .join(l, Seq("id"))
-          .groupBy(col("dst")).agg(min(col("lab")).as("lab"))
-          .select(col("dst").as("id"), col("lab"))
-        var labels = assign.select(col("id"), col("id").as("lab")).pinned
-        var lsum = labSum(labels)
-        var done = false
-        var i = 0
-        while (!done && i < maxIters) {
-          val next = prop(prop(labels)).pinned
-          val s = labSum(next)
-          labels = next
-          done = s.compareTo(lsum) == 0
-          lsum = s
-          i += 2
-        }
+        val labels = minLabelFixpoint(adjSelf, "dst",
+          assign.select(col("id"), col("id").as("lab")).pinned, "lab", maxIters)
         adjSelf.unpersist()
         labels
       }
@@ -1136,14 +1046,13 @@ object Graph {
     * self-vote is folded into the edge list as (id, id) self-loop rows —
     * the vote multiset (neighbor labels + own label) is unchanged, but
     * the label frame's per-round consumer count drops from two (edge
-    * join + union branch) to ONE, legalizing the pinEvery=2 unroll; and
+    * join + union branch) to ONE, legalizing the [[rounds]] cadence; and
     * the per-node argmax runs as a hash aggregate over
     * max(struct(votes, −label)) — lexicographically identical to the
     * twin's `votes DESC, label ASC` ROW_NUMBER — with map-side partial
     * combine instead of a sort window. Measured −34% median / −33% min
     * at sf0.1 quiet (BASELINE.md round-11). */
-  def labelPropagation(edges: DataFrame, iters: Int = 10,
-      pinEvery: Int = 2): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int = 10): DataFrame = {
     // pin the edge plan before the two-sided union (rationale: undirect)
     val e = edges.pinned
     val undD = e.select(col("src"), col("dst"))
@@ -1157,14 +1066,13 @@ object Graph {
     val und = undD
       .union(nodes.select(col("id").as("src"), col("id").as("dst")))
       .cache()
-    var labels = nodes.withColumn("label", col("id")).pinned
-    for (t <- 1 to iters) {
-      val next = und.join(labels, und("dst") === labels("id"))
+    val init = nodes.withColumn("label", col("id")).pinned
+    val labels = rounds(init, iters) { l =>
+      und.join(l, und("dst") === l("id"))
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("votes"))
         .groupBy(col("src"))
         .agg(max(struct(col("votes"), (-col("label")).as("nl"))).as("b"))
         .select(col("src").as("id"), (-col("b.nl")).as("label"))
-      labels = if (t % pinEvery == 0 || t == iters) next.pinned else next
     }
     und.unpersist()
     labels
@@ -1573,12 +1481,6 @@ object Graph {
     rs.mkString(",\n")
   }
 
-  /** G2–G4 — "ArticleRank"-style projected PageRank: project an
-    * entity→entity graph through a 2-hop relation (e.g. author→author via
-    * co-referenced pieces), then PageRank it. */
-  def projectedPageRank(projection: DataFrame, iters: Int = 15): DataFrame =
-    pageRank(projection, iters)
-
   /** Project an entity→entity graph through a bounded transitive closure —
     * the reference's `(E)-[:R]-(node)-[:REFERENCES*1..k]->(node)-[:R]-(E2)`
     * GDS projection (graph_queries.cyp:10,53,66). `ends(entity, node)`
@@ -1613,7 +1515,7 @@ object Graph {
     // far attachment) and every caller passes an unmaterialized
     // join+distinct (+ cap window) — unpinned, that derivation ran twice
     // per projection (the r8 two-consumer rule, missed at this seam).
-    val e = graft.plans.Pins.pin(ends)
+    val e = Pins.pin(ends)
     e.select(col("entity").as("e_src"), col("node").as("n1"))
       .join(closure, col("n1") === col("src"))
       // collapse to (entity, reachable node) BEFORE attaching the far
@@ -1704,29 +1606,26 @@ object Graph {
     * co-partitioning every round; no global window, no driver state.
     * `max(least(val, rn))` is invariant to tie order among equal values,
     * but the order is pinned (val DESC, dst) anyway. */
-  def kCoreFixed(edges: DataFrame, iters: Int,
-      pinEvery: Int = 2): DataFrame = {
+  def kCoreFixed(edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.pinned
     val und = e.select(col("src"), col("dst"))
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct().cache()
-    var vals = und.groupBy(col("src"))
+    val deg = und.groupBy(col("src"))
       .agg(count(lit(1)).as("val"))
       .select(col("src").as("id"), col("val"))
       .pinned
-    for (t <- 1 to iters) {
-      val nbr = und.join(vals, und("dst") === vals("id"))
+    // single mid-loop consumer → the `rounds` cadence
+    val vals = rounds(deg, iters) { v =>
+      val nbr = und.join(v, und("dst") === v("id"))
         .select(col("src"), col("dst"), col("val"))
       val w = Window.partitionBy(col("src"))
         .orderBy(col("val").desc, col("dst"))
-      val next = nbr.withColumn("rn", row_number().over(w).cast("long"))
+      nbr.withColumn("rn", row_number().over(w).cast("long"))
         .groupBy(col("src"))
         .agg(max(least(col("val"), col("rn"))).as("val"))
         .select(col("src").as("id"), col("val"))
-      // single mid-loop consumer → pin every `pinEvery` rounds (see
-      // pageRankFixed)
-      vals = if (t % pinEvery == 0 || t == iters) next.pinned else next
     }
     und.unpersist()
     vals.select(col("id"), col("val").as("core"))
@@ -2434,7 +2333,7 @@ object Graph {
     // corpus — unpinned, the whole co-occurrence derivation ran three
     // times (the r8 two-consumer rule, missed at this seam). One pin,
     // identical values.
-    val c = graft.plans.Pins.pin(cooc)
+    val c = Pins.pin(cooc)
     val tot = c.agg(sum(col("cnt")).cast("double").as("t"))
     val marg = c.groupBy(col("node_a").as("mid"))
       .agg(sum(col("cnt")).cast("double").as("mc"))

@@ -1,6 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftshim.Shims
 
 /** The engine's standard iterative-frame pin: eager `localCheckpoint`
@@ -26,6 +29,28 @@ object Pins {
     def pinned: DataFrame = pin(df)
   }
 
+  /** A materialized checkpoint leaf re-stated with the statistics of its
+    * known row count (Spark's own per-row size estimate for its schema),
+    * so the planner sizes it like a materialized cached frame — a small
+    * frame is broadcast into the next join instead of shuffled beside
+    * its large side. For loops that count each round's frame anyway. */
+  private[graft] def withRowCount(pin: DataFrame, rows: Long): DataFrame =
+    pin.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val stats = Statistics(EstimationUtils.getSizePerRow(lr.output) * rows,
+          Some(BigInt(rows)))
+        Shims.ofRows(pin.sparkSession, lr.copy()(
+          pin.sparkSession.asInstanceOf[classic.SparkSession], Some(stats), None))
+      case _ => pin
+    }
+
+  /** Drop a pin's checkpoint blocks (non-blocking). Only for a pin that
+    * no returned plan reads any more. */
+  private[graft] def release(pin: DataFrame): Unit =
+    pin.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 }
 // Note (round-11 negative result, BASELINE.md): disabling AQE for the
 // scope of the iterative pin loops was measured BOTH ways at sf0.1 —

@@ -14,20 +14,6 @@ class GraphSpec extends AnyFunSuite {
 
   private def edges(es: (Long, Long)*) = es.toSeq.toDF("src", "dst")
 
-  test("PageRank on a 3-cycle converges to 1/3 each") {
-    val pr = Graph.pageRank(edges(1L -> 2L, 2L -> 3L, 3L -> 1L), iters = 30)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(pr.size == 3)
-    pr.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-6))
-  }
-
-  test("PageRank ranks the hub of a star highest") {
-    // spokes 2..5 all point at 1
-    val pr = Graph.pageRank(edges(2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L), 20)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(pr(1L) > pr(2L) * 3)
-  }
-
   test("connectedComponents separates two components, min label wins") {
     val cc = Graph.connectedComponents(
       edges(1L -> 2L, 2L -> 3L, 10L -> 11L))
@@ -135,6 +121,17 @@ class GraphSpec extends AnyFunSuite {
     val r = Graph.kHopReach(edges(1L -> 2L, 2L -> 3L, 3L -> 4L), 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(r == Set((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (2L, 4L)))
+    // 32-node chain at k = 31: the full closure, one new pair per source
+    // per hop — 31 hops whose plans must not compound across hops
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val long = Graph.kHopReach(edges((1L to 31L).map(i => i -> (i + 1)): _*), 31)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(long.size == 496)
+    assert(long == (for (i <- 1L to 32L; j <- i + 1 to 32L) yield (i, j)).toSet)
+    // the 30 hop pins are released at the end of the call; only the base
+    // edge pin and the result pin stay
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.size <= 2, s"hop storage left behind: ${left.size} RDDs")
   }
 
   test("kHopReach maxPairs cap stops expansion loudly, keeps completed hops") {

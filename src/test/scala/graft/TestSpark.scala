@@ -9,33 +9,24 @@ object TestSpark {
   /** Exact count of Spark jobs started while `f` runs (listener bus
     * drained before and after — no sleeps). Suites run sequentially in
     * the forked test JVM, so the counter can't see other suites' jobs. */
-  def jobsDuring(f: => Unit): Int = {
+  def jobsDuring(f: => Unit): Int = jobsAndShuffleStagesDuring(f)._1
+
+  /** ONE listener over ONE run of `f`: (jobs started, as in
+    * [[jobsDuring]]; SHUFFLE-MAP stages executed). A stage counts when
+    * it ran at least one ShuffleMapTask. Counting tasks — not stage
+    * submissions — makes the metric AQE-proof: an AQE-materialized
+    * exchange runs as a map-stage JOB (submitMapStage, no result stage),
+    * and skipped/reused exchanges run no tasks at all. The
+    * materialized-exchange metric PlanGuardSpec's loop budgets pin. */
+  def jobsAndShuffleStagesDuring(f: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
+        jobs.incrementAndGet(); ()
       }
-    }
-    org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark)
-    sc.addSparkListener(l)
-    try { f; org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark) }
-    finally sc.removeSparkListener(l)
-    n.get()
-  }
-
-  /** Count of SHUFFLE-MAP stages EXECUTED while `f` runs: distinct
-    * stage ids that ran at least one ShuffleMapTask. Counting tasks —
-    * not stage submissions — makes the metric AQE-proof: an
-    * AQE-materialized exchange runs as a map-stage JOB (submitMapStage,
-    * no result stage), and skipped/reused exchanges run no tasks at
-    * all. The materialized-exchange metric PlanGuardSpec's loop
-    * budgets pin. */
-  def shuffleStagesDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val l = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         if (t.taskType == "ShuffleMapTask") { stages.add(t.stageId) }; ()
@@ -45,6 +36,6 @@ object TestSpark {
     sc.addSparkListener(l)
     try { f; org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark) }
     finally sc.removeSparkListener(l)
-    stages.size()
+    (jobs.get(), stages.size())
   }
 }
