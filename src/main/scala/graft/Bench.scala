@@ -230,9 +230,9 @@ object Bench {
     // cap (Graph.capAttachment — the knob that actually bounds the
     // ~147 M-edge projection at sf0.1, where the closure cap already
     // binds after hop 1). g_articlerank_capped itself remains fully
-    // oracle-checked at sf0.01 in Verify and spot-profiled in
-    // ProfileArcCapped — its sf0.1 single-run cost is recorded in
-    // BASELINE.md (r15 definitive: 89.4 s), not re-measured per round.
+    // oracle-checked at sf0.01 in Verify; its sf0.1 stage breakdown
+    // (BASELINE.md "Round-13 measurements") and single-run cost (r15
+    // definitive: 89.4 s) are recorded there, not re-measured per round.
     "g_articlerank_tightcap",
     // r13: deterministic priority sampling — the mergeable weighted
     // sample completing the sketch family

@@ -50,6 +50,9 @@ object Tables {
     * payload. */
   def fanned(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
+    // The `rdd.getNumPartitions` probe plans `df` in full on the driver,
+    // afresh on every call. Keep it outside loops: inside an iterative
+    // operator it would re-plan a frame that grows every round.
     if (df.rdd.getNumPartitions * 2 >= target) df
     else df.repartition(target, key)
   }

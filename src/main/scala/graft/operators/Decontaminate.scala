@@ -36,8 +36,9 @@ object Decontaminate {
       n: Int): DataFrame = {
     // Native one-pass distinct gram hashing ([[graft.plans.GramHashes]]):
     // spec-proven set-equal to the HOF chain
-    // `shingles(lt, n) → md5Hash54`, ~4× cheaper at sf0.1 (ProfilePipe:
-    // the gram pass dominated the whole composed pipeline before this).
+    // `shingles(lt, n) → md5Hash54`, ~4× cheaper at sf0.1 (BASELINE.md
+    // "Round-8 fourth wave": the gram pass dominated the whole composed
+    // pipeline before this).
     def gramHashes(df: DataFrame, id: Column, text: Column,
         idName: String): DataFrame =
       df.select(id.as(idName),

@@ -208,7 +208,8 @@ object Dedup {
     * Jaccard candidates (the shared boilerplate grams land in prefixes
     * at random), df-ordered prefixes leave 454 k (boilerplate ranks
     * LAST in every doc, so prefixes hold only rare grams and the probe
-    * volume Σ df_prefix·df collapses). Measured in ProfileR18Dedup.
+    * volume Σ df_prefix·df collapses). Measured at sf0.1: BASELINE.md
+    * "Prefix-filtered exact dedup".
     *
     * Intersections are order-independent sets, so verification on the
     * df-ordered arrays is exact. Docs shorter than one window (NULL

@@ -91,8 +91,9 @@ object Graph {
     // five) — the r8 rule says it must not stay
     // lazy. For cheap scan-join inputs (refEdges) this is neutral; for
     // an expensive input it is decisive: g_articlerank_capped's 147 M-row
-    // projection was being re-derived ~4× inside this prelude (r13,
-    // ProfileArcCapped: 38 s per derivation vs 117 s whole-query).
+    // projection was being re-derived ~4× inside this prelude (r13:
+    // 38 s per derivation vs 117 s whole-query, BASELINE.md
+    // "Round-13 measurements").
     val e = edges.cache()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().cache()
@@ -515,7 +516,8 @@ object Graph {
     * written once, in exactly one hop frame, instead of re-copied into a
     * fresh reach pin on every later hop (O(Σ|reach_h|) → O(|reach|)
     * materialized bytes — the difference between k·|V|² and |V|² writes
-    * at the saturation scale ProfileClosure measured). The leaves keep
+    * at the saturation scale of BASELINE.md "Round-10 closure-family
+    * measurement"). The leaves keep
     * each hop's plan a constant-size step over the previous hops; a hop
     * frame that carries its derivation (a cached frame does) makes the
     * frontier plan grow ×2.6 per hop — 3,393 nodes at hop 8, and a
@@ -1481,15 +1483,6 @@ object Graph {
     rs.mkString(",\n")
   }
 
-  /** Project an entity→entity graph through a bounded transitive closure —
-    * the reference's `(E)-[:R]-(node)-[:REFERENCES*1..k]->(node)-[:R]-(E2)`
-    * GDS projection (graph_queries.cyp:10,53,66). `ends(entity, node)`
-    * attaches entities to graph nodes; `closure(src, dst)` is a 1..k-hop
-    * reachability table (from [[kHopReach]]). Self-edges are kept, as in
-    * the Cypher pattern (an author citing their own earlier piece projects
-    * a→a). Both joins shuffle on node id — the closure is never
-    * collected or broadcast, so the projection scales with the closure's
-    * own cardinality. */
   /** Attachment-degree hub cap for [[projectViaClosure]] — the G7
     * `maxDegree` idea applied to the `ends(entity, node)` relation: per
     * node keep only the `maxPerNode` SMALLEST entity ids (deterministic,
@@ -1510,12 +1503,26 @@ object Graph {
       .filter(col("_rn") <= maxPerNode)
       .drop("_rn")
 
-  def projectViaClosure(ends: DataFrame, closure: DataFrame): DataFrame = {
+  /** Project an entity→entity graph through a bounded transitive closure —
+    * the reference's `(E)-[:R]-(node)-[:REFERENCES*1..k]->(node)-[:R]-(E2)`
+    * GDS projection (graph_queries.cyp:10,53,66). `ends(entity, node)`
+    * attaches entities to graph nodes; `closure(src, dst)` is a 1..k-hop
+    * reachability table (from [[kHopReach]]). Self-edges are kept, as in
+    * the Cypher pattern (an author citing their own earlier piece projects
+    * a→a). Both joins shuffle on node id — the closure is never
+    * collected or broadcast, so the projection scales with the closure's
+    * own cardinality. */
+  def projectViaClosure(ends: DataFrame, closure: DataFrame): DataFrame =
     // r17: `ends` feeds BOTH sides of the projection (near attachment +
-    // far attachment) and every caller passes an unmaterialized
-    // join+distinct (+ cap window) — unpinned, that derivation ran twice
-    // per projection (the r8 two-consumer rule, missed at this seam).
-    val e = Pins.pin(ends)
+    // far attachment) and callers pass an unmaterialized join+distinct
+    // (+ cap window) — unpinned, that derivation ran twice per
+    // projection (the r8 two-consumer rule, missed at this seam).
+    projectPinned(Pins.pin(ends), closure)
+
+  /** [[projectViaClosure]] over `ends` the caller has already pinned
+    * (say, on a [[graft.plans.Par]] leg beside the closure), so they are
+    * not checkpointed a second time. */
+  private[graft] def projectPinned(e: DataFrame, closure: DataFrame): DataFrame =
     e.select(col("entity").as("e_src"), col("node").as("n1"))
       .join(closure, col("n1") === col("src"))
       // collapse to (entity, reachable node) BEFORE attaching the far
@@ -1528,7 +1535,6 @@ object Graph {
         col("dst") === col("n2"))
       .select(col("e_src").as("src"), col("e_dst").as("dst"))
       .distinct()
-  }
 
   // ---- triangle counting ----------------------------------------------
 
@@ -1744,8 +1750,9 @@ object Graph {
   }
 
   /** [[hitsFixed]] without the cloned-session AQE-off wrap — the loop
-    * planned under the caller's own session conf. Profiling seam only
-    * (ProfileR12AB's "on" arm must not pick up the internal wrap). */
+    * planned under the caller's own session conf. GraphSpec's
+    * bit-identity reference: the wrapped and unwrapped loops must return
+    * the same scores. */
   private[graft] def hitsFixedNoWrap(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame = {
     val (auths, hubs) = hitsFixedLoop(edges, iters, scale)

@@ -31,7 +31,8 @@ object TextAnalysis {
   // `toks(text)` per output column looks equivalent but is not — Catalyst's
   // subexpression elimination refuses any tree containing a lambda variable
   // (HOFs are CodegenFallback), so each output column re-runs
-  // split+filter interpreted. Profiled at sf0.1 (ProfileLangId): the
+  // split+filter interpreted. Profiled at sf0.1 (BASELINE.md "Round-7
+  // attribution: `txt_langid`"): the
   // inlined four-marker projection swung 1.2–9.0s across JVM sessions
   // (interpreted-eval call sites degrade unpredictably with session
   // history — the root cause of txt_langid's unreproducible 3.6× bench
@@ -293,7 +294,7 @@ object TextAnalysis {
   def langId(df: DataFrame, id: Column, text: Column): DataFrame = {
     // Tokenize once (rationale at tokenStats): the four marker counts read
     // the materialized array; inlining `toks(text)` 4× profiled 5–35×
-    // slower and session-unstable (ProfileLangId, BASELINE.md round 7).
+    // slower and session-unstable (BASELINE.md "Round-7 attribution").
     val scored = df
       .select(id.as("doc_id"), text.as("text_m"), toks(text).as("t"))
       .select(

@@ -164,6 +164,9 @@ object Warehouse {
     * `authors_merged` array<struct<family,given,affiliation,gender,
     * full_name>>. Loads the batch into the warehouse: all dims upserted,
     * fact + bridges appended idempotently, metrics updated incrementally.
+    * A paper id enters the fact once: an id already committed is skipped,
+    * and of a batch's rows sharing a new id the one with the greatest
+    * `latest_version` is kept, ties broken by the greatest whole row.
     *
     * Every frame a batch derives is batch-scale and pinned
     * ([[graft.plans.Pins.pin]], an eager `localCheckpoint`): the staged
@@ -218,21 +221,24 @@ object Warehouse {
       authorsExpl.select(col("full_name")), Seq("full_name")))
     val freshAffiliation = pin(freshNaturalKeys(state.dimAffiliation,
       authorsExpl.select(col("affiliation_name")), Seq("affiliation_name")))
+    // one row per id, like the reference's `ON CONFLICT DO NOTHING` on
+    // the fact's key, chosen by the scaladoc's rule — the same row
+    // whatever order the batch arrives in
+    val rest = batch.columns.filterNot(Set("id", "latest_version"))
     val newPapers = pin(batch.join(state.fact.select(col("arxiv_ID")),
-      batch("id") === col("arxiv_ID"), "left_anti"))
+        batch("id") === col("arxiv_ID"), "left_anti")
+      .groupBy(col("id"))
+      .agg(max(struct(("latest_version" +: rest).toIndexedSeq.map(col): _*)).as("_p"))
+      .select(batch.columns.toIndexedSeq.map(c =>
+        if (c == "id") col("id") else col("_p").getField(c).as(c)): _*))
     val counts: Map[String, Long] = Seq(
       ("domain", freshDomain, count(lit(1))),
       ("type", freshType, count(lit(1))),
       ("venue", freshVenue, count(lit(1))),
       ("author", freshAuthor, count(lit(1))),
       ("affiliation", freshAffiliation, count(lit(1))),
-      // group keys are minted by a dense rank over DISTINCT ids
-      // (withGroups below), so the group advance counts distinct ids —
-      // a batch carrying duplicate ids must not overshoot the carried
-      // high-water mark. The dim entries count fresh natural keys that
-      // freshNaturalKeys already made distinct.
-      ("group", newPapers, countDistinct(col("id"))),
-      ("papers", newPapers, count(lit(1))))
+      // one group key per new paper (newPapers is one row per id)
+      ("group", newPapers, count(lit(1))))
       .map { case (n, df, m) =>
         df.agg(m.as("m")).select(lit(n).as("k"), col("m"))
       }
@@ -275,7 +281,7 @@ object Warehouse {
     val mintedAuthors = freshAuthor.select(col("full_name"))
     val keyMaxes = Some(maxes.map { case (k, v) => k -> (v + counts(k)) })
 
-    if (counts("papers") == 0)
+    if (counts("group") == 0)
       // a replay: only dims can change (a replayed paper may carry a new
       // author or affiliation); fact, bridges and metrics stand
       return State(state.dimYear, dimDomain, dimType, dimVenue, dimAuthor,

@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * → md5Hash54`) pays the interpreted-HOF tax documented on
   * [[MinHashSignature]] — per window: substring materialization, md5 →
   * 32-char hex string, substring, base-16 `conv` — and additionally
-  * `array_distinct` compares full gram STRINGS. Stage-profiled via the
-  * pipeline breakdown (`ProfilePipe`): the decontamination gram pass was
+  * `array_distinct` compares full gram STRINGS. Stage-profiled in the
+  * pipeline breakdown (BASELINE.md "Round-8 fourth wave"): the
+  * decontamination gram pass was
   * 5.4–5.8 s at sf0.1 while the same hash volume through the native
   * MinHash expression costs ~1.4 s.
   *

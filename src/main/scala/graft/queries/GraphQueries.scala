@@ -26,10 +26,6 @@ import graft.operators.Graph
 object GraphQueries extends QueryModule {
 
   /** REFERENCES edges: part→part via consecutive line numbers. */
-  /** Dev-tool access to the REFERENCES edge derivation (ProfileLouvain2Sf). */
-  private[graft] def refEdgesPublic(s: SparkSession, dir: String): DataFrame =
-    refEdges(s, dir)
-
   private def refEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
@@ -615,14 +611,13 @@ object GraphQueries extends QueryModule {
     "g_articlerank_tightcap" -> ((s, dir) => {
       // r17 (guide §2.6): the capped-closure BFS loop and the capped
       // attachment build are independent until the projection joins
-      // them — overlap the closure's hop rounds with the ends pin
-      // (projectViaClosure re-pins the already-materialized ends; that
-      // re-checkpoint is one cheap scan of ≤ |nodes|·cap rows).
+      // them — overlap the closure's hop rounds with the ends pin, the
+      // only pin of the ends (projectPinned does not re-checkpoint them).
       val (closure, ends) = graft.plans.Par.both(
         Graph.kHopReach(refEdges(s, dir), 10, maxPairs = Some(KHopCap)),
         graft.plans.Pins.pin(
           Graph.capAttachment(authorship(s, dir), ArcAttachCap)))
-      val proj = Graph.projectViaClosure(ends, closure)
+      val proj = Graph.projectPinned(ends, closure)
       named(Graph.pageRankFixed(proj, iters = 10),
           Tables.customer(s, dir), "c_custkey", "c_name")
         .select(col("id"), col("name"), col("rank_fp"), col("rank"))

@@ -352,10 +352,10 @@ class GraphSpec extends AnyFunSuite {
 
   test("capped jaccard construction is lazy; excluded hubs observable") {
     val es = edges(1L -> 10L, 1L -> 11L, 2L -> 10L, 2L -> 11L, 3L -> 10L)
-    val n = TestSpark.jobsDuring {
+    val n = obs.QueryProfile.during(spark) {
       Graph.jaccardSimilarity(es, 0.0, maxDegree = Some(1L))
         .queryExecution.executedPlan
-    }
+    }.jobs
     assert(n == 0, s"capped jaccard construction launched $n job(s)")
     val hubs = Graph.jaccardExcludedHubs(es, 1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

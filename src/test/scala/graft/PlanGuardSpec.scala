@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.QueryProfile
 
 /** Plan-shape regression guards: the scale claims in SURVEY/COVERAGE —
   * filters reach the parquet scan, projections prune the read schema, no
@@ -228,13 +231,13 @@ class PlanGuardSpec extends AnyFunSuite {
   // Job budgets beside the shuffle budgets: an extra action on a cached
   // frame (say, a rank kernel that starts counting nodes for the
   // personalized variant) executes no new shuffle, so only the job count
-  // sees it. Measured 71/53/51/99/48/43 at sf0.001, counted by the same
+  // sees it. Measured 71/53/51/94/48/43 at sf0.001, counted by the same
   // listener in the same run as the stages; same +2 convention.
   private val jobBudgets: Map[String, Int] = Map(
     "g_pagerank_parts" -> 73,
     "g_pagerank_weighted" -> 55,
     "g_ppr_sample" -> 53,
-    "g_articlerank_tightcap" -> 101,
+    "g_articlerank_tightcap" -> 96,
     "g_lpa_communities" -> 50,
     "g_kcore" -> 45)
 
@@ -244,12 +247,21 @@ class PlanGuardSpec extends AnyFunSuite {
         s"(running ${spark.version}) — re-measure at sf0.001 and " +
         "re-baseline the map above")
     val got = shuffleBudgets.keys.toSeq.sorted.map { name =>
-      val (jobs, n) = TestSpark.jobsAndShuffleStagesDuring {
+      val p = QueryProfile.during(spark) {
         SparkEntry.queries(name)(spark, sf)
           .write.mode("overwrite").format("noop").save()
       }
+      val (n, jobs) = (p.shuffleStages, p.jobs)
       info(s"$name: $n shuffle stages (budget ${shuffleBudgets(name)}), " +
         s"$jobs jobs" + jobBudgets.get(name).fold("")(b => s" (budget $b)"))
+      // the counters of the same window agree with each other: every
+      // executed shuffle stage ran a task, and shuffle bytes were written
+      // and read exactly when a shuffle stage ran. (Read bytes may exceed
+      // written ones: a range-partitioned sort samples its shuffled input
+      // in a job of its own, then reads it again.)
+      assert(p.tasks >= n, s"$name: ${p.tasks} tasks < $n shuffle stages")
+      assert((p.shuffleWriteBytes > 0) == (n > 0) &&
+        (p.shuffleReadBytes > 0) == (n > 0), s"$name: $p")
       (name, n, jobs)
     }
     val over = got.collect { case (q, n, _) if n > shuffleBudgets(q) =>
@@ -258,6 +270,24 @@ class PlanGuardSpec extends AnyFunSuite {
     val overJobs = got.collect { case (q, _, j) if jobBudgets.get(q).exists(j > _) =>
       s"$q=$j>(${jobBudgets(q)})" }
     assert(overJobs.isEmpty, s"job budgets exceeded: ${overJobs.mkString(", ")}")
+  }
+
+  test("query profile: one grouped aggregation has the known shape") {
+    // a job finished just before the window must not leak into it
+    spark.range(0, 100).count()
+    val p = QueryProfile.during(spark) {
+      spark.range(0, 10000, 1, 4).groupBy(col("id") % 10).count()
+        .write.mode("overwrite").format("noop").save()
+    }
+    assert(p.shuffleStages == 1, p)
+    // AQE runs the exchange as its own map-stage job: the 4 range
+    // partitions are its 4 map tasks
+    val mapJobs = p.perJob.filter(_.shuffleWriteBytes > 0)
+    assert(mapJobs.map(_.tasks) == Seq(4), p)
+    // the one shuffle is read once, whole
+    assert(p.shuffleWriteBytes > 0 && p.shuffleReadBytes == p.shuffleWriteBytes, p)
+    // the map-stage job and the write — not the count before the window
+    assert(p.jobs == 2, p)
   }
 
   test("decon_semantic broadcasts the quarantine side only") {
@@ -347,9 +377,9 @@ class PlanGuardSpec extends AnyFunSuite {
     whNext.select(pipeline.StreamingWarehouse.stagedSchema.fieldNames
         .map(org.apache.spark.sql.functions.col): _*)
       .coalesce(1).write.mode("append").parquet(src)
-    val jobs = TestSpark.jobsDuring {
+    val jobs = QueryProfile.during(spark) {
       pipeline.StreamingWarehouse.run(spark, src, ck, stateDir); ()
-    }
+    }.jobs
     info(s"one incremental commit: $jobs jobs (budget $commitJobBudget)")
     assert(jobs <= commitJobBudget,
       s"commit ran $jobs jobs > budget $commitJobBudget")

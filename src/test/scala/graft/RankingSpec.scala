@@ -118,7 +118,7 @@ class RankingSpec extends AnyFunSuite {
     assert(unpartitioned.findFirstIn(planOf(df)).isDefined)
   }
 
-  import TestSpark.jobsDuring
+  private def jobsDuring(f: => Unit): Int = obs.QueryProfile.during(spark)(f).jobs
 
   test("columns named like rewrite temporaries are gated, results correct") {
     // _vn and _prior are RANK()'s pass-1 temporaries (Ranking.scala) — a

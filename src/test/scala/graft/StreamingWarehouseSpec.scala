@@ -139,11 +139,11 @@ class StreamingWarehouseSpec extends AnyFunSuite {
     // keyMaxesOf inside getOrElse). Comparing full loadBatch job counts
     // is NOT a valid assertion: AQE + cache warmth legitimately shift
     // totals between otherwise-identical calls.
-    val jBootstrap = TestSpark.jobsDuring { Warehouse.keyMaxesOf(s1); () }
+    val jBootstrap = obs.QueryProfile.during(spark) { Warehouse.keyMaxesOf(s1); () }.jobs
     assert(jBootstrap >= 1, "bootstrap should cost at least one job")
-    val jCarried = TestSpark.jobsDuring {
+    val jCarried = obs.QueryProfile.during(spark) {
       s1.keyMaxes.getOrElse(Warehouse.keyMaxesOf(s1)); ()
-    }
+    }.jobs
     assert(jCarried == 0, s"carried-maxes resolution ran $jCarried job(s)")
     // replaying an already-loaded batch mints nothing: maxes unchanged
     val replay = Warehouse.loadBatch(spark, s1, b1)

@@ -108,6 +108,20 @@ class WarehouseInvariantSpec extends AnyFunSuite {
 
     // carried high-water marks match a bootstrap from the tables
     assert(s.keyMaxes.contains(Warehouse.keyMaxesOf(s)))
+
+    // one fact row per paper: batch 1 stages i4 twice
+    assert(s.fact.count() == s.fact.select("arxiv_ID").distinct().count(),
+      "a duplicate id inside one batch inserted two fact rows")
+    // hand-computed, not recomputed from the (possibly doubled) fact:
+    // Dee has one paper (5 cites); Ada has i1, i6, i4, i2 (9, 7, 5, 3)
+    def hg(name: String): (Int, Int) = {
+      val r = s.dimAuthor.filter(col("full_name") === name)
+        .select("h_index", "g_index").collect()
+      assert(r.length == 1, s"$name: ${r.length} dim rows")
+      (r.head.getAs[Number](0).intValue, r.head.getAs[Number](1).intValue)
+    }
+    assert(hg("D Dee") == ((1, 1)))
+    assert(hg("A Ada") == ((3, 4)))
   }
 
   private lazy val full = load(StreamingWarehouse.run(spark, _, _, _))
