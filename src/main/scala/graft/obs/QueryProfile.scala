@@ -10,10 +10,12 @@ import org.apache.spark.sql.graftshim.Shims
 
 /** One Spark job seen inside a [[QueryProfile]] window: its call site,
   * wall time start → end, tasks run and shuffle bytes written. The call
-  * site is the job's SQL execution's (e.g. `localCheckpoint at
-  * Pins.scala:25`), since AQE submits its stage jobs from pool threads
-  * whose own call site names no engine code; a job outside any SQL
-  * execution keeps its final stage's name. */
+  * site is the one the submitting thread set (`callSite.short`: a
+  * stream's query thread sets its `start` site, [[graft.plans.Pins.pin]]
+  * the pinning operator's), else its SQL execution's (e.g. a recovery's
+  * `parquet at StreamingWarehouse.scala:<line>`), since AQE submits its
+  * stage jobs from pool threads whose own call site names no engine
+  * code; a job outside any SQL execution keeps its final stage's name. */
 final case class JobProfile(id: Int, callSite: String, wallMs: Long,
     tasks: Int, shuffleWriteBytes: Long)
 
@@ -67,10 +69,10 @@ object QueryProfile {
       case _ =>
     }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val execution = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-      val site = execution.flatMap(executionSite.get).getOrElse(
-        e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+      def property(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = property("callSite.short")
+        .orElse(property("spark.sql.execution.id").flatMap(executionSite.get))
+        .getOrElse(e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       jobs(e.jobId) = new Job(site, e.time)
       // a shared stage runs for the latest job that lists it
       e.stageIds.foreach(stageJob(_) = e.jobId)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 
+import graft.plans.Pins
+
 /** Scale-safe global ranking (SURVEY §7 risk 2).
   *
   * `DENSE_RANK() OVER (ORDER BY v)` with no PARTITION BY — the reference's
@@ -17,14 +19,16 @@ import org.apache.spark.sql.graftshim.Shims
   * the DISTINCT values of the ordering column, so
   *  1. distinct values are range-partitioned and ranked LOCALLY per
   *     partition (row_number within spark_partition_id);
-  *  2. per-partition counts — `parts` rows, not data — turn into running
-  *     offsets via a triangular self-join (no unpartitioned window
-  *     anywhere, so nothing ever sits in a single partition);
+  *  2. per-partition counts — one row per range partition, not data —
+  *     turn into running offsets via a triangular self-join (no
+  *     unpartitioned window anywhere, so nothing ever sits in a single
+  *     partition);
   *  3. value→rank maps back onto the fact rows with a plain join that AQE
   *     broadcasts while the distinct-value set is small.
   * Output is bit-identical to the single-partition window; only the
   * physical plan changes. Range boundaries come from sampling, but ranks
-  * are boundary-independent, so the result is deterministic.
+  * are boundary-independent, so the result is deterministic. The range
+  * partition count is the session's `spark.sql.shuffle.partitions`.
   */
 object Ranking {
 
@@ -48,10 +52,11 @@ object Ranking {
     *    listener event, including every AQE stage update) re-serializes an
     *    `InMemoryTableScanExec`'s ENTIRE cachedPlan at each occurrence, so
     *    a lazily-persisted rank spliced several times into a larger plan
-    *    (the Warehouse load nests five dims + group keys per batch)
-    *    re-expands multiplicatively — measured as minutes of listener-side
-    *    `nodeName` regex work per micro-batch when round 6 briefly made
-    *    this path lazy.
+    *    (the Warehouse load reads its one key-minting rank from every
+    *    minted dim, the group keys, the fact and both bridges)
+    *    re-expands multiplicatively — measured as minutes of
+    *    listener-side `nodeName` regex work per micro-batch when round 6
+    *    briefly made this path lazy (then one rank per minted dim).
     *  - `jobFreePlanning = true`: lazy `persist()` — NOTHING runs at
     *    construction, which is the contract [[graft.plans.GlobalRankRewrite]]
     *    needs (an optimizer rule must not launch jobs from inside
@@ -64,13 +69,13 @@ object Ranking {
       val p = df.persist()
       RankPins.register(p)
       p
-    } else df.localCheckpoint(true)
+    } else Pins.atCaller(df)(df.localCheckpoint(true))
 
   /** Global dense rank of `df` by `valueCol` (descending by default),
     * appended as `rankName`. `valueCol` must be non-null. */
   def globalDenseRank(df: DataFrame, valueCol: String, rankName: String,
-      ascending: Boolean = false, parts: Int = 32): DataFrame =
-    globalDenseRankCols(df, Seq(valueCol), rankName, ascending, parts)
+      ascending: Boolean = false): DataFrame =
+    globalDenseRankCols(df, Seq(valueCol), rankName, ascending)
 
   /** Multi-column form; ranks the distinct `valueCols` combinations.
     * When the combinations are UNIQUE per row (e.g. natural keys being
@@ -79,8 +84,7 @@ object Ranking {
     * rank like SQL's DENSE_RANK (default null ordering); the rank joins
     * back null-safely so null-valued rows are never dropped. */
   def globalDenseRankCols(df: DataFrame, valueCols: Seq[String], rankName: String,
-      ascending: Boolean = false, parts: Int = 32,
-      jobFreePlanning: Boolean = false): DataFrame = {
+      ascending: Boolean = false, jobFreePlanning: Boolean = false): DataFrame = {
     def sortCols = valueCols.map(c => if (ascending) col(c).asc else col(c).desc)
     // Pass 1: local dense rank per range partition. _pid is materialized
     // BEFORE the window's exchange; AQE may coalesce range partitions but
@@ -90,14 +94,14 @@ object Ranking {
     // and valueRank) — see its scaladoc for the two modes. The pinned
     // frame is the distinct value set — small.
     val local = pin(df.select(valueCols.map(col): _*).distinct()
-      .repartitionByRange(parts, sortCols: _*)
+      .repartitionByRange(parts(df), sortCols: _*)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lr",
         row_number().over(Window.partitionBy(col("_pid")).orderBy(sortCols: _*))),
       jobFreePlanning)
     // Pass 2: rank offset per partition = distinct values in earlier
-    // partitions. Triangular join over `parts` single-row groups — O(parts²)
-    // tiny rows, fully parallel, no global window.
+    // partitions. Triangular join over one single-row group per partition
+    // — O(partitions²) tiny rows, fully parallel, no global window.
     val counts = local.groupBy(col("_pid")).agg(count(lit(1)).as("_n"))
     val offsets = counts.select(col("_pid"), col("_n"))
       .join(counts.select(col("_pid").as("_q"), col("_n").as("_qn")),
@@ -119,12 +123,11 @@ object Ranking {
     * COUNT: the within-partition prior is a running sum of counts, and the
     * partition offset is the total row count of earlier partitions. */
   def globalRankCols(df: DataFrame, valueCols: Seq[String], rankName: String,
-      ascending: Boolean = false, parts: Int = 32,
-      jobFreePlanning: Boolean = false): DataFrame = {
+      ascending: Boolean = false, jobFreePlanning: Boolean = false): DataFrame = {
     def sortCols = valueCols.map(c => if (ascending) col(c).asc else col(c).desc)
     val local = pin(df.groupBy(valueCols.map(col): _*)
       .agg(count(lit(1)).as("_vn"))
-      .repartitionByRange(parts, sortCols: _*)
+      .repartitionByRange(parts(df), sortCols: _*)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_prior", coalesce(
         sum(col("_vn")).over(Window.partitionBy(col("_pid"))
@@ -142,6 +145,9 @@ object Ranking {
         (col("_prior") + col("_off") + lit(1L)).cast("int").as(rankName): _*)
     joinBack(df, valueRank, valueCols, rankName)
   }
+
+  private def parts(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Null-safe value→rank join-back preserving the input's column order. */
   private def joinBack(df: DataFrame, valueRank: DataFrame,

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  - **File pruning**: rows hash into `nBuckets` buckets; a MERGE
   *    rewrites ONLY the buckets its update keys land in. A batch
   *    touching 0.1% of authors rewrites ~min(nBuckets, |touched|)
-  *    buckets, not the table — the full-snapshot-per-batch cost of
-  *    `persistState` is gone.
+  *    buckets, not the table — `dim_author`'s full snapshot per batch
+  *    under `persistState` is gone (the other eight state tables are
+  *    still snapshotted whole).
   *  - **Atomic commit + snapshot isolation**: data files land under
   *    `v=<version>/_b=<bucket>/`, then a commit record (the buckets that
   *    version wrote) is moved into `_commits/` with ATOMIC_MOVE. Readers

@@ -40,35 +40,21 @@ object StreamingWarehouse {
   /** Run the staged-file stream to completion (AvailableNow), folding
     * every micro-batch into the warehouse state. Returns the final state.
     * State is carried on the driver as DataFrame plans and checkpointed
-    * to parquet per batch so lineage never grows unboundedly. */
+    * to parquet per batch so lineage never grows unboundedly. A restart
+    * resumes from the newest committed state version while the
+    * checkpoint skips already-committed batches; without that recovery,
+    * previously loaded warehouse contents would silently vanish. */
   def run(spark: SparkSession, srcDir: String, checkpointDir: String,
-      stateDir: String): Warehouse.State = {
-    // recover the newest committed state version — a restart resumes from
-    // it while the checkpoint skips already-committed batches; without
-    // this, previously loaded warehouse contents would silently vanish
-    @volatile var state = loadLatestState(spark, stateDir)
-      .getOrElse(Warehouse.emptyState(spark))
-    val stream = spark.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1) // the reference's 50-papers-per-pull cadence analog
-      .parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        state = commitBatch(spark, stateDir, state, batch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    state
-  }
+      stateDir: String): Warehouse.State =
+    drive(spark, files(spark, srcDir), checkpointDir, stateDir, None)(
+      (batch, _) => batch)
 
   /** The connector → warehouse composition (the VERDICT r9 #4 pattern
     * applied to the SECOND pipeline): staged papers arrive as JSON
     * payloads through the `graft-api` micro-batch source — the
     * reference's scheduled API pull feeding `pop_DWH` as ONE streaming
     * query — parse against [[stagedSchema]], and flow through the same
-    * [[commitBatch]] protocol. The landing-journal offset plus
+    * commit protocol as [[run]]. The landing-journal offset plus
     * `loadBatch`'s anti-join idempotence give exactly-once across
     * restarts; unservable ids (null payload) dead-letter to
     * `stateDir/dead/` keyed by batch id — the same idempotent-overwrite
@@ -76,62 +62,9 @@ object StreamingWarehouse {
     * warehouse path stays auditable (ADVICE r10). */
   def runFromConnector(spark: SparkSession, landedDir: String,
       checkpointDir: String, stateDir: String,
-      numPartitions: Int = 4): Warehouse.State = {
-    @volatile var state = loadLatestState(spark, stateDir)
-      .getOrElse(Warehouse.emptyState(spark))
-    val stream = spark.readStream.format("graft-api")
-      .option("dir", landedDir)
-      .option("numPartitions", numPartitions.toString)
-      .load()
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (apiBatch: DataFrame, batchId: Long) =>
-        apiBatch.filter(col("payload").isNull).select(col("id"))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/dead/batch_id=$batchId")
-        val staged = apiBatch.filter(col("payload").isNotNull)
-          .select(from_json(col("payload"), stagedSchema).as("p"))
-          .select(col("p.*"))
-        state = commitBatch(spark, stateDir, state, staged)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    state
-  }
-
-  /** One micro-batch's commit (shared by [[run]] and
-    * [[runFromConnector]]). */
-  private def commitBatch(spark: SparkSession, stateDir: String,
-      state: Warehouse.State, batch: DataFrame): Warehouse.State = {
-    // version = max existing + 1, NOT batchId: after a restart with a
-    // fresh checkpoint, batch ids restart at 0 and writing v0 would
-    // overwrite the directory the recovered state is lazily reading
-    // (a self-overwrite that fails mid-scan)
-    val next = nextVersion(stateDir)
-    // RDDs persisted before this batch (a recovered state's, a user's
-    // own) are out of scope for the post-commit sweep below
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val committed = persistState(
-      Warehouse.loadBatch(spark, state, batch), s"$stateDir/v$next")
-    pruneOldVersions(stateDir, keep = 2)
-    // release the batch's localCheckpoint blocks (loadBatch's pins and
-    // the key-minting ranks' eager boundary pins): the catalog never
-    // knew them, and without this they accumulate one set per
-    // micro-batch until the JVM happens to GC the superseded State
-    // plans — the GC-timing-dependent 3-4x degradation BASELINE.md
-    // documents for Bench, whose between-runs sweep this mirrors.
-    // Safe even though unpersisting a localCheckpoint is irreversible
-    // (lineage is truncated): the committed state re-reads parquet,
-    // so no surviving plan references these blocks. The sweep is scoped
-    // to RDDs this batch created — caches the caller owns stay.
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!persistedBefore.contains(id)) { rdd.unpersist(false); () }
-    }
-    committed
-  }
+      numPartitions: Int = 4): Warehouse.State =
+    drive(spark, connector(spark, landedDir, numPartitions), checkpointDir,
+      stateDir, None)(parsePayloads(stateDir))
 
   /** Bucket-granular variant of [[run]] (VERDICT r7 #3, reference
     * `dags/pop_DWH.py:296–302`): `dim_author` — the Type-1 touched-author
@@ -148,24 +81,9 @@ object StreamingWarehouse {
     * (same recovered base state, same data ⇒ same delta keys) supersedes
     * its buckets verbatim. */
   def runBucketed(spark: SparkSession, srcDir: String, checkpointDir: String,
-      stateDir: String, nBuckets: Int = 16): Warehouse.State = {
-    val authors = authorTable(spark, stateDir, nBuckets)
-    @volatile var state = loadLatestStateBucketed(spark, stateDir, nBuckets)
-      .getOrElse(Warehouse.emptyState(spark))
-    val stream = spark.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        state = commitBatchBucketed(spark, stateDir, authors, state, batch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    state
-  }
+      stateDir: String, nBuckets: Int = 16): Warehouse.State =
+    drive(spark, files(spark, srcDir), checkpointDir, stateDir,
+      Some(authorTable(spark, stateDir, nBuckets)))((batch, _) => batch)
 
   /** The connector → BUCKETED warehouse composition (VERDICT r10 #5 —
     * the last reference semantics not yet driven from the `graft-api`
@@ -180,25 +98,49 @@ object StreamingWarehouse {
     * dead-letter to `stateDir/dead/` keyed by batch id. */
   def runBucketedFromConnector(spark: SparkSession, landedDir: String,
       checkpointDir: String, stateDir: String, nBuckets: Int = 16,
-      numPartitions: Int = 4): Warehouse.State = {
-    val authors = authorTable(spark, stateDir, nBuckets)
-    @volatile var state = loadLatestStateBucketed(spark, stateDir, nBuckets)
-      .getOrElse(Warehouse.emptyState(spark))
-    val stream = spark.readStream.format("graft-api")
+      numPartitions: Int = 4): Warehouse.State =
+    drive(spark, connector(spark, landedDir, numPartitions), checkpointDir,
+      stateDir, Some(authorTable(spark, stateDir, nBuckets)))(
+      parsePayloads(stateDir))
+
+  private def files(spark: SparkSession, srcDir: String): DataFrame =
+    spark.readStream.schema(stagedSchema)
+      .option("maxFilesPerTrigger", 1) // the reference's 50-papers-per-pull cadence analog
+      .parquet(srcDir)
+
+  private def connector(spark: SparkSession, landedDir: String,
+      numPartitions: Int): DataFrame =
+    spark.readStream.format("graft-api")
       .option("dir", landedDir)
       .option("numPartitions", numPartitions.toString)
       .load()
+
+  /** A connector micro-batch's staged papers; its null payloads
+    * dead-letter to `stateDir/dead/batch_id=<id>` first. */
+  private def parsePayloads(stateDir: String)(apiBatch: DataFrame,
+      batchId: Long): DataFrame = {
+    apiBatch.filter(col("payload").isNull).select(col("id"))
+      .write.mode("overwrite")
+      .parquet(s"$stateDir/dead/batch_id=$batchId")
+    apiBatch.filter(col("payload").isNotNull)
+      .select(from_json(col("payload"), stagedSchema).as("p"))
+      .select(col("p.*"))
+  }
+
+  /** Run `stream` to completion, committing each micro-batch's staged
+    * papers (`stage`) onto the state recovered from `stateDir`;
+    * `authors` set = the bucketed `dim_author` protocol. */
+  private def drive(spark: SparkSession, stream: DataFrame,
+      checkpointDir: String, stateDir: String,
+      authors: Option[AcidBucketTable])(
+      stage: (DataFrame, Long) => DataFrame): Warehouse.State = {
+    @volatile var state = recover(spark, stateDir, authors)
+      .getOrElse(Warehouse.emptyState(spark))
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (apiBatch: DataFrame, batchId: Long) =>
-        apiBatch.filter(col("payload").isNull).select(col("id"))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/dead/batch_id=$batchId")
-        val staged = apiBatch.filter(col("payload").isNotNull)
-          .select(from_json(col("payload"), stagedSchema).as("p"))
-          .select(col("p.*"))
-        state = commitBatchBucketed(spark, stateDir, authors, state, staged)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        state = commit(spark, stateDir, authors, state, stage(batch, batchId))
         ()
       }
       .start()
@@ -206,21 +148,33 @@ object StreamingWarehouse {
     state
   }
 
-  /** One micro-batch's bucketed commit (shared by [[runBucketed]] and
-    * [[runBucketedFromConnector]]) — [[commitBatch]] with the author
-    * table going through the MERGE path. */
-  private def commitBatchBucketed(spark: SparkSession, stateDir: String,
-      authors: AcidBucketTable, state: Warehouse.State,
+  /** One micro-batch's commit (shared by every stream driver). */
+  private def commit(spark: SparkSession, stateDir: String,
+      authors: Option[AcidBucketTable], state: Warehouse.State,
       batch: DataFrame): Warehouse.State = {
-    val next = nextVersion(stateDir)
+    // version = max existing + 1, NOT batchId: after a restart with a
+    // fresh checkpoint, batch ids restart at 0 and writing v0 would
+    // overwrite the directory the recovered state is lazily reading
+    // (a self-overwrite that fails mid-scan)
+    val next = versions(stateDir).lastOption.fold(0L)(_._1 + 1)
+    // RDDs persisted before this batch (a recovered state's, a user's
+    // own) are out of scope for the post-commit sweep below
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val committed = persistStateBucketed(
-      Warehouse.loadBatch(spark, state, batch), s"$stateDir/v$next",
-      next, authors)
+    val committed = persist(Warehouse.loadBatch(spark, state, batch),
+      s"$stateDir/v$next", authors.map(_ -> next))
     pruneOldVersions(stateDir, keep = 2)
-    authors.vacuum(keep = 2)
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+    authors.foreach(_.vacuum(keep = 2))
+    // release the batch's localCheckpoint blocks (loadBatch's pins and
+    // the key-minting rank's eager boundary pin): the catalog never
+    // knew them, and without this they accumulate one set per
+    // micro-batch until the JVM happens to GC the superseded State
+    // plans — the GC-timing-dependent 3-4x degradation BASELINE.md
+    // documents for Bench, whose between-runs sweep this mirrors.
+    // Safe even though unpersisting a localCheckpoint is irreversible
+    // (lineage is truncated): the committed state re-reads parquet,
+    // so no surviving plan references these blocks. The sweep is scoped
+    // to RDDs this batch created — caches the caller owns stay.
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!persistedBefore.contains(id)) { rdd.unpersist(false); () }
     }
     committed
@@ -232,100 +186,53 @@ object StreamingWarehouse {
     new AcidBucketTable(spark, s"$stateDir/dim_author_acid",
       Seq("full_name"), nBuckets)
 
-  /** [[loadLatestState]] twin for [[runBucketed]] layouts: eight tables
-    * from the newest committed version dir, `dim_author` from the bucket
-    * table AS-OF that version. */
-  def loadLatestStateBucketed(spark: SparkSession, stateDir: String,
-      nBuckets: Int = 16): Option[Warehouse.State] = {
-    val base = new java.io.File(stateDir)
-    val versions = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("v") &&
-        new java.io.File(d, CommitMarker).exists())
-      .flatMap(d => d.getName.drop(1).toLongOption.map(_ -> d))
-      .sortBy(_._1)
-    versions.lastOption.map { case (v, d) =>
-      def rd(name: String) = spark.read.parquet(s"${d.getPath}/$name")
-      val authors = authorTable(spark, stateDir, nBuckets)
-        .read(asOf = Some(v))
-        .getOrElse(sys.error(
-          s"runBucketed state v$v committed but no author commit <= $v"))
-      Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
-        rd("dim_venue"), authors, rd("dim_affiliation"),
-        rd("paper_fact"), rd("bridge_author_group"),
-        rd("bridge_affiliation_group"))
-    }
-  }
-
-  /** [[persistState]] twin for [[runBucketed]]: MERGE the touched-author
-    * delta into the bucket table (same version, FIRST), snapshot the
-    * other eight tables, commit marker last. */
-  def persistStateBucketed(s: Warehouse.State, dir: String, version: Long,
-      authors: AcidBucketTable): Warehouse.State = {
-    val delta = s.touchedAuthors match {
-      case Some(t) => s.dimAuthor.join(t, Seq("full_name"), "left_semi")
-      case None => s.dimAuthor // unknown scope (bootstrap): full table
-    }
-    authors.merge(delta, version)
-    def roundTrip(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$dir/$name")
-      df.sparkSession.read.parquet(s"$dir/$name")
-    }
-    val out = Warehouse.State(
-      dimYear = roundTrip(s.dimYear, "dim_year"),
-      dimDomain = roundTrip(s.dimDomain, "dim_domain"),
-      dimType = roundTrip(s.dimType, "dim_type"),
-      dimVenue = roundTrip(s.dimVenue, "dim_venue"),
-      dimAuthor = authors.read(asOf = Some(version)).get,
-      dimAffiliation = roundTrip(s.dimAffiliation, "dim_affiliation"),
-      fact = roundTrip(s.fact, "paper_fact"),
-      bridgeAuthor = roundTrip(s.bridgeAuthor, "bridge_author_group"),
-      bridgeAffiliation = roundTrip(s.bridgeAffiliation, "bridge_affiliation_group"),
-      keyMaxes = s.keyMaxes)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(dir, CommitMarker))
-    out
-  }
-
-  private def nextVersion(stateDir: String): Long = {
-    val base = new java.io.File(stateDir)
-    val ids = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("v"))
-      .flatMap(_.getName.drop(1).toLongOption)
-    if (ids.isEmpty) 0L else ids.max + 1
-  }
-
   /** Name of the version-level commit marker: written LAST by
     * [[persistState]], after all nine tables — `paper_fact/_SUCCESS`
     * alone would accept a version whose bridge tables (written after the
     * fact) are missing when a crash lands in that window. */
   private val CommitMarker = "_GRAFT_COMMITTED"
 
-  /** Newest state version that fully committed (all tables written). */
-  def loadLatestState(spark: SparkSession, stateDir: String): Option[Warehouse.State] = {
-    val base = new java.io.File(stateDir)
-    val versions = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("v") &&
-        new java.io.File(d, CommitMarker).exists())
+  private def isCommitted(versionDir: java.io.File): Boolean =
+    new java.io.File(versionDir, CommitMarker).exists()
+
+  /** Every `v<N>` state version directory, committed or not,
+    * version-ascending. */
+  private def versions(stateDir: String): Seq[(Long, java.io.File)] =
+    Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && d.getName.startsWith("v"))
       .flatMap(d => d.getName.drop(1).toLongOption.map(_ -> d))
-      .sortBy(_._1)
-    versions.lastOption.map { case (_, d) =>
-      def rd(name: String) = spark.read.parquet(s"${d.getPath}/$name")
-      Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
-        rd("dim_venue"), rd("dim_author"), rd("dim_affiliation"),
-        rd("paper_fact"), rd("bridge_author_group"), rd("bridge_affiliation_group"))
+      .sortBy(_._1).toSeq
+
+  /** Newest state version that fully committed (all tables written). */
+  def loadLatestState(spark: SparkSession, stateDir: String): Option[Warehouse.State] =
+    recover(spark, stateDir, None)
+
+  /** [[loadLatestState]] for [[runBucketed]] layouts: eight tables from
+    * the newest committed version dir, `dim_author` from the bucket table
+    * AS-OF that version. */
+  def loadLatestStateBucketed(spark: SparkSession, stateDir: String,
+      nBuckets: Int = 16): Option[Warehouse.State] =
+    recover(spark, stateDir, Some(authorTable(spark, stateDir, nBuckets)))
+
+  private def recover(spark: SparkSession, stateDir: String,
+      authors: Option[AcidBucketTable]): Option[Warehouse.State] =
+    versions(stateDir).filter(v => isCommitted(v._2)).lastOption.map {
+      case (v, d) =>
+        def rd(name: String) = spark.read.parquet(s"${d.getPath}/$name")
+        val dimAuthor = authors.fold(rd("dim_author"))(_.read(asOf = Some(v))
+          .getOrElse(sys.error(
+            s"runBucketed state v$v committed but no author commit <= $v")))
+        Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
+          rd("dim_venue"), dimAuthor, rd("dim_affiliation"),
+          rd("paper_fact"), rd("bridge_author_group"),
+          rd("bridge_affiliation_group"))
     }
-  }
 
   /** Drop all but the newest `keep` committed versions — per-batch full
     * rewrites are the plain-parquet Type-1 reality (an ACID table format
     * MERGEs instead); without pruning the directory grows one complete
     * warehouse copy per batch. */
   private def pruneOldVersions(stateDir: String, keep: Int): Unit = {
-    val base = new java.io.File(stateDir)
-    val versions = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("v"))
-      .flatMap(d => d.getName.drop(1).toLongOption.map(_ -> d))
-      .sortBy(_._1)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
       f.delete(); ()
@@ -336,8 +243,7 @@ object StreamingWarehouse {
     // newest committed version are dead — no recovery selects them — so they
     // are removed unconditionally; a newer uncommitted dir may be a write in
     // flight and is left alone.
-    val (committed, uncommitted) =
-      versions.partition { case (_, d) => new java.io.File(d, CommitMarker).exists() }
+    val (committed, uncommitted) = versions(stateDir).partition(v => isCommitted(v._2))
     committed.dropRight(keep).foreach { case (_, d) => rm(d) }
     val newestCommitted = committed.lastOption.map(_._1).getOrElse(Long.MinValue)
     uncommitted.filter(_._1 < newestCommitted).foreach { case (_, d) => rm(d) }
@@ -346,7 +252,26 @@ object StreamingWarehouse {
   /** Write every state table as parquet and reload — truncates lineage
     * (the incremental fold would otherwise stack one plan per batch) and
     * is the durable hand-off a restart recovers from. */
-  def persistState(s: Warehouse.State, dir: String): Warehouse.State = {
+  def persistState(s: Warehouse.State, dir: String): Warehouse.State =
+    persist(s, dir, None)
+
+  /** [[persistState]] for [[runBucketed]]: MERGE the touched-author delta
+    * into the bucket table (same version, FIRST), snapshot the other
+    * eight tables, commit marker last. */
+  def persistStateBucketed(s: Warehouse.State, dir: String, version: Long,
+      authors: AcidBucketTable): Warehouse.State =
+    persist(s, dir, Some(authors -> version))
+
+  /** `authorMerge` set = `dim_author` goes through that bucket table's
+    * MERGE at that version instead of a snapshot of its own. */
+  private def persist(s: Warehouse.State, dir: String,
+      authorMerge: Option[(AcidBucketTable, Long)]): Warehouse.State = {
+    authorMerge.foreach { case (authors, version) =>
+      authors.merge(s.touchedAuthors match {
+        case Some(t) => s.dimAuthor.join(t, Seq("full_name"), "left_semi")
+        case None => s.dimAuthor // unknown scope (bootstrap): full table
+      }, version)
+    }
     def roundTrip(df: DataFrame, name: String): DataFrame = {
       df.write.mode("overwrite").parquet(s"$dir/$name")
       df.sparkSession.read.parquet(s"$dir/$name")
@@ -356,7 +281,9 @@ object StreamingWarehouse {
       dimDomain = roundTrip(s.dimDomain, "dim_domain"),
       dimType = roundTrip(s.dimType, "dim_type"),
       dimVenue = roundTrip(s.dimVenue, "dim_venue"),
-      dimAuthor = roundTrip(s.dimAuthor, "dim_author"),
+      dimAuthor = authorMerge.fold(roundTrip(s.dimAuthor, "dim_author")) {
+        case (authors, version) => authors.read(asOf = Some(version)).get
+      },
       dimAffiliation = roundTrip(s.dimAffiliation, "dim_affiliation"),
       fact = roundTrip(s.fact, "paper_fact"),
       bridgeAuthor = roundTrip(s.bridgeAuthor, "bridge_author_group"),

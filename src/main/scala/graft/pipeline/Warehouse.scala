@@ -17,11 +17,11 @@ import graft.plans.Pins.pin
   *
   * A batch is not one Spark job: every batch-scale frame [[loadBatch]]
   * derives is an eager pin, and AQE runs each query stage of a pin, of
-  * the key-minting ranks and of the nine snapshot writes as a job of its
-  * own. One streamed 50-paper commit onto a 5,000-paper warehouse
-  * (Spark 4.1.2, local[4], counted from the event log) runs 103 jobs and
-  * 5.0 s of summed task time, against 116–126 jobs and 11.5 s when the
-  * derived frames were lazily cached and the writes re-derived them.
+  * the one key-minting rank and of the nine snapshot writes as a job of
+  * its own. Counted from the event log (Spark 4.1.2, local[4]), the
+  * streamed 5,000-paper initial commit runs 82 jobs and a 50-paper commit
+  * onto it 94; with one rank per minted dim they ran 151 and 102 (a batch
+  * bringing few new natural keys minted few dims even then).
   *
   * State is a plain case class of DataFrames — callers persist however
   * they like (parquet dirs at test scale; Delta/Iceberg MERGE at 100 TB,
@@ -105,60 +105,80 @@ object Warehouse {
     .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** D2/D3 — generic Type-1 dim upsert: new natural keys get surrogate
-    * keys continuing from the current max, minted by a rank over the
-    * natural-key order (deterministic; replaces Postgres SERIAL). The
-    * rank runs through [[graft.operators.Ranking.globalDenseRankCols]] —
-    * `fresh` is distinct on the natural key, so dense rank ≡ row_number,
-    * and an initial bulk load minting millions of keys never lands in a
-    * single-partition window. */
+    * keys continuing from the current max, in natural-key order
+    * (deterministic; replaces Postgres SERIAL). The one-dim call of the
+    * [[mint]] that [[loadBatch]] runs for all its dims at once. */
   def upsertDim(dim: DataFrame, incoming: DataFrame, keyName: String,
-      natCols: Seq[String]): DataFrame =
-    upsertDimFrom(dim, incoming, keyName, natCols,
-      dim.agg(coalesce(max(col(keyName)), lit(0))).head().getInt(0))
+      natCols: Seq[String]): DataFrame = {
+    val maxKey = dim.agg(coalesce(max(col(keyName)), lit(0))).head().getInt(0)
+    mint(Seq(keyName -> freshNaturalKeys(dim, incoming, natCols)),
+      Map(keyName -> maxKey.toLong)).append(keyName, dim, keyName, natCols)
+  }
 
   /** The natural keys of `incoming` not yet present in `dim` (the rows a
-    * Type-1 upsert mints). [[loadBatch]] pins these so one unioned count
-    * both updates the high-water marks AND reuses the materialized
-    * anti-join every dim plan reads. */
+    * Type-1 upsert mints). */
   def freshNaturalKeys(dim: DataFrame, incoming: DataFrame,
       natCols: Seq[String]): DataFrame =
     incoming.select(natCols.map(col): _*).na.fill("Unknown")
       .distinct()
       .join(dim, natCols, "left_anti")
 
-  /** [[upsertDim]] with the key high-water mark supplied by the caller —
-    * [[loadBatch]] carries all maxes in [[State.keyMaxes]] so no per-batch
-    * dim scan happens just to learn them. */
-  def upsertDimFrom(dim: DataFrame, incoming: DataFrame, keyName: String,
-      natCols: Seq[String], maxKey: Long): DataFrame =
-    appendMinted(dim, freshNaturalKeys(dim, incoming, natCols), keyName,
-      natCols, maxKey)
+  /** The keys one [[mint]] minted: `counts` fresh keys per sequence, and
+    * `keyed`, one pinned row `(_dim, _k1, _k2, _key)` per fresh natural
+    * key, `_dim` being the sequence's position in `names`. */
+  private case class Minted(names: Seq[String], counts: Map[String, Long],
+      keyed: DataFrame) {
+    def keys(name: String): DataFrame =
+      keyed.filter(col("_dim") === names.indexOf(name))
 
-  /** Union `fresh` natural keys into `dim` with surrogate keys continuing
-    * from `maxKey` (two-pass rank — see [[upsertDim]]). The minted rows
-    * are pinned, so `dim`'s plan is its own scan ∪ one checkpointed
-    * delta. */
-  def appendMinted(dim: DataFrame, fresh: DataFrame, keyName: String,
-      natCols: Seq[String], maxKey: Long): DataFrame =
-    dim.unionByName(pin(mintRows(dim, fresh, keyName, natCols, maxKey)))
+    /** Sequence `name`'s minted rows in `dim`'s schema: the natural key,
+      * the surrogate key `keyName`, every other attribute null. */
+    def rows(name: String, dim: DataFrame, keyName: String,
+        natCols: Seq[String]): DataFrame = {
+      val from = Map(keyName -> col("_key")) ++
+        natCols.zip(Seq(col("_k1"), col("_k2")))
+      keys(name).select(dim.schema.toIndexedSeq.map(f =>
+        from.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name)): _*)
+    }
 
-  /** `fresh` natural keys as rows of `dim`'s schema: keys `maxKey + rank`
-    * over the natural-key order, every other attribute null. The rank's
-    * range partitioning follows the session's shuffle parallelism. */
-  private def mintRows(dim: DataFrame, fresh: DataFrame, keyName: String,
-      natCols: Seq[String], maxKey: Long): DataFrame = {
-    val minted = Ranking.globalDenseRankCols(fresh, natCols, "_rn",
-        ascending = true, parts = shuffleParts(fresh))
-      .withColumn(keyName, (col("_rn") + maxKey).cast("int"))
-      .drop("_rn")
-    minted.select(dim.columns.toIndexedSeq.map(c =>
-      if (!natCols.contains(c) && c != keyName)
-        lit(null).cast(dim.schema(c).dataType).as(c)
-      else col(c)): _*)
+    /** `dim` ∪ its minted rows; `dim` itself when it minted none. */
+    def append(name: String, dim: DataFrame, keyName: String,
+        natCols: Seq[String]): DataFrame =
+      if (counts(name) == 0) dim
+      else dim.unionByName(rows(name, dim, keyName, natCols))
   }
 
-  private def shuffleParts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
+  /** SERIAL for several named sequences in one pass. `fresh` holds each
+    * sequence's new natural keys — distinct, one or two string columns —
+    * and `maxes` its high-water mark. The sequences are tagged `_dim` (their
+    * position) and pinned as ONE frame, counted by ONE action, and ranked
+    * by ONE [[graft.operators.Ranking.globalDenseRankCols]] over
+    * `(_dim, _k1, _k2)` (two-pass: a bulk load minting millions of keys
+    * never lands in a single window partition). The tag leads the order,
+    * so a key is `maxes + rank − (fresh keys of the sequences tagged
+    * before it)`: exactly the high-water mark plus its rank in its own
+    * sequence's natural-key order. No fresh key at all, no rank. */
+  private def mint(fresh: Seq[(String, DataFrame)],
+      maxes: Map[String, Long]): Minted = {
+    val names = fresh.map(_._1)
+    val tagged = pin(fresh.zipWithIndex.map { case ((_, df), i) =>
+      val k = df.columns.toIndexedSeq.map(col)
+      df.select(lit(i).as("_dim"), k(0).as("_k1"),
+        k.lift(1).getOrElse(lit(null).cast("string")).as("_k2"))
+    }.reduce(_ unionByName _))
+    val byTag = tagged.groupBy("_dim").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val counts = names.indices.map(byTag.getOrElse(_, 0L))
+    val before = counts.scanLeft(0L)(_ + _)
+    val offset = typedLit(names.indices.map(i => maxes(names(i)) - before(i)))
+    val keyed =
+      if (counts.sum == 0) tagged.withColumn("_key", lit(null).cast("int"))
+      else pin(Ranking.globalDenseRankCols(tagged, Seq("_dim", "_k1", "_k2"),
+          "_rn", ascending = true)
+        .select(col("_dim"), col("_k1"), col("_k2"),
+          (col("_rn") + offset.getItem(col("_dim"))).cast("int").as("_key")))
+    Minted(names, names.zip(counts).toMap, keyed)
+  }
 
   /** Staged batch schema (post clean+enrich): one row per paper with
     * `authors_merged` array<struct<family,given,affiliation,gender,
@@ -170,10 +190,11 @@ object Warehouse {
     *
     * Every frame a batch derives is batch-scale and pinned
     * ([[graft.plans.Pins.pin]], an eager `localCheckpoint`): the staged
-    * batch, its exploded authors, the fresh natural keys, the new papers,
-    * the minted dim rows, the group-keyed papers, the new fact and bridge
-    * rows, and the touched authors' citation rows (read by both the
-    * h-index and the g-index). Each returned state table is therefore
+    * batch, its exploded authors, the new papers, every sequence's fresh
+    * natural keys (one tagged frame) and their minted keys (one rank),
+    * the minted authors with their gender, the group-keyed papers, the
+    * new fact and bridge rows, and the touched authors' citation rows
+    * (read by both the h-index and the g-index). Each returned state table is therefore
     * the input snapshot ∪ a pinned delta — dim_author additionally joins
     * the pinned h/g update on `author_key` — so persisting the nine
     * tables re-derives nothing, and a materialized pin drops the physical
@@ -205,22 +226,6 @@ object Warehouse {
         col("a.gender").as("gender"),
         coalesce(col("a.affiliation"), lit("Unknown")).as("affiliation_name")))
 
-    // Fresh (to-be-minted) natural keys per dim + the batch's new papers,
-    // pinned: ONE driver action counts them all — batch-scale frames, not
-    // corpus-scale dims — advancing the high-water marks for the next
-    // batch and telling which deltas are empty.
-    val freshDomain = pin(freshNaturalKeys(state.dimDomain,
-      batch.select(col("subject").as("scientific_domain")),
-      Seq("scientific_domain")))
-    val freshType = pin(freshNaturalKeys(state.dimType,
-      batch.select(col("type").as("type_name")), Seq("type_name")))
-    val freshVenue = pin(freshNaturalKeys(state.dimVenue,
-      batch.select(col("container-title").as("pub_venue"), col("publisher")),
-      Seq("pub_venue", "publisher")))
-    val freshAuthor = pin(freshNaturalKeys(state.dimAuthor,
-      authorsExpl.select(col("full_name")), Seq("full_name")))
-    val freshAffiliation = pin(freshNaturalKeys(state.dimAffiliation,
-      authorsExpl.select(col("affiliation_name")), Seq("affiliation_name")))
     // one row per id, like the reference's `ON CONFLICT DO NOTHING` on
     // the fact's key, chosen by the scaladoc's rule — the same row
     // whatever order the batch arrives in
@@ -231,71 +236,71 @@ object Warehouse {
       .agg(max(struct(("latest_version" +: rest).toIndexedSeq.map(col): _*)).as("_p"))
       .select(batch.columns.toIndexedSeq.map(c =>
         if (c == "id") col("id") else col("_p").getField(c).as(c)): _*))
-    val counts: Map[String, Long] = Seq(
-      ("domain", freshDomain, count(lit(1))),
-      ("type", freshType, count(lit(1))),
-      ("venue", freshVenue, count(lit(1))),
-      ("author", freshAuthor, count(lit(1))),
-      ("affiliation", freshAffiliation, count(lit(1))),
-      // one group key per new paper (newPapers is one row per id)
-      ("group", newPapers, count(lit(1))))
-      .map { case (n, df, m) =>
-        df.agg(m.as("m")).select(lit(n).as("k"), col("m"))
-      }
-      .reduce(_ unionByName _)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    // Fresh (to-be-minted) natural keys per dim + the new papers' ids (one
+    // group key per paper) go through ONE mint: its one count action reads
+    // batch-scale frames, not corpus-scale dims, advancing the high-water
+    // marks for the next batch and telling which deltas are empty.
+    val m = mint(Seq(
+      "domain" -> freshNaturalKeys(state.dimDomain,
+        batch.select(col("subject").as("scientific_domain")),
+        Seq("scientific_domain")),
+      "type" -> freshNaturalKeys(state.dimType,
+        batch.select(col("type").as("type_name")), Seq("type_name")),
+      "venue" -> freshNaturalKeys(state.dimVenue,
+        batch.select(col("container-title").as("pub_venue"), col("publisher")),
+        Seq("pub_venue", "publisher")),
+      "author" -> freshNaturalKeys(state.dimAuthor,
+        authorsExpl.select(col("full_name")), Seq("full_name")),
+      "affiliation" -> freshNaturalKeys(state.dimAffiliation,
+        authorsExpl.select(col("affiliation_name")), Seq("affiliation_name")),
+      "group" -> newPapers.select(col("id"))), maxes)
 
     // --- dims (D2/J1: insert-if-absent, then key lookup by broadcast join)
-    def upsert(name: String, dim: DataFrame, fresh: DataFrame,
-        keyName: String, natCols: Seq[String]): DataFrame =
-      if (counts(name) == 0) dim
-      else appendMinted(dim, fresh, keyName, natCols, maxes(name))
-    val dimDomain = upsert("domain", state.dimDomain, freshDomain,
-      "domain_key", Seq("scientific_domain"))
-    val dimType = upsert("type", state.dimType, freshType,
-      "type_key", Seq("type_name"))
-    val dimVenue = upsert("venue", state.dimVenue, freshVenue,
-      "venue_key", Seq("pub_venue", "publisher"))
-    val dimAffiliation = upsert("affiliation", state.dimAffiliation,
-      freshAffiliation, "affiliation_key", Seq("affiliation_name"))
+    val dimDomain = m.append("domain", state.dimDomain, "domain_key",
+      Seq("scientific_domain"))
+    val dimType = m.append("type", state.dimType, "type_key", Seq("type_name"))
+    val dimVenue = m.append("venue", state.dimVenue, "venue_key",
+      Seq("pub_venue", "publisher"))
+    val dimAffiliation = m.append("affiliation", state.dimAffiliation,
+      "affiliation_key", Seq("affiliation_name"))
     // No broadcast hints on batch- or corpus-scaled frames anywhere below:
     // dimAuthor/dimAffiliation/dimVenue grow monotonically with the corpus
     // and genderOf/touched/h/g with the batch — at 100 TB none is
     // guaranteed to fit driver-side. AQE still picks broadcast while a
     // side is actually small; only the bounded dims (year: fixed 92 rows,
     // domain/type: closed vocabularies) keep explicit hints.
+    val freshAuthors = m.rows("author", state.dimAuthor, "author_key",
+      Seq("full_name"))
     val dimAuthor =
-      if (counts("author") == 0) state.dimAuthor
+      if (m.counts("author") == 0) state.dimAuthor
       else {
         // carry gender onto newly minted authors (Type-1: latest wins)
         val genderOf = authorsExpl.groupBy("full_name")
           .agg(max(col("gender")).as("g_new"))
-        state.dimAuthor.unionByName(pin(mintRows(state.dimAuthor,
-            freshAuthor, "author_key", Seq("full_name"), maxes("author"))
+        state.dimAuthor.unionByName(pin(freshAuthors
           .join(genderOf, Seq("full_name"), "left")
           .select(col("author_key"), col("full_name"),
             coalesce(col("gender"), col("g_new"), lit("unknown")).as("gender"),
             coalesce(col("h_index"), lit(0)).as("h_index"),
             coalesce(col("g_index"), lit(0)).as("g_index"))))
       }
-    val mintedAuthors = freshAuthor.select(col("full_name"))
-    val keyMaxes = Some(maxes.map { case (k, v) => k -> (v + counts(k)) })
+    val mintedAuthors = freshAuthors.select(col("full_name"))
+    val keyMaxes = Some(maxes.map { case (k, v) => k -> (v + m.counts(k)) })
 
-    if (counts("group") == 0)
+    if (m.counts("group") == 0)
       // a replay: only dims can change (a replayed paper may carry a new
       // author or affiliation); fact, bridges and metrics stand
       return State(state.dimYear, dimDomain, dimType, dimVenue, dimAuthor,
         dimAffiliation, state.fact, state.bridgeAuthor,
         state.bridgeAffiliation, keyMaxes, Some(mintedAuthors))
 
-    // --- fact (D4: idempotent on arxiv_ID) with group keys (D3) via the
-    // same two-pass rank as the dims (id is unique per paper) — a bulk
-    // initial load would otherwise rank every new paper in one window
-    // partition
-    val withGroups = pin(Ranking.globalDenseRankCols(newPapers, Seq("id"),
-        "_rn", ascending = true, parts = shuffleParts(newPapers))
-      .withColumn("author_group_key", (col("_rn") + maxes("group")).cast("int"))
-      .drop("_rn"))
+    // --- fact (D4: idempotent on arxiv_ID) with its minted group key (D3),
+    // joined back null-safely: a null id is one new paper too
+    val groupKeys = m.keys("group")
+      .select(col("_k1").as("_id"), col("_key").as("author_group_key"))
+    val withGroups = pin(newPapers
+      .join(groupKeys, newPapers("id") <=> col("_id")).drop("_id"))
 
     val fact = state.fact.unionByName(pin(withGroups
       .withColumnRenamed("publisher", "b_publisher") // avoid dimVenue clash

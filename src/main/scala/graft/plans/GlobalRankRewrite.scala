@@ -99,9 +99,9 @@ case class GlobalRankRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             Boolean) => org.apache.spark.sql.DataFrame =
           alias.child match {
             case WindowExpression(_: DenseRank, _) =>
-              Ranking.globalDenseRankCols(_, _, _, _, 32, jobFreePlanning = true)
+              Ranking.globalDenseRankCols(_, _, _, _, jobFreePlanning = true)
             case _ =>
-              Ranking.globalRankCols(_, _, _, _, 32, jobFreePlanning = true)
+              Ranking.globalRankCols(_, _, _, _, jobFreePlanning = true)
           }
         val ranked = twoPass(
           Shims.ofRows(spark, child), valueCols, alias.name, ascending)

@@ -22,7 +22,27 @@ import org.apache.spark.sql.graftshim.Shims
   * none can regress into that mode. */
 object Pins {
   def pin(df: DataFrame): DataFrame =
-    Shims.dropCheckpointStats(df.localCheckpoint(true))
+    atCaller(df)(Shims.dropCheckpointStats(df.localCheckpoint(true)))
+
+  /** Run `f`, a pin's eager checkpoint, with the thread's short call site
+    * set to `localCheckpoint at <File>:<line>` of the first stack frame
+    * outside the pin helpers (this object and
+    * [[graft.operators.Ranking]]) and the JDK and Scala libraries, then
+    * restore the previous one: the pin's jobs then name the operator that
+    * pinned, not this file. */
+  private[graft] def atCaller[T](df: DataFrame)(f: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val previous = sc.getLocalProperty(ShortCallSite)
+    Thread.currentThread.getStackTrace.iterator
+      .find(e => !helpers.exists(e.getClassName.startsWith))
+      .foreach(e => sc.setLocalProperty(ShortCallSite,
+        s"localCheckpoint at ${e.getFileName}:${e.getLineNumber}"))
+    try f finally sc.setLocalProperty(ShortCallSite, previous)
+  }
+
+  private val ShortCallSite = "callSite.short"
+  private val helpers = Seq("graft.plans.Pins", "graft.operators.Ranking",
+    "java.", "jdk.", "scala.")
 
   implicit class PinnedOps(private val df: DataFrame) extends AnyVal {
     /** `df.localCheckpoint(true)` with origin stats dropped. */

@@ -203,8 +203,8 @@ object RelationalQueries extends QueryModule {
     // lineitem, keyed by name, vs a dim seeded from the first 50 suppliers.
     "d2_upsert_dim" -> ((s, dir) => {
       val sup = Tables.supplier(s, dir)
-      // key mint through the production two-pass rank (Warehouse
-      // appendMinted's mechanism) rather than a raw single-partition
+      // key mint through the production two-pass rank (the rank behind
+      // Warehouse's key mint) rather than a raw single-partition
       // row_number window: names are distinct, so dense rank ≡
       // row_number and the values are identical — but an initial bulk
       // load minting millions of keys never lands on one partition,

@@ -360,10 +360,11 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   /** Jobs of one incremental 2-paper commit (recovery, the loadBatch
-    * pins and the nine snapshot writes), measured 160 on Spark 4.1.2
-    * local[2]. The same +2 convention as the shuffle budgets; the
-    * lazily cached commit this replaced ran 183. */
-  private val commitJobBudget = 162
+    * pins and the nine snapshot writes), measured 106 on Spark 4.1.2
+    * local[2]. The same +2 convention as the shuffle budgets; one
+    * key-minting rank per dim (and one for the group keys) ran 160, the
+    * lazily cached commit before that 183. */
+  private val commitJobBudget = 108
 
   test("warehouse commit: job count of one incremental commit stays within budget") {
     assume(spark.version == budgetSparkVersion,
@@ -377,11 +378,22 @@ class PlanGuardSpec extends AnyFunSuite {
     whNext.select(pipeline.StreamingWarehouse.stagedSchema.fieldNames
         .map(org.apache.spark.sql.functions.col): _*)
       .coalesce(1).write.mode("append").parquet(src)
-    val jobs = QueryProfile.during(spark) {
+    val profile = QueryProfile.during(spark) {
       pipeline.StreamingWarehouse.run(spark, src, ck, stateDir); ()
-    }.jobs
-    info(s"one incremental commit: $jobs jobs (budget $commitJobBudget)")
+    }
+    val jobs = profile.jobs
+    val bySite = profile.perJob.groupBy(_.callSite).toSeq
+      .map { case (site, js) => (js.size, site) }.sortBy { case (n, s) => (-n, s) }
+    info(s"one incremental commit: $jobs jobs (budget $commitJobBudget)\n" +
+      bySite.map { case (n, site) => f"$n%4d  $site" }.mkString("\n"))
     assert(jobs <= commitJobBudget,
       s"commit ran $jobs jobs > budget $commitJobBudget")
+    // a pin's jobs name the operator that pinned, not the pin helper
+    // (nor the stream's start, the site every other commit job reports)
+    val anonymous = bySite.filter { case (_, site) =>
+      site.contains("Pins.scala") || site.contains("Ranking.scala") }
+    assert(anonymous.isEmpty, s"jobs without their caller's site: $anonymous")
+    assert(bySite.exists(_._2.startsWith("localCheckpoint at Warehouse.scala:")),
+      s"no pin job names loadBatch: $bySite")
   }
 }

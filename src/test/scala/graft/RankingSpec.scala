@@ -26,6 +26,14 @@ class RankingSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.graft.globalRankRewrite", "true")
   }
 
+  /** Run `f` with 7 shuffle partitions, so the two-pass rank spreads the
+    * 37 distinct values over several range partitions. */
+  private def with7Partitions[T](f: => T): T = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
   // an unpartitioned window renders windowspecdefinition(<sort> ASC/DESC
   // …) — partitioned ones lead with the partition column(s) then a comma
   private val unpartitioned = """windowspecdefinition\([^,]*(ASC|DESC)""".r
@@ -37,8 +45,8 @@ class RankingSpec extends AnyFunSuite {
       data.withColumn("r", dense_rank().over(Window.orderBy(col("v").desc)))
         .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     }
-    val got = Ranking.globalDenseRank(data, "v", "r", parts = 7)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val got = with7Partitions(Ranking.globalDenseRank(data, "v", "r")
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap)
     assert(got == expected)
   }
 
@@ -47,8 +55,8 @@ class RankingSpec extends AnyFunSuite {
       data.withColumn("r", dense_rank().over(Window.orderBy(col("v").asc)))
         .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     }
-    val got = Ranking.globalDenseRank(data, "v", "r", ascending = true, parts = 7)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val got = with7Partitions(Ranking.globalDenseRank(data, "v", "r", ascending = true)
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap)
     assert(got == expected)
   }
 
@@ -92,8 +100,8 @@ class RankingSpec extends AnyFunSuite {
       data.withColumn("r", rank().over(Window.orderBy(col("v").desc)))
         .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     }
-    val got = Ranking.globalRankCols(data, Seq("v"), "r", parts = 7)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val got = with7Partitions(Ranking.globalRankCols(data, Seq("v"), "r")
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap)
     assert(got == expected)
   }
 
@@ -161,12 +169,12 @@ class RankingSpec extends AnyFunSuite {
     // a lazy persist, so building + physical-planning runs nothing. (The
     // DEFAULT mode deliberately runs one eager checkpoint job instead —
     // plan truncation; see Ranking.pin.)
-    val n = jobsDuring {
-      Ranking.globalDenseRankCols(data, Seq("v"), "r", parts = 7,
+    val n = with7Partitions(jobsDuring {
+      Ranking.globalDenseRankCols(data, Seq("v"), "r",
         jobFreePlanning = true).queryExecution.executedPlan
-      Ranking.globalRankCols(data, Seq("v"), "r", parts = 7,
+      Ranking.globalRankCols(data, Seq("v"), "r",
         jobFreePlanning = true).queryExecution.executedPlan
-    }
+    })
     assert(n == 0, s"construction launched $n Spark job(s)")
   }
 

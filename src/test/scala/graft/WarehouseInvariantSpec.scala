@@ -78,6 +78,25 @@ class WarehouseInvariantSpec extends AnyFunSuite {
     assert(s.dimAuthor.filter(col("full_name") === "E Eve").count() == 1,
       "the replayed paper's new author was not minted")
 
+    // exact keys, hand-checked: each sequence continues from its own
+    // high-water mark, in natural-key order within a batch
+    def keysOf(df: DataFrame, key: String, nat: String*): Map[String, Int] =
+      df.select(concat_ws(",", nat.map(col): _*), col(key)).collect()
+        .map(r => r.getString(0) -> r.getAs[Number](1).intValue).toMap
+    assert(keysOf(s.dimDomain, "domain_key", "scientific_domain") ==
+      Map("mathematics" -> 1, "physics" -> 2, "biology" -> 3))
+    assert(keysOf(s.dimType, "type_key", "type_name") ==
+      Map("journal-article" -> 1, "preprint" -> 2))
+    assert(keysOf(s.dimVenue, "venue_key", "pub_venue", "publisher") ==
+      Map("PRD,APS" -> 1, "PRL,APS" -> 2, "arXiv,arXiv" -> 3, "Cell,CP" -> 4,
+        "AMS,AMS" -> 5))
+    assert(keysOf(s.dimAuthor, "author_key", "full_name") ==
+      Map("A Ada" -> 1, "B Bob" -> 2, "C Cy" -> 3, "D Dee" -> 4, "E Eve" -> 5))
+    assert(keysOf(s.dimAffiliation, "affiliation_key", "affiliation_name") ==
+      Map("ETH" -> 1, "MIT" -> 2, "Unknown" -> 3, "UT" -> 4))
+    assert(keysOf(s.fact, "author_group_key", "arxiv_ID") ==
+      (1 to 6).map(i => s"i$i" -> i).toMap)
+
     // every fact / bridge key resolves to a dim row
     def unresolved(df: DataFrame, k: String, dim: DataFrame, dk: String): Long =
       df.select(col(k)).join(dim.select(col(dk).as(k)), Seq(k), "left_anti").count()
