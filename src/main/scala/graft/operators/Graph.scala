@@ -347,33 +347,51 @@ object Graph {
     * `dd_simhash_wide_pairs`). */
   def jaccardSimilarity(edges: DataFrame, threshold: Double,
       maxDegree: Option[Long] = None): DataFrame = {
-    // null endpoints dropped up front: a groupBy- or join-based pair
-    // generator would otherwise treat NULL as a shared neighbor
-    val adj0 = edges.select(col("src"), col("dst"))
+    val (adj, deg) = outAdjacency(edges)
+    sharedNeighbors(adj, deg, maxDegree, count(lit(1)), "jaccard", threshold,
+      col("inter") * lit(1.0) / (col("da.deg") + col("db.deg") - col("inter")))
+  }
+
+  /** Distinct non-null out-adjacency `(src, dst)` and its out-degrees
+    * `(src, deg)`: the prep of the unweighted similarity family and of
+    * [[jaccardExcludedHubs]]. Null endpoints are dropped up front: a
+    * groupBy- or join-based pair generator would otherwise treat NULL as
+    * a shared neighbor. */
+  private def outAdjacency(edges: DataFrame): (DataFrame, DataFrame) = {
+    val adj = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
-    val degAll = adj0.groupBy("src").agg(count(lit(1)).as("deg"))
-    val (adj, deg) = maxDegree match {
-      case None => (adj0, degAll)
+    (adj, adj.groupBy("src").agg(count(lit(1)).as("deg")))
+  }
+
+  /** The shared-neighbor kernel of the node-similarity family: over the
+    * adjacency `adj0(src, dst, …)` and its per-source stats
+    * `stat0(src, deg, …)`, sources with deg > `maxDegree` leave pair
+    * generation (their stats rows with them), `pair` aggregates each
+    * source pair's shared-neighbor rows (`a.*`/`b.*`) as `inter`, and
+    * `score` — over `inter` and the pair's stats `da.*`/`db.*` — is kept
+    * as `name` where it reaches `threshold`. */
+  private def sharedNeighbors(adj0: DataFrame, stat0: DataFrame,
+      maxDegree: Option[Long], pair: Column, name: String, threshold: Double,
+      score: Column): DataFrame = {
+    val (adj, stat) = maxDegree match {
+      case None => (adj0, stat0)
       case Some(cap) =>
-        val kept = degAll.filter(col("deg") <= cap)
+        val kept = stat0.filter(col("deg") <= cap)
         (adj0.join(kept.select(col("src")), Seq("src"), "left_semi"), kept)
     }
     // pair generation stays a streamed self-join: a per-dst
     // collect_list+combination variant materializes a hub's full deg²/2
     // pair array in ONE row — an OOM on celebrity neighbors — where the
     // join emits pairs incrementally with spill.
-    val inter = adj.as("a")
+    adj.as("a")
       .join(adj.as("b"), col("a.dst") === col("b.dst") &&
         col("a.src") < col("b.src"))
       .groupBy(col("a.src").as("id_a"), col("b.src").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(deg.as("da"), col("da.src") === col("id_a"))
-      .join(deg.as("db"), col("db.src") === col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter") * lit(1.0) /
-          (col("da.deg") + col("db.deg") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .agg(pair.as("inter"))
+      .join(stat.as("da"), col("da.src") === col("id_a"))
+      .join(stat.as("db"), col("db.src") === col("id_b"))
+      .select(col("id_a"), col("id_b"), score.as(name))
+      .filter(col(name) >= threshold)
   }
 
   /** Degree assortativity (Newman 2002, "Assortative mixing in
@@ -421,27 +439,9 @@ object Graph {
     * changes — so the identical `maxDegree` hub cap is the 100× knob. */
   def overlapSimilarity(edges: DataFrame, threshold: Double,
       maxDegree: Option[Long] = None): DataFrame = {
-    val adj0 = edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
-    val degAll = adj0.groupBy("src").agg(count(lit(1)).as("deg"))
-    val (adj, deg) = maxDegree match {
-      case None => (adj0, degAll)
-      case Some(cap) =>
-        val kept = degAll.filter(col("deg") <= cap)
-        (adj0.join(kept.select(col("src")), Seq("src"), "left_semi"), kept)
-    }
-    val inter = adj.as("a")
-      .join(adj.as("b"), col("a.dst") === col("b.dst") &&
-        col("a.src") < col("b.src"))
-      .groupBy(col("a.src").as("id_a"), col("b.src").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(deg.as("da"), col("da.src") === col("id_a"))
-      .join(deg.as("db"), col("db.src") === col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter") * lit(1.0) /
-          least(col("da.deg"), col("db.deg"))).as("overlap"))
-      .filter(col("overlap") >= threshold)
+    val (adj, deg) = outAdjacency(edges)
+    sharedNeighbors(adj, deg, maxDegree, count(lit(1)), "overlap", threshold,
+      col("inter") * lit(1.0) / least(col("da.deg"), col("db.deg")))
   }
 
   /** G7 variant — weighted Jaccard Σₓ min(wₐ(x), w_b(x)) / Σₓ max(wₐ(x),
@@ -455,29 +455,14 @@ object Graph {
     * engines evaluate the identical `x * 1.0 / y` on exact BIGINTs. */
   def weightedJaccardSimilarity(edges: DataFrame, threshold: Double,
       maxDegree: Option[Long] = None): DataFrame = {
-    val adj0 = edges.select(col("src"), col("dst"), col("w"))
+    val adj = edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val statAll = adj0.groupBy("src")
+    val stat = adj.groupBy("src")
       .agg(count(lit(1)).as("deg"), sum(col("w")).as("tot"))
-    val (adj, stat) = maxDegree match {
-      case None => (adj0, statAll)
-      case Some(cap) =>
-        val kept = statAll.filter(col("deg") <= cap)
-        (adj0.join(kept.select(col("src")), Seq("src"), "left_semi"), kept)
-    }
-    val interMin = adj.as("a")
-      .join(adj.as("b"), col("a.dst") === col("b.dst") &&
-        col("a.src") < col("b.src"))
-      .groupBy(col("a.src").as("id_a"), col("b.src").as("id_b"))
-      .agg(sum(least(col("a.w"), col("b.w"))).as("smin"))
-    interMin
-      .join(stat.as("sa"), col("sa.src") === col("id_a"))
-      .join(stat.as("sb"), col("sb.src") === col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (col("smin") * lit(1.0) /
-          (col("sa.tot") + col("sb.tot") - col("smin"))).as("wjaccard"))
-      .filter(col("wjaccard") >= threshold)
+    sharedNeighbors(adj, stat, maxDegree, sum(least(col("a.w"), col("b.w"))),
+      "wjaccard", threshold,
+      col("inter") * lit(1.0) / (col("da.tot") + col("db.tot") - col("inter")))
   }
 
   /** The hub nodes a `maxDegree`-capped [[jaccardSimilarity]] excludes
@@ -485,10 +470,7 @@ object Graph {
     * capped call so the cut is observable without an eager job inside the
     * operator itself. */
   def jaccardExcludedHubs(edges: DataFrame, maxDegree: Long): DataFrame =
-    edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
-      .groupBy("src").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") > maxDegree)
+    outAdjacency(edges)._2.filter(col("deg") > maxDegree)
 
   /** G8 — bounded k-hop reachability (the `REFERENCES*1..k` pattern):
     * distinct (src, dst) pairs reachable in 1..k hops.
@@ -800,95 +782,47 @@ object Graph {
     assign.select(col("id"), col("block").as("component"))
   }
 
-  /** G6 — Brandes betweenness centrality from a sampled source set
-    * (unweighted). ALL sampled sources advance as ONE frontier DataFrame
-    * keyed by (source, id): the forward BFS and the backward dependency
-    * sweep each run one job per graph *level*, not per source × level —
-    * the per-source driver loop would serialize |sources| independent
-    * BFSs that are trivially batchable. Exact when `sources` = all nodes;
-    * sampling bounds work at scale. */
-  def betweennessSampled(edges: DataFrame, sources: Seq[Long]): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val adj = edges.select(col("src"), col("dst")).distinct().cache()
-
-    // forward: dist + sigma per (source, id) — column-renamed joins
-    // throughout; string aliases don't survive localCheckpoint'd self-joins.
-    // r17 (the kHopReach hop-frame pattern): each level is pinned once and
-    // the seen set stays a lazy UNION of those pins — no per-round re-pin
-    // of the whole accumulated set; the backward sweep reads the level
-    // frames directly instead of filtering the union.
-    val lvl0 = sources.map(s => (s, s, 0, 1.0))
-      .toDF("source", "id", "dist", "sigma").pinned
-    val levelFrames = scala.collection.mutable.ArrayBuffer(lvl0)
-    var levels = lvl0
-    var frontier = lvl0
-    var level = 0
+  /** The level loop of the batched multi-source BFS family
+    * ([[bfsDistances]], [[betweennessFixed]]'s forward pass): ALL sources
+    * advance as ONE frontier keyed by (source, id), so a level is one
+    * pin, not one per source × level. From the pinned level-0 frame
+    * `lvl0(source, id, dist, …)`, `expand(frontier, seen, dist)` builds
+    * the level at `dist` — the caller's own join, dedup and anti-join
+    * against `seen` — which is pinned; the loop stops on an empty level
+    * or after `maxDepth` levels. Returns the seen set and the level
+    * frames, indexed by dist.
+    *
+    * The seen set is re-pinned per level: a lazy union-of-pins (the
+    * kHopReach hop-frame pattern) CONCATENATES partitions, so every later
+    * anti-join scans k × 32 partitions of tiny frames, and the extra task
+    * waves cost more than the re-pin saves (measured r17: betweenness
+    * 9.2 → 10.4 s with the lazy union, BASELINE.md). kHopReach keeps the
+    * pattern because its frames are large enough to amortize. */
+  private def bfsLevels(lvl0: DataFrame, maxDepth: Int)(
+      expand: (DataFrame, DataFrame, Int) => DataFrame)
+      : (DataFrame, IndexedSeq[DataFrame]) = {
+    val levels = scala.collection.mutable.ArrayBuffer(lvl0)
+    var seen = lvl0
     var done = false
-    while (!done) {
-      val f = frontier.select(col("source").as("f_source"),
-        col("id").as("f_id"), col("sigma").as("f_sigma"))
-      val nxt = f.join(adj, col("f_id") === col("src"))
-        .select(col("f_source").as("source"), col("dst").as("id"),
-          col("f_sigma").as("sigma"))
-        .join(levels.select(col("source").as("s_seen"), col("id").as("seen")),
-          col("source") === col("s_seen") && col("id") === col("seen"),
-          "left_anti")
-        .groupBy("source", "id").agg(sum("sigma").as("sigma"))
-        .withColumn("dist", lit(level + 1))
-        .select("source", "id", "dist", "sigma")
-        .pinned
+    while (!done && levels.size <= maxDepth) {
+      val nxt = expand(levels.last, seen, levels.size).pinned
       if (nxt.isEmpty) done = true
       else {
-        levelFrames += nxt
-        // the seen set is re-pinned per level: a lazy union-of-pins
-        // CONCATENATES partitions (k levels -> k x 32-partition scans per
-        // anti-join), and the extra task waves cost more than the re-pin
-        // saves (measured r17: betweenness 9.2 -> 10.4 s with the lazy
-        // union). The backward sweep still reads levelFrames directly.
-        levels = levels.union(nxt).pinned
-        frontier = nxt
-        level += 1
+        levels += nxt
+        seen = seen.union(nxt).pinned
       }
     }
-    // backward: delta accumulation from the deepest level; sources whose
-    // BFS ended shallower simply contribute no rows at deeper levels
-    var delta = levels.select(col("source"), col("id"), lit(0.0).as("delta"))
-      .pinned
-    for (l <- level to 1 by -1) {
-      val w = levelFrames(l)
-        .select(col("source").as("w_source"), col("id").as("w_id"),
-          col("sigma").as("w_sigma"))
-        .join(delta.select(col("source").as("d_source"), col("id").as("d_id"),
-            col("delta").as("w_delta")),
-          col("w_source") === col("d_source") && col("w_id") === col("d_id"))
-        .select(col("w_source"), col("w_id"), col("w_sigma"), col("w_delta"))
-      val prev = levelFrames(l - 1)
-        .select(col("source").as("v_source"), col("id").as("v_id"),
-          col("sigma").as("v_sigma"))
-      val msgs = adj.join(w, col("dst") === col("w_id"))
-        .join(prev, col("src") === col("v_id") &&
-          col("v_source") === col("w_source"))
-        .select(col("v_source").as("source"), col("v_id").as("id"),
-          (col("v_sigma") / col("w_sigma") * (lit(1.0) + col("w_delta")))
-            .as("m"))
-        .groupBy("source", "id").agg(sum("m").as("madd"))
-      delta = delta
-        .join(msgs.select(col("source").as("m_source"), col("id").as("m_id"),
-            col("madd")),
-          col("source") === col("m_source") && col("id") === col("m_id"),
-          "left")
-        .select(col("source"), col("id"),
-          (col("delta") + coalesce(col("madd"), lit(0.0))).as("delta"))
-        .pinned
-    }
-    adj.unpersist()
-    delta.filter(col("id") =!= col("source"))
-      .groupBy("id").agg(sum("delta").as("betweenness"))
+    (seen, levels.toIndexedSeq)
   }
 
-  /** [[betweennessSampled]] in order-independent BIGINT fixed point — the
-    * oracle-checkable variant (same technique as [[pageRankFixed]]).
+  /** G6 — Brandes betweenness centrality from a sampled source set
+    * (unweighted), in order-independent BIGINT fixed point — the
+    * oracle-checkable formulation (same technique as [[pageRankFixed]]).
+    * The forward BFS ([[bfsLevels]]) and the backward dependency sweep
+    * each run one pin per graph *level* for all sources at once: a
+    * per-source driver loop would serialize |sources| independent BFSs
+    * that are trivially batchable. Exact when `sources` = all nodes;
+    * sampling bounds work at scale.
     *
     * Forward pass: σ path counts are exact BIGINTs. Backward pass: the
     * dependency δ is accumulated as `delta_fp` scaled by `scale`, each
@@ -907,51 +841,33 @@ object Graph {
     import spark.implicits._
     val adj = edges.select(col("src"), col("dst")).distinct().cache()
 
-    // r17 (the kHopReach hop-frame pattern, as in [[betweennessSampled]]):
-    // per-level pins, lazy union for the seen set, level frames read
-    // directly in the backward sweep.
+    // forward: dist + sigma per (source, id) — column-renamed joins
+    // throughout; string aliases don't survive localCheckpoint'd self-joins
     val lvl0 = sources.map(s => (s, s, 0, 1L))
       .toDF("source", "id", "dist", "sigma").pinned
-    val levelFrames = scala.collection.mutable.ArrayBuffer(lvl0)
-    var levels = lvl0
-    var frontier = lvl0
-    var level = 0
-    var done = false
-    while (!done && level < maxDepth) {
-      val f = frontier.select(col("source").as("f_source"),
-        col("id").as("f_id"), col("sigma").as("f_sigma"))
-      val nxt = f.join(adj, col("f_id") === col("src"))
+    val (reached, levelFrames) = bfsLevels(lvl0, maxDepth) { (frontier, seen, d) =>
+      frontier.select(col("source").as("f_source"), col("id").as("f_id"),
+          col("sigma").as("f_sigma"))
+        .join(adj, col("f_id") === col("src"))
         .select(col("f_source").as("source"), col("dst").as("id"),
           col("f_sigma").as("sigma"))
-        .join(levels.select(col("source").as("s_seen"), col("id").as("seen")),
+        .join(seen.select(col("source").as("s_seen"), col("id").as("seen")),
           col("source") === col("s_seen") && col("id") === col("seen"),
           "left_anti")
         .groupBy("source", "id").agg(sum("sigma").as("sigma"))
-        .withColumn("dist", lit(level + 1))
+        .withColumn("dist", lit(d))
         .select("source", "id", "dist", "sigma")
-        .pinned
-      if (nxt.isEmpty) done = true
-      else {
-        levelFrames += nxt
-        // the seen set is re-pinned per level: a lazy union-of-pins
-        // CONCATENATES partitions (k levels -> k x 32-partition scans per
-        // anti-join), and the extra task waves cost more than the re-pin
-        // saves (measured r17: betweenness 9.2 -> 10.4 s with the lazy
-        // union). The backward sweep still reads levelFrames directly.
-        levels = levels.union(nxt).pinned
-        frontier = nxt
-        level += 1
-      }
     }
-    var delta = levels.select(col("source"), col("id"), lit(0L).as("delta"))
+    var delta = reached.select(col("source"), col("id"), lit(0L).as("delta"))
       .pinned
-    // r17: sweep from the SATURATED depth, exactly like the float
-    // variant above — rounds l > level see an empty levels slice, add
-    // 0 to every delta, and still cost a full join+pin each (3 no-op
-    // rounds ≈ 1 s at sf0.1 with maxDepth=8 saturating at 5). The twin
-    // unrolls from maxDepth, where the same rounds are empty no-op CTEs;
-    // the delta values are identical either way.
-    for (l <- level to 1 by -1) {
+    // r17: sweep from the SATURATED depth — rounds l > the deepest level
+    // see an empty level, add 0 to every delta, and still cost a
+    // full join+pin each (3 no-op rounds ≈ 1 s at sf0.1 with maxDepth=8
+    // saturating at 5). The twin unrolls from maxDepth, where the same
+    // rounds are empty no-op CTEs; the delta values are identical either
+    // way. Sources whose BFS ended shallower simply contribute no rows at
+    // deeper levels.
+    for (l <- levelFrames.size - 1 to 1 by -1) {
       val w = levelFrames(l)
         .select(col("source").as("w_source"), col("id").as("w_id"),
           col("sigma").as("w_sigma"))
@@ -1193,12 +1109,20 @@ object Graph {
     *
     * One level merges the dense cores; [[louvain2]] adds the GDS-style
     * second level (graph coarsening + weighted re-run). */
-  def louvain(edges: DataFrame, rounds: Int = 6): DataFrame = {
+  def louvain(edges: DataFrame, rounds: Int = 6): DataFrame =
+    louvainLevelOne(edges, rounds)._3
+
+  /** Louvain level one, shared by [[louvain]] and [[louvain2]]: the
+    * undirected edge list ([[undirect]]), its pinned degrees, 2m, and
+    * `rounds` unit-weight [[moveRounds]]. Returns (undirected edges, 2m,
+    * level-one labels `(id, label)`). */
+  private def louvainLevelOne(edges: DataFrame,
+      rounds: Int): (DataFrame, Long, DataFrame) = {
     val und = undirect(edges)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       .pinned
     val m2 = und.count() // = 2m (each undirected edge counted both ways)
-    moveRounds(und.withColumn("w", lit(1L)), deg, m2, rounds)
+    (und, m2, moveRounds(und.withColumn("w", lit(1L)), deg, m2, rounds))
   }
 
   /** G5 depth — two-level Louvain, the shape `gds.louvain` actually runs
@@ -1240,11 +1164,7 @@ object Graph {
     * levels from the same shapes (early exit is twin-safe because
     * post-fixpoint rounds unroll as no-ops). */
   def louvain2(edges: DataFrame, rounds1: Int = 6, rounds2: Int = 6): DataFrame = {
-    val und = undirect(edges)
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .pinned
-    val m2 = und.count()
-    val l1 = moveRounds(und.withColumn("w", lit(1L)), deg, m2, rounds1)
+    val (und, m2, l1) = louvainLevelOne(edges, rounds1)
     val ce = und
       .join(l1.select(col("id").as("src"), col("label").as("csrc")), "src")
       .join(l1.select(col("id").as("dst"), col("label").as("cdst")), "dst")
@@ -1725,6 +1645,9 @@ object Graph {
     // wrapper, not a recompute, and the lock's scope ends before any
     // parent-session work. Entries whose SparkContext has stopped are
     // evicted up front (multi-context test JVMs no longer leak clones).
+    //
+    // Without the clone, g_hits runs 88 shuffle stages instead of 49
+    // (BASELINE.md "One kernel per graph family").
     val parent = edges.sparkSession
     aqeOffClones.keySet.removeIf(_.isStopped)
     val loop = aqeOffClones.computeIfAbsent(
@@ -1841,6 +1764,35 @@ object Graph {
     (init +: rounds).mkString(",\n")
   }
 
+  /** Batched multi-source BFS distance table `(source, id, dist)` —
+    * unweighted SSSP (gds.bfs / gds.shortestPath without weights): all
+    * sources advance as ONE (source, id)-keyed frontier, one pin per
+    * graph level ([[bfsLevels]]). The building block [[harmonicFixed]]
+    * aggregates; it is also a first-class result (reachability radius,
+    * distance features). `dist` = 0 for the source itself; unreached
+    * pairs are absent. No σ path counts ride along (unlike
+    * [[betweennessFixed]]'s levels): they can overflow BIGINT on dense
+    * graphs, where an ANSI sum would throw. */
+  def bfsDistances(edges: DataFrame, sources: Seq[Long],
+      maxDepth: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val adj = edges.select(col("src"), col("dst")).distinct().cache()
+    val lvl0 = sources.map(s => (s, s, 0)).toDF("source", "id", "dist").pinned
+    val (reached, _) = bfsLevels(lvl0, maxDepth) { (frontier, seen, d) =>
+      frontier.select(col("source").as("f_source"), col("id").as("f_id"))
+        .join(adj, col("f_id") === col("src"))
+        .select(col("f_source").as("source"), col("dst").as("id"))
+        .distinct()
+        .join(seen.select(col("source").as("s_source"), col("id").as("s_id")),
+          col("source") === col("s_source") && col("id") === col("s_id"),
+          "left_anti")
+        .withColumn("dist", lit(d))
+    }
+    adj.unpersist()
+    reached
+  }
+
   /** Sampled-source harmonic (closeness) centrality: for each node v,
     * Σ over sampled sources s of 1/d(s, v) — the harmonic formulation is
     * the one that stays well-defined on disconnected graphs (unreachable
@@ -1848,57 +1800,10 @@ object Graph {
     * `sources` = all nodes; a fixed sample bounds work at scale, the same
     * contract as [[betweennessFixed]].
     *
-    * BFS runs ALL sources as one (source, id)-keyed frontier — one job
-    * per graph level, not per source — and distances are exact integers;
-    * the contribution `scale DIV dist` is a truncating division, so sums
+    * Distances come from [[bfsDistances]] and are exact integers; the
+    * contribution `scale DIV dist` is a truncating division, so sums
     * are order-independent BIGINTs and the unrolled [[harmonicCtesSql]]
     * twin is bit-identical. `maxDepth` bounds the unroll on both sides. */
-  /** Batched multi-source BFS distance table `(source, id, dist)` —
-    * unweighted SSSP (gds.bfs / gds.shortestPath without weights): all
-    * sources advance as ONE (source, id)-keyed frontier, one job per
-    * graph level. The building block [[harmonicFixed]] aggregates; it is
-    * also a first-class result (reachability radius, distance features).
-    * `dist` = 0 for the source itself; unreached pairs are absent. */
-  def bfsDistances(edges: DataFrame, sources: Seq[Long],
-      maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val adj = edges.select(col("src"), col("dst")).distinct().cache()
-    // r17 note (negative result, BASELINE.md): replacing the per-round
-    // `seen.union(nxt).pinned` with a lazy union-of-pins (the kHopReach
-    // hop-frame pattern) was measured SLOWER here — the union
-    // concatenates partitions, so every later anti-join scans k×32
-    // partitions of tiny frames and the task waves cost more than the
-    // re-pin saves (betweenness 9.2 → 10.4 s). kHopReach keeps the
-    // pattern because its frames are large enough to amortize; the BFS
-    // family keeps the re-pinned running set.
-    var seen = sources.map(s => (s, s, 0))
-      .toDF("source", "id", "dist").pinned
-    var frontier = seen
-    var level = 0
-    var done = false
-    while (!done && level < maxDepth) {
-      val f = frontier.select(col("source").as("f_source"),
-        col("id").as("f_id"))
-      val nxt = f.join(adj, col("f_id") === col("src"))
-        .select(col("f_source").as("source"), col("dst").as("id"))
-        .distinct()
-        .join(seen.select(col("source").as("s_source"), col("id").as("s_id")),
-          col("source") === col("s_source") && col("id") === col("s_id"),
-          "left_anti")
-        .withColumn("dist", lit(level + 1))
-        .pinned
-      if (nxt.isEmpty) done = true
-      else {
-        seen = seen.union(nxt).pinned
-        frontier = nxt
-        level += 1
-      }
-    }
-    adj.unpersist()
-    seen
-  }
-
   def harmonicFixed(edges: DataFrame, sources: Seq[Long], maxDepth: Int,
       scale: Long = 1000000000L): DataFrame = {
     bfsDistances(edges, sources, maxDepth).filter(col("dist") >= 1)

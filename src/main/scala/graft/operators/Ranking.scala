@@ -84,7 +84,17 @@ object Ranking {
     * rank like SQL's DENSE_RANK (default null ordering); the rank joins
     * back null-safely so null-valued rows are never dropped. */
   def globalDenseRankCols(df: DataFrame, valueCols: Seq[String], rankName: String,
-      ascending: Boolean = false, jobFreePlanning: Boolean = false): DataFrame = {
+      ascending: Boolean = false, jobFreePlanning: Boolean = false): DataFrame =
+    joinBack(df, denseRankedValues(df, valueCols, rankName, ascending,
+      jobFreePlanning), valueCols, rankName)
+
+  /** The ranked distinct value set of [[globalDenseRankCols]]: one row
+    * per distinct `valueCols` combination of `df`, that combination plus
+    * its dense rank `rankName`. An input already distinct on `valueCols`
+    * takes its ranks from here, without the join back onto itself. */
+  private[graft] def denseRankedValues(df: DataFrame, valueCols: Seq[String],
+      rankName: String, ascending: Boolean,
+      jobFreePlanning: Boolean = false): DataFrame = {
     def sortCols = valueCols.map(c => if (ascending) col(c).asc else col(c).desc)
     // Pass 1: local dense rank per range partition. _pid is materialized
     // BEFORE the window's exchange; AQE may coalesce range partitions but
@@ -108,13 +118,9 @@ object Ranking {
         col("_q") < col("_pid"), "left")
       .groupBy(col("_pid"))
       .agg(coalesce(sum(col("_qn")), lit(0L)).as("_off"))
-    // value columns renamed on the rank side: the null-safe join condition
-    // then needs no self-join disambiguation, and `<=>` keeps rows whose
-    // rank value is NULL (SQL DENSE_RANK ranks them; a USING-join drops).
-    val valueRank = local.join(offsets, "_pid")
-      .select(valueCols.map(c => col(c).as(s"_v_$c")) :+
+    local.join(offsets, "_pid")
+      .select(valueCols.map(col) :+
         (col("_lr") + col("_off")).cast("int").as(rankName): _*)
-    joinBack(df, valueRank, valueCols, rankName)
   }
 
   /** Scale-safe global RANK() (gap semantics): rank = 1 + number of ROWS
@@ -141,7 +147,7 @@ object Ranking {
       .groupBy(col("_pid"))
       .agg(coalesce(sum(col("_qn")), lit(0L)).as("_off"))
     val valueRank = local.join(offsets, "_pid")
-      .select(valueCols.map(c => col(c).as(s"_v_$c")) :+
+      .select(valueCols.map(col) :+
         (col("_prior") + col("_off") + lit(1L)).cast("int").as(rankName): _*)
     joinBack(df, valueRank, valueCols, rankName)
   }
@@ -149,10 +155,15 @@ object Ranking {
   private def parts(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Null-safe value→rank join-back preserving the input's column order. */
+  /** Null-safe value→rank join-back preserving the input's column order.
+    * Value columns are renamed on the rank side: the null-safe join
+    * condition then needs no self-join disambiguation, and `<=>` keeps
+    * rows whose rank value is NULL (SQL DENSE_RANK ranks them; a
+    * USING-join drops). */
   private def joinBack(df: DataFrame, valueRank: DataFrame,
       valueCols: Seq[String], rankName: String): DataFrame =
-    df.join(valueRank,
+    df.join(valueRank.select(valueCols.map(c => col(c).as(s"_v_$c")) :+
+          col(rankName): _*),
         valueCols.map(c => col(c) <=> col(s"_v_$c")).reduce(_ && _))
       .select((df.columns.map(col) :+ col(rankName)): _*)
 }

@@ -189,8 +189,23 @@ object StreamingWarehouse {
   /** Name of the version-level commit marker: written LAST by
     * [[persistState]], after all nine tables — `paper_fact/_SUCCESS`
     * alone would accept a version whose bridge tables (written after the
-    * fact) are missing when a crash lands in that window. */
+    * fact) are missing when a crash lands in that window. It holds the
+    * state's surrogate-key high-water marks, one `name=value` line each,
+    * so a recovery need not rescan the dims and the fact to learn them;
+    * an empty marker (committed by an older build) holds none. */
   private val CommitMarker = "_GRAFT_COMMITTED"
+
+  /** The key high-water marks a version's commit marker holds; None for
+    * an empty marker. */
+  private def markedKeyMaxes(versionDir: java.io.File): Option[Map[String, Long]] = {
+    import scala.jdk.CollectionConverters._
+    val marks = java.nio.file.Files.readAllLines(
+      new java.io.File(versionDir, CommitMarker).toPath).asScala.map { l =>
+      val Array(name, value) = l.split("=", 2)
+      name -> value.toLong
+    }.toMap
+    Option.when(marks.nonEmpty)(marks)
+  }
 
   private def isCommitted(versionDir: java.io.File): Boolean =
     new java.io.File(versionDir, CommitMarker).exists()
@@ -225,7 +240,7 @@ object StreamingWarehouse {
         Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
           rd("dim_venue"), dimAuthor, rd("dim_affiliation"),
           rd("paper_fact"), rd("bridge_author_group"),
-          rd("bridge_affiliation_group"))
+          rd("bridge_affiliation_group"), markedKeyMaxes(d))
     }
 
   /** Drop all but the newest `keep` committed versions — per-batch full
@@ -288,12 +303,15 @@ object StreamingWarehouse {
       fact = roundTrip(s.fact, "paper_fact"),
       bridgeAuthor = roundTrip(s.bridgeAuthor, "bridge_author_group"),
       bridgeAffiliation = roundTrip(s.bridgeAffiliation, "bridge_affiliation_group"),
-      // the high-water marks survive the round trip driver-side; only a
-      // state recovered from disk ([[loadLatestState]]) re-bootstraps them
       keyMaxes = s.keyMaxes)
-    // commit marker LAST: recovery only selects versions that reached here
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(dir, CommitMarker))
+    // commit marker LAST: recovery only selects versions that reached
+    // here. Its marks are written aside and renamed into place, so a
+    // crash never leaves a marker that exists but is half-written.
+    val marks = java.nio.file.Paths.get(dir, CommitMarker + ".tmp")
+    java.nio.file.Files.writeString(marks, s.keyMaxes.fold("")(
+      _.map { case (name, value) => s"$name=$value\n" }.mkString))
+    java.nio.file.Files.move(marks, java.nio.file.Paths.get(dir, CommitMarker),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     out
   }
 }

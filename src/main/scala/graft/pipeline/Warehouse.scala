@@ -19,9 +19,11 @@ import graft.plans.Pins.pin
   * derives is an eager pin, and AQE runs each query stage of a pin, of
   * the one key-minting rank and of the nine snapshot writes as a job of
   * its own. Counted from the event log (Spark 4.1.2, local[4]), the
-  * streamed 5,000-paper initial commit runs 82 jobs and a 50-paper commit
-  * onto it 94; with one rank per minted dim they ran 151 and 102 (a batch
-  * bringing few new natural keys minted few dims even then).
+  * streamed 5,000-paper initial commit runs 81 jobs and a 50-paper commit
+  * onto it 85; they ran 83 and 94 while recovery rescanned the dims for
+  * the key high-water marks and the mint joined its ranks back onto its
+  * keys, and 151 and 102 with one rank per minted dim (a batch bringing
+  * few new natural keys minted few dims even then).
   *
   * State is a plain case class of DataFrames — callers persist however
   * they like (parquet dirs at test scale; Delta/Iceberg MERGE at 100 TB,
@@ -45,8 +47,9 @@ object Warehouse {
       // Surrogate-key high-water marks carried driver-side across batches:
       // with them, a micro-batch never scans the (corpus-scale) dims just
       // to learn max(key) — the per-batch action shrinks to counting the
-      // batch's freshly minted natural keys. None = unknown (state
-      // recovered from storage) → recomputed ONCE by [[keyMaxesOf]].
+      // batch's freshly minted natural keys. A recovered state reads them
+      // from its commit marker; None = unknown (a marker an older build
+      // committed) → recomputed ONCE by [[keyMaxesOf]].
       keyMaxes: Option[Map[String, Long]] = None,
       // full_names whose dim_author rows the last loadBatch changed
       // (minted ∪ touched) — the MERGE delta scope a bucket-granular
@@ -86,10 +89,11 @@ object Warehouse {
   private val keyNames = Seq("domain", "type", "venue", "author",
     "affiliation", "group")
 
-  /** Bootstrap the high-water marks from a recovered state: ONE driver
-    * action unioning six single-row max aggregates. Runs once per
-    * recovery, never per batch — [[loadBatch]] carries the maxes forward
-    * in [[State.keyMaxes]] afterwards. */
+  /** Bootstrap the high-water marks from a state that does not carry
+    * them: ONE driver action unioning six single-row max aggregates over
+    * the dims and the fact. Runs at most once per recovery, never per
+    * batch — [[loadBatch]] carries the maxes forward in
+    * [[State.keyMaxes]] afterwards. */
   def keyMaxesOf(state: State): Map[String, Long] = Seq(
     ("domain", state.dimDomain, "domain_key"),
     ("type", state.dimType, "type_key"),
@@ -152,12 +156,14 @@ object Warehouse {
     * sequence's new natural keys — distinct, one or two string columns —
     * and `maxes` its high-water mark. The sequences are tagged `_dim` (their
     * position) and pinned as ONE frame, counted by ONE action, and ranked
-    * by ONE [[graft.operators.Ranking.globalDenseRankCols]] over
-    * `(_dim, _k1, _k2)` (two-pass: a bulk load minting millions of keys
-    * never lands in a single window partition). The tag leads the order,
-    * so a key is `maxes + rank − (fresh keys of the sequences tagged
-    * before it)`: exactly the high-water mark plus its rank in its own
-    * sequence's natural-key order. No fresh key at all, no rank. */
+    * by ONE two-pass dense rank over `(_dim, _k1, _k2)` (a bulk load
+    * minting millions of keys never lands in a single window partition).
+    * Each sequence's keys are distinct, so the tagged frame is its own
+    * distinct value set and the ranked value set is the keyed frame, with
+    * no join back onto it. The tag leads the order, so a key is
+    * `maxes + rank − (fresh keys of the sequences tagged before it)`:
+    * exactly the high-water mark plus its rank in its own sequence's
+    * natural-key order. No fresh key at all, no rank. */
   private def mint(fresh: Seq[(String, DataFrame)],
       maxes: Map[String, Long]): Minted = {
     val names = fresh.map(_._1)
@@ -173,7 +179,7 @@ object Warehouse {
     val offset = typedLit(names.indices.map(i => maxes(names(i)) - before(i)))
     val keyed =
       if (counts.sum == 0) tagged.withColumn("_key", lit(null).cast("int"))
-      else pin(Ranking.globalDenseRankCols(tagged, Seq("_dim", "_k1", "_k2"),
+      else pin(Ranking.denseRankedValues(tagged, Seq("_dim", "_k1", "_k2"),
           "_rn", ascending = true)
         .select(col("_dim"), col("_k1"), col("_k2"),
           (col("_rn") + offset.getItem(col("_dim"))).cast("int").as("_key")))
@@ -216,7 +222,7 @@ object Warehouse {
 
     // High-water marks come from the carried driver-side state — a batch
     // never scans the corpus-scale dims just to learn max(key). Only a
-    // state recovered from storage (keyMaxes = None) pays the bootstrap
+    // state recovered without them (keyMaxes = None) pays the bootstrap
     // action, once.
     val maxes: Map[String, Long] = state.keyMaxes.getOrElse(keyMaxesOf(state))
 

@@ -478,8 +478,7 @@ object GraphQueries extends QueryModule {
     // (σ counts exact, δ accumulated at 1e-9 grid with truncating
     // division) → hash-checked against the unrolled BFS/dependency-sweep
     // twin. maxDepth=8 bounds the unroll on both sides (the sf0.01 graph
-    // saturates at 5). Float [[Graph.betweennessSampled]] stays as the
-    // reference formulation, spec'd in GraphSpec.
+    // saturates at 5). GraphSpec checks exact values on path graphs.
     "g_betweenness_sample" -> ((s, dir) =>
       named(Graph.betweennessFixed(refEdges(s, dir), Seq(0L, 1L, 2L, 3L, 4L),
             maxDepth = 8),

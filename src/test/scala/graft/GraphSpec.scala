@@ -350,6 +350,23 @@ class GraphSpec extends AnyFunSuite {
     assert(loose((1L, 2L)) == 1.0) // cap above every degree = uncapped
   }
 
+  test("overlap and weighted jaccard honour the degree cap like jaccard") {
+    // 1 and 2 both point at {10, 11} (deg 2); 3 points at {10} (deg 1):
+    // cap 1 leaves only node 3, cap 2 is above every degree = uncapped
+    val es = Seq((1L, 10L, 1L), (1L, 11L, 1L), (2L, 10L, 1L), (2L, 11L, 1L),
+      (3L, 10L, 1L)).toDF("src", "dst", "w")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(pairs(Graph.overlapSimilarity(es, 0.0, maxDegree = Some(1L))).isEmpty)
+    assert(pairs(Graph.weightedJaccardSimilarity(es, 0.0,
+      maxDegree = Some(1L))).isEmpty)
+    val o = pairs(Graph.overlapSimilarity(es, 0.0, maxDegree = Some(2L)))
+    assert(o == Map((1L, 2L) -> 1.0, (1L, 3L) -> 1.0, (2L, 3L) -> 1.0), s"$o")
+    val wj = pairs(Graph.weightedJaccardSimilarity(es, 0.0,
+      maxDegree = Some(2L)))
+    assert(wj((1L, 2L)) == 1.0 && math.abs(wj((1L, 3L)) - 0.5) < 1e-12, s"$wj")
+  }
+
   test("capped jaccard construction is lazy; excluded hubs observable") {
     val es = edges(1L -> 10L, 1L -> 11L, 2L -> 10L, 2L -> 11L, 3L -> 10L)
     val n = obs.QueryProfile.during(spark) {
@@ -383,13 +400,18 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("betweenness: path-graph center carries all pairs") {
-    // 1 -> 2 -> 3, plus reverse; exact Brandes from all sources.
-    val b = Graph.betweennessSampled(
-      edges(1L -> 2L, 2L -> 3L, 3L -> 2L, 2L -> 1L),
-      Seq(1L, 2L, 3L))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(b(2L) == 2.0) // on the only 1<->3 shortest paths, both directions
-    assert(b.getOrElse(1L, 0.0) == 0.0 && b.getOrElse(3L, 0.0) == 0.0)
+    // two-way path 1-2-3-4-5, exact Brandes from all sources. maxDepth 8
+    // is past the diameter (4): the BFS stops on its first empty level and
+    // the backward sweep runs 4 levels. Interior node v carries every
+    // ordered pair it separates: 2 → 2·(1·3), 3 → 2·(2·2), 4 → 2·(3·1).
+    val b = Graph.betweennessFixed(
+      edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L,
+        2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L),
+      Seq(1L, 2L, 3L, 4L, 5L), maxDepth = 8)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(b(2L) == 6000000000L && b(3L) == 8000000000L &&
+      b(4L) == 6000000000L, s"$b") // σ=1 everywhere → no truncation
+    assert(b.getOrElse(1L, 0L) == 0L && b.getOrElse(5L, 0L) == 0L, s"$b")
   }
 
   test("triangles: K4 plus a pendant, hand-computed counts and coefficients") {

@@ -154,6 +154,30 @@ class StreamingWarehouseSpec extends AnyFunSuite {
     assert(s2.keyMaxes.get == Warehouse.keyMaxesOf(s2))
   }
 
+  test("recovery reads the key high-water marks from the commit marker") {
+    val src = Files.createTempDirectory("wh-src-km").toString
+    val stateDir = Files.createTempDirectory("wh-state-km").toString
+    val selectCols = StreamingWarehouse.stagedSchema.fieldNames.map(col)
+    b1.select(selectCols: _*).coalesce(1).write.mode("append").parquet(src)
+    val s1 = StreamingWarehouse.run(spark, src,
+      Files.createTempDirectory("wh-ck-km").toString, stateDir)
+    assert(StreamingWarehouse.loadLatestState(spark, stateDir).get.keyMaxes ==
+      Some(Warehouse.keyMaxesOf(s1)))
+    // an empty marker (an older build's) carries no marks: the recovered
+    // state bootstraps them, and the next commit still mints in sequence
+    val marker = new java.io.File(stateDir).listFiles()
+      .filter(_.getName.startsWith("v")).map(_.toPath.resolve("_GRAFT_COMMITTED"))
+      .filter(Files.exists(_)).maxBy(_.getParent.getFileName.toString.drop(1).toLong)
+    Files.writeString(marker, "")
+    assert(StreamingWarehouse.loadLatestState(spark, stateDir).get.keyMaxes.isEmpty)
+    b2.select(selectCols: _*).coalesce(1).write.mode("append").parquet(src)
+    val s2 = StreamingWarehouse.run(spark, src,
+      Files.createTempDirectory("wh-ck-km2").toString, stateDir)
+    assert(s2.keyMaxes.contains(Warehouse.keyMaxesOf(s2)))
+    assert(StreamingWarehouse.loadLatestState(spark, stateDir).get.keyMaxes ==
+      s2.keyMaxes)
+  }
+
   test("a batch with duplicate ids does not overshoot the group mark") {
     // group keys are a dense rank over id: duplicate ids share one key, so
     // the carried advance must count DISTINCT ids (ADVICE r6) — the old
