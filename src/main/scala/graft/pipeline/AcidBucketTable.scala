@@ -1,11 +1,10 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.StateDirs
 
 /** Bucket-granular copy-on-write MERGE on plain parquet — the
   * COVERAGE.md §2.9 Delta/Iceberg mapping implemented with public Spark
@@ -17,11 +16,11 @@ import org.apache.spark.sql.functions._
   *    rewrites ONLY the buckets its update keys land in. A batch
   *    touching 0.1% of authors rewrites ~min(nBuckets, |touched|)
   *    buckets, not the table — `dim_author`'s full snapshot per batch
-  *    under `persistState` is gone (the other eight state tables are
-  *    still snapshotted whole).
+  *    of the versioned warehouse state is gone (the other eight state
+  *    tables are still snapshotted whole).
   *  - **Atomic commit + snapshot isolation**: data files land under
   *    `v=<version>/_b=<bucket>/`, then a commit record (the buckets that
-  *    version wrote) is moved into `_commits/` with ATOMIC_MOVE. Readers
+  *    version wrote) is renamed into `_commits/` whole. Readers
   *    resolve each bucket to its newest COMMITTED version — a crash
   *    mid-write leaves an orphan data dir that no reader ever sees.
   *  - **Idempotent replay + time travel**: re-merging an
@@ -38,33 +37,25 @@ class AcidBucketTable(spark: SparkSession, dir: String,
     keyCols: Seq[String], nBuckets: Int) {
   require(nBuckets > 0, s"AcidBucketTable: nBuckets must be positive")
 
-  private def commitsDir: Path = Paths.get(dir, "_commits")
+  private val dirs = StateDirs(spark, dir)
+
+  private val commitsDir = s"$dir/_commits"
 
   private def bucketOf: Column =
     pmod(hash(keyCols.map(col): _*), lit(nBuckets))
 
   /** Committed (version, buckets-written) records, version-ascending. */
   def commits(): Seq[(Long, Seq[Int])] =
-    if (!Files.isDirectory(commitsDir)) Seq.empty
-    else {
-      val ls = Files.list(commitsDir)
-      try ls.iterator().asScala
-        .flatMap { p =>
-          val name = p.getFileName.toString
-          if (!name.startsWith("v")) None
-          else name.drop(1).toLongOption.map { v =>
-            val content = Files.readString(p).trim
-            (v, if (content.isEmpty) Seq.empty[Int]
-                else content.split(",").toSeq.map(_.trim.toInt))
-          }
-        }.toSeq.sortBy(_._1)
-      finally ls.close()
+    dirs.numbered(commitsDir, "v", files = true).map { case (v, p) =>
+      val content = dirs.readMarker(p).trim
+      (v, if (content.isEmpty) Seq.empty[Int]
+          else content.split(",").toSeq.map(_.trim.toInt))
     }
 
   def latestVersion: Option[Long] = commits().lastOption.map(_._1)
 
   private def committed(version: Long): Boolean =
-    Files.exists(commitsDir.resolve(s"v$version"))
+    dirs.committed(new Path(commitsDir), s"v$version")
 
   /** Newest-committed data path per bucket (≤ `asOf` when set),
     * restricted to `only` when set. */
@@ -105,14 +96,9 @@ class AcidBucketTable(spark: SparkSession, dir: String,
     commit(version, touched)
   }
 
-  private def commit(version: Long, buckets: Set[Int]): Unit = {
-    Files.createDirectories(commitsDir)
-    val tmp = commitsDir.resolve(s".v$version.tmp")
-    Files.writeString(tmp, buckets.toSeq.sorted.mkString(","))
-    Files.move(tmp, commitsDir.resolve(s"v$version"),
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  private def commit(version: Long, buckets: Set[Int]): Unit =
+    dirs.writeMarker(new Path(commitsDir, s"v$version"),
+      buckets.toSeq.sorted.mkString(","))
 
   /** Drop data dirs no snapshot ≥ the `keep`-th-newest commit can reach
     * (and orphan dirs of never-committed versions older than the newest
@@ -132,40 +118,17 @@ class AcidBucketTable(spark: SparkSession, dir: String,
         case (acc, (cv, bs)) => acc ++ bs.map(_ -> cv)
       }.toSeq.map { case (b, cv) => (cv, b) }
     }.toSet
-    val base = Paths.get(dir)
-    if (!Files.isDirectory(base)) return
     val committedVs = cs.map(_._1).toSet
     val newestCommit = cs.last._1
-    def rmTree(p: Path): Unit = {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally walk.close()
-    }
-    val ls = Files.list(base)
-    try ls.iterator().asScala
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("v="))
-      .foreach { vdir =>
-        vdir.getFileName.toString.drop(2).toLongOption.foreach { v =>
-          if (!committedVs.contains(v)) {
-            if (v < newestCommit) rmTree(vdir) // dead uncommitted orphan
-          } else if (v < horizon) {
-            val bs = Files.list(vdir)
-            try bs.iterator().asScala
-              .filter(p => p.getFileName.toString.startsWith("_b="))
-              .foreach { bdir =>
-                bdir.getFileName.toString.drop(3).toIntOption.foreach { b =>
-                  if (!reachable.contains((v, b))) rmTree(bdir)
-                }
-              }
-            finally bs.close()
-            val rest = Files.list(vdir)
-            val empty = try !rest.iterator().asScala.exists(
-              _.getFileName.toString.startsWith("_b=")) finally rest.close()
-            if (empty) rmTree(vdir)
-          }
-        }
+    dirs.numbered(dir, "v=").foreach { case (v, vdir) =>
+      if (!committedVs.contains(v)) {
+        if (v < newestCommit) dirs.rm(vdir) // dead uncommitted orphan
+      } else if (v < horizon) {
+        val buckets = dirs.numbered(vdir.toString, "_b=")
+        val (live, dead) = buckets.partition(b => reachable((v, b._1.toInt)))
+        dead.foreach(b => dirs.rm(b._2))
+        if (live.isEmpty) dirs.rm(vdir)
       }
-    finally ls.close()
+    }
   }
 }

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+
+import graft.streaming.StateDirs
 
 /** SURVEY §3.2 / §7 step 9 — the reference's warehouse-load DAG as one
   * Structured Streaming pipeline: staged paper batches arrive as files,
@@ -64,7 +66,7 @@ object StreamingWarehouse {
       checkpointDir: String, stateDir: String,
       numPartitions: Int = 4): Warehouse.State =
     drive(spark, connector(spark, landedDir, numPartitions), checkpointDir,
-      stateDir, None)(parsePayloads(stateDir))
+      stateDir, None)(StateDirs.parsePayloads(_, stagedSchema, stateDir, _))
 
   /** Bucket-granular variant of [[run]] (VERDICT r7 #3, reference
     * `dags/pop_DWH.py:296–302`): `dim_author` — the Type-1 touched-author
@@ -101,7 +103,7 @@ object StreamingWarehouse {
       numPartitions: Int = 4): Warehouse.State =
     drive(spark, connector(spark, landedDir, numPartitions), checkpointDir,
       stateDir, Some(authorTable(spark, stateDir, nBuckets)))(
-      parsePayloads(stateDir))
+      StateDirs.parsePayloads(_, stagedSchema, stateDir, _))
 
   private def files(spark: SparkSession, srcDir: String): DataFrame =
     spark.readStream.schema(stagedSchema)
@@ -114,18 +116,6 @@ object StreamingWarehouse {
       .option("dir", landedDir)
       .option("numPartitions", numPartitions.toString)
       .load()
-
-  /** A connector micro-batch's staged papers; its null payloads
-    * dead-letter to `stateDir/dead/batch_id=<id>` first. */
-  private def parsePayloads(stateDir: String)(apiBatch: DataFrame,
-      batchId: Long): DataFrame = {
-    apiBatch.filter(col("payload").isNull).select(col("id"))
-      .write.mode("overwrite")
-      .parquet(s"$stateDir/dead/batch_id=$batchId")
-    apiBatch.filter(col("payload").isNotNull)
-      .select(from_json(col("payload"), stagedSchema).as("p"))
-      .select(col("p.*"))
-  }
 
   /** Run `stream` to completion, committing each micro-batch's staged
     * papers (`stage`) onto the state recovered from `stateDir`;
@@ -156,13 +146,17 @@ object StreamingWarehouse {
     // fresh checkpoint, batch ids restart at 0 and writing v0 would
     // overwrite the directory the recovered state is lazily reading
     // (a self-overwrite that fails mid-scan)
-    val next = versions(stateDir).lastOption.fold(0L)(_._1 + 1)
+    val dirs = StateDirs(spark, stateDir)
+    val next = dirs.numbered(stateDir, "v").lastOption.fold(0L)(_._1 + 1)
     // RDDs persisted before this batch (a recovered state's, a user's
     // own) are out of scope for the post-commit sweep below
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val committed = persist(Warehouse.loadBatch(spark, state, batch),
+    val committed = persist(dirs, Warehouse.loadBatch(spark, state, batch),
       s"$stateDir/v$next", authors.map(_ -> next))
-    pruneOldVersions(stateDir, keep = 2)
+    // per-batch full rewrites are the plain-parquet Type-1 reality (an
+    // ACID table format MERGEs instead): without pruning the directory
+    // grows one complete warehouse copy per batch
+    dirs.prune(stateDir, "v", CommitMarker, keep = 2)
     authors.foreach(_.vacuum(keep = 2))
     // release the batch's localCheckpoint blocks (loadBatch's pins and
     // the key-minting rank's eager boundary pin): the catalog never
@@ -187,36 +181,13 @@ object StreamingWarehouse {
       Seq("full_name"), nBuckets)
 
   /** Name of the version-level commit marker: written LAST by
-    * [[persistState]], after all nine tables — `paper_fact/_SUCCESS`
+    * [[persist]], after all nine tables — `paper_fact/_SUCCESS`
     * alone would accept a version whose bridge tables (written after the
     * fact) are missing when a crash lands in that window. It holds the
     * state's surrogate-key high-water marks, one `name=value` line each,
     * so a recovery need not rescan the dims and the fact to learn them;
     * an empty marker (committed by an older build) holds none. */
   private val CommitMarker = "_GRAFT_COMMITTED"
-
-  /** The key high-water marks a version's commit marker holds; None for
-    * an empty marker. */
-  private def markedKeyMaxes(versionDir: java.io.File): Option[Map[String, Long]] = {
-    import scala.jdk.CollectionConverters._
-    val marks = java.nio.file.Files.readAllLines(
-      new java.io.File(versionDir, CommitMarker).toPath).asScala.map { l =>
-      val Array(name, value) = l.split("=", 2)
-      name -> value.toLong
-    }.toMap
-    Option.when(marks.nonEmpty)(marks)
-  }
-
-  private def isCommitted(versionDir: java.io.File): Boolean =
-    new java.io.File(versionDir, CommitMarker).exists()
-
-  /** Every `v<N>` state version directory, committed or not,
-    * version-ascending. */
-  private def versions(stateDir: String): Seq[(Long, java.io.File)] =
-    Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("v"))
-      .flatMap(d => d.getName.drop(1).toLongOption.map(_ -> d))
-      .sortBy(_._1).toSeq
 
   /** Newest state version that fully committed (all tables written). */
   def loadLatestState(spark: SparkSession, stateDir: String): Option[Warehouse.State] =
@@ -230,56 +201,31 @@ object StreamingWarehouse {
     recover(spark, stateDir, Some(authorTable(spark, stateDir, nBuckets)))
 
   private def recover(spark: SparkSession, stateDir: String,
-      authors: Option[AcidBucketTable]): Option[Warehouse.State] =
-    versions(stateDir).filter(v => isCommitted(v._2)).lastOption.map {
-      case (v, d) =>
-        def rd(name: String) = spark.read.parquet(s"${d.getPath}/$name")
-        val dimAuthor = authors.fold(rd("dim_author"))(_.read(asOf = Some(v))
-          .getOrElse(sys.error(
-            s"runBucketed state v$v committed but no author commit <= $v")))
-        Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
-          rd("dim_venue"), dimAuthor, rd("dim_affiliation"),
-          rd("paper_fact"), rd("bridge_author_group"),
-          rd("bridge_affiliation_group"), markedKeyMaxes(d))
+      authors: Option[AcidBucketTable]): Option[Warehouse.State] = {
+    val dirs = StateDirs(spark, stateDir)
+    dirs.newestCommitted(stateDir, "v", CommitMarker).map { case (v, d) =>
+      def rd(name: String) = spark.read.parquet(s"$d/$name")
+      val dimAuthor = authors.fold(rd("dim_author"))(_.read(asOf = Some(v))
+        .getOrElse(sys.error(
+          s"runBucketed state v$v committed but no author commit <= $v")))
+      val marks = dirs.readMarker(new Path(d, CommitMarker)).linesIterator
+        .map { l =>
+          val Array(name, value) = l.split("=", 2)
+          name -> value.toLong
+        }.toMap
+      Warehouse.State(rd("dim_year"), rd("dim_domain"), rd("dim_type"),
+        rd("dim_venue"), dimAuthor, rd("dim_affiliation"),
+        rd("paper_fact"), rd("bridge_author_group"),
+        rd("bridge_affiliation_group"), Option.when(marks.nonEmpty)(marks))
     }
-
-  /** Drop all but the newest `keep` committed versions — per-batch full
-    * rewrites are the plain-parquet Type-1 reality (an ACID table format
-    * MERGEs instead); without pruning the directory grows one complete
-    * warehouse copy per batch. */
-  private def pruneOldVersions(stateDir: String, keep: Int): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    // Only COMMITTED versions count toward `keep`: crashed partial dirs must
-    // not displace the recovery copies (two crashes would otherwise leave a
-    // single committed snapshot plus junk). Uncommitted dirs older than the
-    // newest committed version are dead — no recovery selects them — so they
-    // are removed unconditionally; a newer uncommitted dir may be a write in
-    // flight and is left alone.
-    val (committed, uncommitted) = versions(stateDir).partition(v => isCommitted(v._2))
-    committed.dropRight(keep).foreach { case (_, d) => rm(d) }
-    val newestCommitted = committed.lastOption.map(_._1).getOrElse(Long.MinValue)
-    uncommitted.filter(_._1 < newestCommitted).foreach { case (_, d) => rm(d) }
   }
 
   /** Write every state table as parquet and reload — truncates lineage
     * (the incremental fold would otherwise stack one plan per batch) and
-    * is the durable hand-off a restart recovers from. */
-  def persistState(s: Warehouse.State, dir: String): Warehouse.State =
-    persist(s, dir, None)
-
-  /** [[persistState]] for [[runBucketed]]: MERGE the touched-author delta
-    * into the bucket table (same version, FIRST), snapshot the other
-    * eight tables, commit marker last. */
-  def persistStateBucketed(s: Warehouse.State, dir: String, version: Long,
-      authors: AcidBucketTable): Warehouse.State =
-    persist(s, dir, Some(authors -> version))
-
-  /** `authorMerge` set = `dim_author` goes through that bucket table's
-    * MERGE at that version instead of a snapshot of its own. */
-  private def persist(s: Warehouse.State, dir: String,
+    * is the durable hand-off a restart recovers from. `authorMerge` set =
+    * `dim_author` goes through that bucket table's MERGE at that version
+    * (FIRST) instead of a snapshot of its own. */
+  private def persist(dirs: StateDirs, s: Warehouse.State, dir: String,
       authorMerge: Option[(AcidBucketTable, Long)]): Warehouse.State = {
     authorMerge.foreach { case (authors, version) =>
       authors.merge(s.touchedAuthors match {
@@ -304,14 +250,9 @@ object StreamingWarehouse {
       bridgeAuthor = roundTrip(s.bridgeAuthor, "bridge_author_group"),
       bridgeAffiliation = roundTrip(s.bridgeAffiliation, "bridge_affiliation_group"),
       keyMaxes = s.keyMaxes)
-    // commit marker LAST: recovery only selects versions that reached
-    // here. Its marks are written aside and renamed into place, so a
-    // crash never leaves a marker that exists but is half-written.
-    val marks = java.nio.file.Paths.get(dir, CommitMarker + ".tmp")
-    java.nio.file.Files.writeString(marks, s.keyMaxes.fold("")(
+    // commit marker LAST: recovery only selects versions that reached here
+    dirs.writeMarker(new Path(dir, CommitMarker), s.keyMaxes.fold("")(
       _.map { case (name, value) => s"$name=$value\n" }.mkString))
-    java.nio.file.Files.move(marks, java.nio.file.Paths.get(dir, CommitMarker),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     out
   }
 }

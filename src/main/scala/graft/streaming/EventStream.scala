@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -142,34 +141,13 @@ object EventStream {
           val batchSig = Dedup.minHashSignatures(docs, col("doc_id"),
               col("text"), shingleN, k)
             .join(docs.select(col("doc_id"), col("ts")), "doc_id")
-          // prior state: committed batch dirs with id STRICTLY BELOW this
-          // batch's — excludes both a crashed earlier attempt of the same
-          // id (must not pair a batch against itself) and "future" dirs
-          // from a previous stream run when the whole stream is replayed
-          // under a fresh checkpoint (reading those would make replayed
-          // output depend on state the original run hadn't seen yet)
-          val stateBase = Paths.get(stateDir)
-          val priorDirs =
-            if (!Files.exists(stateBase)) Seq.empty[String]
-            else {
-              val ds = Files.list(stateBase)
-              try {
-                import scala.jdk.CollectionConverters._
-                ds.iterator().asScala
-                  .filter { p =>
-                    val name = p.getFileName.toString
-                    Files.isDirectory(p) && name.startsWith("batch_id=") &&
-                    name.drop("batch_id=".length).toLongOption
-                      .exists(_ < batchId) &&
-                    Files.exists(p.resolve("_SUCCESS"))
-                  }
-                  .map(_.toString).toSeq
-              } finally ds.close()
-            }
+          val dirs = StateDirs(spark, stateDir)
+          val priorDirs = dirs.committedBelow(stateDir, batchId)
           val union =
             if (priorDirs.isEmpty) batchSig
             else batchSig.unionByName(
-              spark.read.parquet(priorDirs: _*).filter(col("ts") >= cutoff))
+              spark.read.parquet(priorDirs.map(_.toString): _*)
+                .filter(col("ts") >= cutoff))
           val batchIds = docs.select(col("doc_id")).distinct()
           // band the union, keep only pairs touching this batch (old-old
           // pairs were flagged when their younger member arrived)
@@ -185,25 +163,12 @@ object EventStream {
             minMatches)
           flagged.write.mode("overwrite")
             .parquet(s"$outDir/batch_id=$batchId")
-          batchSig.write.mode("overwrite")
-            .parquet(s"$stateDir/batch_id=$batchId")
-          Files.writeString(
-            Paths.get(s"$stateDir/batch_id=$batchId/_MAXTS"),
-            maxTs.toInstant.toEpochMilli.toString)
+          val own = s"$stateDir/batch_id=$batchId"
+          dirs.overwrite(batchSig, own)
+          dirs.writeMaxTs(own, maxTs.toInstant.toEpochMilli)
           // sweep state dirs wholly behind the horizon (marker-only reads)
           val cutoffMs = cutoff.toInstant.toEpochMilli
-          priorDirs.foreach { d =>
-            val marker = Paths.get(d, "_MAXTS")
-            if (Files.exists(marker) &&
-                Files.readString(marker).trim.toLong < cutoffMs) {
-              val walk = Files.walk(Paths.get(d))
-              try {
-                import scala.jdk.CollectionConverters._
-                walk.sorted(java.util.Comparator.reverseOrder())
-                  .iterator().asScala.foreach(Files.delete)
-              } finally walk.close()
-            }
-          }
+          dirs.expired(priorDirs, _ < cutoffMs).foreach(dirs.rm)
         }
         ()
       }
@@ -391,16 +356,17 @@ object StreamingSessions {
 }
 
 /** A Type-1-upsert parquet table (SURVEY §2.9 D2–D5 on plain parquet):
-  * versioned directories + a pointer file stand in for ACID MERGE
-  * (Delta/Iceberg at real scale — same logical flow). Re-applying a batch
-  * id is a no-op → idempotent under streaming retries. */
+  * one directory per batch id, `v<batchId>`, stands in for ACID MERGE
+  * (Delta/Iceberg at real scale — same logical flow); the current table
+  * is the newest committed one. Re-applying a batch id is a no-op →
+  * idempotent under streaming retries. */
 class ParquetUpsertTable(spark: SparkSession, dir: String,
     keyCol: String, valueCols: Seq[String]) {
 
-  private def pointer = Paths.get(dir, "_CURRENT")
+  private val dirs = StateDirs(spark, dir)
 
   def currentVersion: Option[String] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim) else None
+    dirs.newestCommitted(dir, "v").map { case (v, _) => s"v$v" }
 
   def current: Option[DataFrame] =
     currentVersion.map(v => spark.read.parquet(s"$dir/$v"))
@@ -416,7 +382,7 @@ class ParquetUpsertTable(spark: SparkSession, dir: String,
     // replay guard keys on the writer's COMMIT marker, not bare directory
     // existence — a crashed partial write leaves the dir without _SUCCESS
     // and must be redone, or the batch would be silently lost
-    if (Files.exists(Paths.get(dir, version, "_SUCCESS"))) return
+    if (dirs.committed(new Path(dir, version))) return
     val merged = current match {
       case None =>
         updates.select(col(keyCol) +: valueCols.map(col): _*)
@@ -432,8 +398,6 @@ class ParquetUpsertTable(spark: SparkSession, dir: String,
               coalesce(m, col(s"old_$c"), col(s"new_$c")).as(c)
             }: _*)
     }
-    merged.write.mode("overwrite").parquet(s"$dir/$version")
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(pointer, version)
+    dirs.overwrite(merged, s"$dir/$version")
   }
 }

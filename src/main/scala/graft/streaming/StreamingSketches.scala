@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -152,56 +152,27 @@ object StreamingSketches {
     q.awaitTermination()
   }
 
-  // ---- state-directory plumbing (Hadoop FileSystem, so non-local
-  // deployments work — ADVICE r13) ------------------------------------
-
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def listDirs(fs: FileSystem, base: Path): Seq[Path] =
-    if (fs.exists(base))
-      fs.listStatus(base).filter(_.isDirectory).map(_.getPath).toSeq
-    else Seq.empty
-
-  private def batchIdOf(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
-    else None
-  }
-
-  private def compactIdOf(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("compact_upto="))
-      n.stripPrefix("compact_upto=").toLongOption
-    else None
-  }
-
-  /** A compact directory is live only once its `_SUCCESS` marker exists
-    * — a crash mid-write leaves a partial directory that readers and
-    * the next compaction ignore (and the latter deletes). */
-  private def isCommitted(fs: FileSystem, p: Path): Boolean =
-    fs.exists(new Path(p, "_SUCCESS"))
-
   /** The directories a reader merges: the newest committed compact (if
     * any) plus every batch directory ABOVE its horizon. Batch dirs at
     * or below the horizon are superseded — present only if a crash
     * interrupted compaction cleanup or a replayed batch re-wrote its
     * dir after being compacted; their content is already inside the
-    * compact, so merging them would double-count the SUM families. */
+    * compact, so merging them would double-count the SUM families. The
+    * batch dirs are listed BEFORE the horizon is resolved: a compaction
+    * landing between the two listings then only raises the horizon over
+    * batches it folded, never hides batches it did not. */
   private def liveDirs(spark: SparkSession, stateDir: String,
       sketch: String): Seq[String] = {
-    val base = new Path(s"$stateDir/$sketch")
-    val fs = fsOf(spark, stateDir)
-    val dirs = listDirs(fs, base)
-    val horizon = dirs.filter(p => compactIdOf(p).isDefined &&
-        isCommitted(fs, p))
-      .flatMap(compactIdOf).maxOption
-    val compactDir = horizon.toSeq.map(h =>
-      new Path(base, s"compact_upto=$h").toString)
-    val batches = dirs.filter(p =>
-      batchIdOf(p).exists(id => horizon.forall(id > _)))
-    compactDir ++ batches.map(_.toString)
+    val base = s"$stateDir/$sketch"
+    val dirs = StateDirs(spark, stateDir)
+    val batches = dirs.numbered(base, StateDirs.BatchPrefix)
+    val compact = dirs.newestCommitted(base, CompactPrefix)
+    compact.toSeq.map(_._2.toString) ++ batches.collect {
+      case (id, p) if compact.forall(id > _._1) => p.toString
+    }
   }
+
+  private val CompactPrefix = "compact_upto="
 
   /** Does this failure mean a listed state directory/file vanished
     * under us (the reader-vs-compaction race)? Walks the cause chain:
@@ -313,80 +284,61 @@ object StreamingSketches {
     * nodes), so churn can't grow them. */
   def compact(spark: SparkSession, stateDir: String,
       upToBatchId: Long, trim: Boolean = false): Unit = {
-    val fs = fsOf(spark, stateDir)
+    val dirs = StateDirs(spark, stateDir)
     Families.foreach { sketch =>
-      val base = new Path(s"$stateDir/$sketch")
-      if (fs.exists(base)) {
-        val dirs = listDirs(fs, base)
-        val prevHorizon = dirs.filter(p => compactIdOf(p).isDefined &&
-            isCommitted(fs, p))
-          .flatMap(compactIdOf).maxOption
-        val newBatches = dirs.filter(p => batchIdOf(p).exists(id =>
-          prevHorizon.forall(id > _) && id <= upToBatchId))
-        if (newBatches.exists(p => fs.exists(new Path(p, "_MAXTS"))))
-          throw new IllegalStateException(
-            s"compact() on windowed state ($base): windowed sketches are " +
-              "bounded by the _MAXTS sweep, not compaction")
-        val horizon = if (newBatches.nonEmpty) {
-          val inputs = (prevHorizon.toSeq.map(h =>
-              new Path(base, s"compact_upto=$h")) ++ newBatches)
-            .map(p => spark.read.parquet(p.toString))
-          val summed = sketch match {
-            case "hll"   => Sketches.mergeRegisters(inputs)
-            case "cm"    => Sketches.cmMerge(inputs)
-            case "bloom" => Sketches.bfMerge(inputs)
-            case "qd" => inputs.reduce(_ unionByName _)
-              .groupBy(col("grp"), col("lvl"), col("id"))
-              .agg(sum(col("cnt")).as("cnt"))
-            case "qdtot" => inputs.reduce(_ unionByName _)
-              .groupBy(col("grp")).agg(sum(col("n")).as("n"))
-            case "mg" => inputs.reduce(_ unionByName _)
-              .groupBy(col("grp"), col("key"))
-              .agg(sum(col("cnt")).as("cnt"))
-            case "ps" | "vo" => inputs.reduce(_ unionByName _)
-              .groupBy(col("grp"), col("key"))
-              .agg(sum(col("w")).as("w"))
-          }
-          val merged = sketch match {
-            case "mg" if trim => Sketches.mgTrim(summed)
-            case "ps" if trim => Sketches.psTrim(summed)
-            case "vo" if trim => Sketches.voTrimState(summed)
-            case _ => summed
-          }
-          // one file: the compact is the long-lived directory every read
-          // opens — keep its footer count at 1
-          val newCompact = new Path(base, s"compact_upto=$upToBatchId")
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(newCompact.toString)
-          // ADVICE r14: readers treat a compact as live only once its
-          // _SUCCESS marker exists — if the committer is configured not
-          // to write markers (mapreduce.fileoutputcommitter
-          // .marksuccessfuljobs=false, common on object stores), every
-          // compact would be invisible while its inputs were deleted:
-          // silent, permanent loss of all sketch state. Fail LOUDLY
-          // before any cleanup instead; the batch dirs are intact and a
-          // correctly-configured committer can re-run the compaction.
-          if (!isCommitted(fs, newCompact))
-            throw new IllegalStateException(
-              s"compact(): $newCompact has no _SUCCESS marker after the " +
-                "write — the output committer is configured without " +
-                "success markers, so the compact would be invisible to " +
-                "readers while its inputs were deleted. Aborting before " +
-                "cleanup; state is intact. Set mapreduce" +
-                ".fileoutputcommitter.marksuccessfuljobs=true for this " +
-                "state dir.")
-          upToBatchId
-        } else prevHorizon.getOrElse(-1L)
-        // cleanup (idempotent — a replay that skipped the rewrite still
-        // sweeps leftovers from a crash after a prior write): superseded
-        // batch dirs, older compacts, and partial compacts below the
-        // live horizon
-        listDirs(fs, base).foreach { p =>
-          val stale = batchIdOf(p).exists(_ <= horizon) ||
-            compactIdOf(p).exists(id => id < horizon ||
-              (id <= horizon && !isCommitted(fs, p)))
-          if (stale) fs.delete(p, true)
+      val base = s"$stateDir/$sketch"
+      val prevHorizon = dirs.newestCommitted(base, CompactPrefix).map(_._1)
+      val newBatches = dirs.numbered(base, StateDirs.BatchPrefix).collect {
+        case (id, p) if prevHorizon.forall(id > _) && id <= upToBatchId => p
+      }
+      // windowed batch dirs are the ones that carry a _MAXTS mark
+      if (newBatches.exists(dirs.committed(_, StateDirs.MaxTs)))
+        throw new IllegalStateException(
+          s"compact() on windowed state ($base): windowed sketches are " +
+            "bounded by the _MAXTS sweep, not compaction")
+      val horizon = if (newBatches.nonEmpty) {
+        val inputs = (prevHorizon.toSeq.map(h => s"$base/$CompactPrefix$h") ++
+            newBatches.map(_.toString))
+          .map(spark.read.parquet(_))
+        val summed = sketch match {
+          case "hll"   => Sketches.mergeRegisters(inputs)
+          case "cm"    => Sketches.cmMerge(inputs)
+          case "bloom" => Sketches.bfMerge(inputs)
+          case "qd" => inputs.reduce(_ unionByName _)
+            .groupBy(col("grp"), col("lvl"), col("id"))
+            .agg(sum(col("cnt")).as("cnt"))
+          case "qdtot" => inputs.reduce(_ unionByName _)
+            .groupBy(col("grp")).agg(sum(col("n")).as("n"))
+          case "mg" => inputs.reduce(_ unionByName _)
+            .groupBy(col("grp"), col("key"))
+            .agg(sum(col("cnt")).as("cnt"))
+          case "ps" | "vo" => inputs.reduce(_ unionByName _)
+            .groupBy(col("grp"), col("key"))
+            .agg(sum(col("w")).as("w"))
         }
+        val merged = sketch match {
+          case "mg" if trim => Sketches.mgTrim(summed)
+          case "ps" if trim => Sketches.psTrim(summed)
+          case "vo" if trim => Sketches.voTrimState(summed)
+          case _ => summed
+        }
+        // one file: the compact is the long-lived directory every read
+        // opens — keep its footer count at 1. Readers treat a compact as
+        // live only once its _SUCCESS marker exists, so under a
+        // marker-less committer every compact would be invisible while
+        // its inputs were deleted: `overwrite` throws before any cleanup
+        // instead, and the batch dirs stay intact.
+        dirs.overwrite(merged.coalesce(1), s"$base/$CompactPrefix$upToBatchId")
+        upToBatchId
+      } else prevHorizon.getOrElse(-1L)
+      // cleanup (idempotent — a replay that skipped the rewrite still
+      // sweeps leftovers from a crash after a prior write): superseded
+      // batch dirs, older compacts, and partial compacts below the
+      // live horizon
+      dirs.numbered(base, StateDirs.BatchPrefix)
+        .foreach { case (id, p) => if (id <= horizon) dirs.rm(p) }
+      dirs.numbered(base, CompactPrefix).foreach { case (id, p) =>
+        if (id < horizon || (id == horizon && !dirs.committed(p))) dirs.rm(p)
       }
     }
   }
@@ -550,7 +502,7 @@ object StreamingSketches {
         // no state (an unmarked dir would dodge the sweep forever)
         val maxTs = batch.agg(max(col("ts"))).collect()(0).getTimestamp(0)
         if (maxTs != null) {
-          val fs = fsOf(spark, stateDir)
+          val dirs = StateDirs(spark, stateDir)
           val keyed = batch.filter(col("ts").isNotNull).select(
             concat(date_format(date_trunc("hour", col("ts")),
               "yyyy-MM-dd HH"), lit("|"), col("grp")).as("grp"),
@@ -580,36 +532,18 @@ object StreamingSketches {
             .write.mode("overwrite")
             .parquet(s"$stateDir/vo/batch_id=$batchId")
           val hwMs = maxTs.toInstant.toEpochMilli
-          writeMarker(fs,
-            new Path(s"$stateDir/qd/batch_id=$batchId/_MAXTS"), hwMs)
+          dirs.writeMaxTs(s"$stateDir/qd/batch_id=$batchId", hwMs)
           val cutoffMs = hwMs - horizonHours * 3600000L
-          listDirs(fs, new Path(s"$stateDir/qd")).foreach { d =>
-            val id = batchIdOf(d)
-            val marker = new Path(d, "_MAXTS")
-            if (id.exists(_ < batchId) && fs.exists(marker)) {
-              val m = readMarker(fs, marker)
-              val windowEndMs = (m / 3600000L + 1L) * 3600000L
-              if (windowEndMs <= cutoffMs)
-                WindowedFamilies.foreach(s => fs.delete(
-                  new Path(s"$stateDir/$s/${d.getName}"), true))
-            }
+          def windowEndMs(ms: Long) = (ms / 3600000L + 1L) * 3600000L
+          dirs.expired(dirs.batchesBelow(s"$stateDir/qd", batchId),
+              windowEndMs(_) <= cutoffMs).foreach { d =>
+            WindowedFamilies.foreach(s =>
+              dirs.rm(new Path(s"$stateDir/$s/${d.getName}")))
           }
         }
         ()
       }
       .start()
     q.awaitTermination()
-  }
-
-  private def writeMarker(fs: FileSystem, p: Path, v: Long): Unit = {
-    val out = fs.create(p, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readMarker(fs: FileSystem, p: Path): Long = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-    finally in.close()
   }
 }

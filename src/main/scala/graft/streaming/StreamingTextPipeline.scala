@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -49,26 +47,6 @@ object StreamingTextPipeline {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Committed batch dirs under `base` with id strictly below `batchId`. */
-  private def priorDirs(base: String, batchId: Long): Seq[String] = {
-    val p = Paths.get(base)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val ds = Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        ds.iterator().asScala
-          .filter { d =>
-            val name = d.getFileName.toString
-            Files.isDirectory(d) && name.startsWith("batch_id=") &&
-            name.drop("batch_id=".length).toLongOption.exists(_ < batchId) &&
-            Files.exists(d.resolve("_SUCCESS"))
-          }
-          .map(_.toString).toSeq
-      } finally ds.close()
-    }
-  }
-
   def run(spark: SparkSession, srcDir: String, checkpointDir: String,
       stateDir: String, outDir: String): Unit = {
     val stream = spark.readStream.schema(docSchema)
@@ -104,13 +82,9 @@ object StreamingTextPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (apiBatch: DataFrame, batchId: Long) =>
-        apiBatch.filter(col("payload").isNull).select(col("id"))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/dead/batch_id=$batchId")
-        val docs = apiBatch.filter(col("payload").isNotNull)
-          .select(from_json(col("payload"), docSchema).as("d"))
-          .select(col("d.*"))
-        processBatch(spark, stateDir, outDir)(docs, batchId)
+        processBatch(spark, stateDir, outDir)(
+          StateDirs.parsePayloads(apiBatch, docSchema, stateDir, batchId),
+          batchId)
       }
       .start()
     q.awaitTermination()
@@ -122,35 +96,33 @@ object StreamingTextPipeline {
     * [[runFromConnector]] (graft-api source) drive exactly this. */
   private def processBatch(spark: SparkSession, stateDir: String,
       outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-        // per-doc stages once per arriving doc → narrow state rows
-        val perDocBatch = TextPipelineQueries.pipePerDoc(batch)
-        perDocBatch.write.mode("overwrite")
-          .parquet(s"$stateDir/perdoc/batch_id=$batchId")
-        val perDocDirs =
-          priorDirs(s"$stateDir/perdoc", batchId) :+
-            s"$stateDir/perdoc/batch_id=$batchId"
-        val perDocAll = spark.read.parquet(perDocDirs: _*)
-        // pair discovery over the accumulated corpus, restricted to
-        // pairs touching this batch (either endpoint new)
-        val batchIds = perDocBatch.select(col("doc_id")).distinct()
-        val pairsAcc = TextPipelineQueries.pipePairs(perDocAll)
-        val pairsBatch = pairsAcc
-          .join(batchIds.select(col("doc_id").as("src")), Seq("src"),
-            "left_semi")
-          .unionByName(pairsAcc
-            .join(batchIds.select(col("doc_id").as("dst")), Seq("dst"),
-              "left_semi")
-            .select(col("src"), col("dst")))
-          .distinct()
-        pairsBatch.write.mode("overwrite")
-          .parquet(s"$stateDir/pairs/batch_id=$batchId")
-        val pairDirs =
-          priorDirs(s"$stateDir/pairs", batchId) :+
-            s"$stateDir/pairs/batch_id=$batchId"
-        val pairsAll = spark.read.parquet(pairDirs: _*).distinct()
-        // view refresh from compact state
-        TextPipelineQueries.pipeTail(perDocAll, pairsAll)
-          .write.mode("overwrite").parquet(outDir)
-        ()
+    val dirs = StateDirs(spark, stateDir)
+    // a batch's state dir joins its committed predecessors
+    def accumulated(kind: String, batchState: DataFrame): DataFrame = {
+      val own = s"$stateDir/$kind/batch_id=$batchId"
+      dirs.overwrite(batchState, own)
+      spark.read.parquet(dirs.committedBelow(s"$stateDir/$kind", batchId)
+        .map(_.toString) :+ own: _*)
+    }
+    // per-doc stages once per arriving doc → narrow state rows
+    val perDocBatch = TextPipelineQueries.pipePerDoc(batch)
+    val perDocAll = accumulated("perdoc", perDocBatch)
+    // pair discovery over the accumulated corpus, restricted to
+    // pairs touching this batch (either endpoint new)
+    val batchIds = perDocBatch.select(col("doc_id")).distinct()
+    val pairsAcc = TextPipelineQueries.pipePairs(perDocAll)
+    val pairsBatch = pairsAcc
+      .join(batchIds.select(col("doc_id").as("src")), Seq("src"),
+        "left_semi")
+      .unionByName(pairsAcc
+        .join(batchIds.select(col("doc_id").as("dst")), Seq("dst"),
+          "left_semi")
+        .select(col("src"), col("dst")))
+      .distinct()
+    val pairsAll = accumulated("pairs", pairsBatch).distinct()
+    // view refresh from compact state
+    TextPipelineQueries.pipeTail(perDocAll, pairsAll)
+      .write.mode("overwrite").parquet(outDir)
+    ()
   }
 }
