@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.GraftExtensions.topKPerGroup
 import graft.plans.Pins.PinnedOps
 
 /** Product quantization (Jégou, Douze & Schmid, "Product quantization
@@ -50,10 +51,15 @@ object Pq {
 
   /** (vec_id, sub, sv): the m constant-sliced subspace views — a union
     * of m narrow projections, no explode/lambda slicing. */
-  def subVectors(emb: DataFrame, m: Int, dsub: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), Similarity.vecD(col("embedding")).as("v"))
-    (0 until m).map(j => e.select(col("vec_id"), lit(j).as("sub"),
-        slice(col("v"), j * dsub + 1, dsub).as("sv")))
+  def subVectors(emb: DataFrame, m: Int, dsub: Int): DataFrame =
+    slices(emb, Seq(col("vec_id")), Similarity.vecD(col("embedding")), m, dsub)
+
+  /** `(keys…, sub, sv)`: the m subspace slices of the vector `v`. */
+  private def slices(df: DataFrame, keys: Seq[Column], v: Column, m: Int,
+      dsub: Int): DataFrame = {
+    val e = df.select(keys :+ v.as("v"): _*)
+    (0 until m).map(j => e.select(keys ++ Seq(lit(j).as("sub"),
+        slice(col("v"), j * dsub + 1, dsub).as("sv")): _*))
       .reduce(_ unionByName _)
   }
 
@@ -103,39 +109,82 @@ object Pq {
       .select(col("vec_id"), col("sub"), col("_b.centroid_id").as("code"))
   }
 
-  /** ADC top-k: per-query m×ksub exact distance table, corpus scanned
-    * via codes only, approximate distance = fixed-order sum of the m
-    * looked-up subspace contributions. */
-  def adcTopK(emb: DataFrame, cents: DataFrame, isQuery: Column, k: Int,
-      m: Int, dsub: Int): DataFrame = {
-    val corpus = codes(emb, cents, m, dsub)
-    val qsv = subVectors(emb.filter(isQuery), m, dsub)
+  /** The ADC scan all three PQ top-k paths run. The query-side subspace
+    * views `qsv(query_id, keys…, sub, sv)` against the broadcast codebooks
+    * `cents` give the distance table; each candidate code row of
+    * `cand(vec_id, sub, code, …)` looks up its entry (matching `on`:
+    * candidate column → table key), the self-match drops, and the m
+    * looked-up contributions add in FIXED subspace order — one
+    * conditional sum per subspace (each over exactly one row), then a
+    * left-associative add chain: exact and order-deterministic where a
+    * plain sum(d2) over doubles would not be. The bounded (adist ASC,
+    * vec_id) top-k finishes. The table is |Q|·(probes)·m·ksub rows,
+    * bounded by construction (the point of ADC is that it is tiny), so it
+    * broadcasts explicitly: the corpus-codes side never shuffles for this
+    * join. */
+  private def adcScan(cand: DataFrame, qsv: DataFrame, cents: DataFrame,
+      on: Seq[(String, String)], k: Int, m: Int): DataFrame = {
+    val keys = qsv.columns.filterNot(Set("sub", "sv")).map(col).toSeq
     val dt = qsv.join(broadcast(cents), "sub")
-      .select(col("vec_id").as("query_id"), col("sub"), col("centroid_id"),
-        l2sq(col("sv"), col("cv")).as("d2"))
-    // one conditional sum per subspace (each over exactly one row), then
-    // a fixed-order add chain — exact and order-deterministic where a
-    // plain sum(d2) over doubles would not be
+      .select(keys ++ Seq(col("sub").as("dt_sub"), col("centroid_id")
+        .as("dt_code"), l2sq(col("sv"), col("cv")).as("d2")): _*)
+    val lookup = on.foldLeft(
+        col("dt_sub") === col("sub") && col("dt_code") === col("code")) {
+      case (c, (a, b)) => c && col(a) === col(b) }
     val subSums = (0 until m).map(j =>
-      sum(when(col("sub") === j, col("d2"))).as(s"s$j"))
+      sum(when(col("dt_sub") === j, col("d2"))).as(s"s$j"))
     val adist = (1 until m).foldLeft(col("s0"))((acc, j) => acc + col(s"s$j"))
-    // dt is |Q|·m·ksub rows — bounded by construction (the whole point
-    // of ADC is that the table is tiny), so broadcast it explicitly:
-    // the corpus-codes side must never shuffle for this join
-    corpus.select(col("vec_id"), col("sub").as("csub"), col("code"))
-      .join(broadcast(dt),
-        col("csub") === dt("sub") && col("code") === dt("centroid_id"))
+    val scored = cand.join(broadcast(dt), lookup)
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(subSums.head, subSums.tail: _*)
       .select(col("query_id"), col("vec_id"), adist.as("adist"))
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("adist"), col("vec_id")), k, descFirst = false).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.adist").as("adist"))
+    topKPerGroup(scored, Seq("query_id"), k, descFirst = false)(
+        col("adist"), col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+        col("adist"))
   }
+
+  /** The queries' `(query_id, sub, sv)` subspace views. */
+  private def querySubVectors(emb: DataFrame, isQuery: Column, m: Int,
+      dsub: Int): DataFrame =
+    subVectors(emb.filter(isQuery), m, dsub)
+      .withColumnRenamed("vec_id", "query_id")
+
+  /** ADC top-k: per-query m×ksub exact distance table, corpus scanned
+    * via codes only, approximate distance = fixed-order sum of the m
+    * looked-up subspace contributions. */
+  def adcTopK(emb: DataFrame, cents: DataFrame, isQuery: Column, k: Int,
+      m: Int, dsub: Int): DataFrame =
+    adcScan(codes(emb, cents, m, dsub), querySubVectors(emb, isQuery, m, dsub),
+      cents, Seq.empty, k, m)
+
+  /** The coarse IVF side of both IVF×PQ scans, from one
+    * [[Similarity.ivfProbeRank]] over `e0(vec_id, v)`: each vector's
+    * bucket `(vec_id, bucket)` and the queries' probed buckets
+    * `(query_id, qbucket)`. */
+  private def ivfBuckets(e0: DataFrame, ivfCents: DataFrame, isQuery: Column,
+      nProbe: Int): (DataFrame, DataFrame) = {
+    val ranked = Similarity.ivfProbeRank(e0, ivfCents, nProbe)
+    (ranked.filter(col("rnk") === 1)
+      .select(col("vec_id"), col("centroid_id").as("bucket")),
+     ranked.filter(isQuery && col("rnk") <= nProbe)
+      .select(col("vec_id").as("query_id"), col("centroid_id").as("qbucket")))
+  }
+
+  /** A corpus code table `(vec_id, sub, code)` in its buckets, joined to
+    * the queries probing them: `(vec_id, sub, code, bucket, cand_query,
+    * cand_bucket)`.
+    * The probes are |Q|·nProbe two-int rows — broadcast; the corpus-codes
+    * side stays put. Each corpus vector lives in exactly one bucket and a
+    * query's probed buckets are distinct, so no candidate dedup is
+    * needed. */
+  private def probedCodes(codes: DataFrame, buckets: DataFrame,
+      probes: DataFrame): DataFrame =
+    codes.join(buckets, "vec_id")
+      .join(broadcast(probes.select(col("query_id").as("cand_query"),
+          col("qbucket").as("cand_bucket"))),
+        col("bucket") === col("cand_bucket"))
 
   /** IVF×PQ — the production billion-vector composition (VERDICT r7 #4):
     * ADC scoring runs only *within the probed IVF buckets*, never over the
@@ -146,57 +195,15 @@ object Pq {
     * (bounded by k·dim and |Q|·m·ksub), the corpus shuffles once on
     * bucket id, and the final rank is a bounded per-query top-k
     * ([[graft.plans.BoundedTopK]]) — no full-candidate exchange anywhere.
-    *
-    * Each corpus vector lives in exactly one bucket and a query's probed
-    * buckets are distinct, so no candidate dedup is needed. Determinism:
-    * same argmin/fixed-order-sum contracts as [[adcTopK]].
+    * Determinism: same argmin/fixed-order-sum contracts as [[adcTopK]].
     */
   def ivfAdcTopK(emb: DataFrame, ivfCents: DataFrame, pqCents: DataFrame,
       isQuery: Column, k: Int, m: Int, dsub: Int, nProbe: Int = 1): DataFrame = {
     val e0 = emb.select(col("vec_id"), Similarity.vecD(col("embedding")).as("v"))
-    val c = ivfCents.select(col("centroid_id"), col("cv"))
-    // one bounded top-nProbe aggregation serves both bucket assignment
-    // (rank 1) and query probes (ranks ≤ nProbe) — no window exchange
-    val ranked = e0.crossJoin(broadcast(c))
-      .withColumn("cos", Similarity.cosine(col("v"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("cos"), col("centroid_id")), nProbe,
-          descFirst = true).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("vec_id"), (col("pos") + 1).as("rnk"),
-        col("t.centroid_id").as("centroid_id"))
-    val buckets = ranked.filter(col("rnk") === 1)
-      .select(col("vec_id"), col("centroid_id").as("bucket"))
-    val probes = ranked.filter(isQuery && col("rnk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("qbucket"))
-    val corpus = codes(emb, pqCents, m, dsub)
-      .join(buckets, "vec_id")
-    val qsv = subVectors(emb.filter(isQuery), m, dsub)
-    val dt = qsv.join(broadcast(pqCents), "sub")
-      .select(col("vec_id").as("dt_query"), col("sub").as("dt_sub"),
-        col("centroid_id").as("dt_code"),
-        l2sq(col("sv"), col("cv")).as("d2"))
-    val subSums = (0 until m).map(j =>
-      sum(when(col("dt_sub") === j, col("d2"))).as(s"s$j"))
-    val adist = (1 until m).foldLeft(col("s0"))((acc, j) => acc + col(s"s$j"))
-    corpus
-      // probes is |Q|·nProbe two-int rows — broadcast; the corpus-codes
-      // side stays put
-      .join(broadcast(probes), col("bucket") === col("qbucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(dt),
-        col("dt_query") === col("query_id") && col("dt_sub") === col("sub") &&
-          col("dt_code") === col("code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(subSums.head, subSums.tail: _*)
-      .select(col("query_id"), col("vec_id"), adist.as("adist"))
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("adist"), col("vec_id")), k, descFirst = false).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.adist").as("adist"))
+    val (buckets, probes) = ivfBuckets(e0, ivfCents, isQuery, nProbe)
+    adcScan(probedCodes(codes(emb, pqCents, m, dsub), buckets, probes),
+        querySubVectors(emb, isQuery, m, dsub), pqCents,
+        Seq("cand_query" -> "query_id"), k, m)
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -221,59 +228,20 @@ object Pq {
       nProbe: Int = 1): DataFrame = {
     val e0 = emb.select(col("vec_id"), Similarity.vecD(col("embedding")).as("v"))
     val c = ivfCents.select(col("centroid_id"), col("cv"))
-    val ranked = e0.crossJoin(broadcast(c))
-      .withColumn("cos", Similarity.cosine(col("v"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("cos"), col("centroid_id")), nProbe,
-          descFirst = true).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("vec_id"), (col("pos") + 1).as("rnk"),
-        col("t.centroid_id").as("centroid_id"))
-    val buckets = ranked.filter(col("rnk") === 1)
-      .select(col("vec_id"), col("centroid_id").as("bucket"))
-    val probes = ranked.filter(isQuery && col("rnk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("qbucket"))
+    val (buckets, probes) = ivfBuckets(e0, c, isQuery, nProbe)
+    val residual = zip_with(col("v"), col("cv"), (x, y) => x - y)
     // corpus residuals (vec_id, embedding) — the PQ training corpus
     val residuals = e0.join(buckets, "vec_id")
       .join(broadcast(c), col("bucket") === col("centroid_id"))
-      .select(col("vec_id"),
-        zip_with(col("v"), col("cv"), (x, y) => x - y).as("embedding"))
+      .select(col("vec_id"), residual.as("embedding"))
     val rCents = trainCentroids(residuals, m, dsub, ksub, pqIters)
-    val corpus = codes(residuals, rCents, m, dsub).join(buckets, "vec_id")
     // query residual PER PROBED BUCKET → per-(query, bucket) table
     val qres = probes
       .join(e0.select(col("vec_id").as("query_id"), col("v")), "query_id")
       .join(broadcast(c), col("qbucket") === col("centroid_id"))
-      .select(col("query_id"), col("qbucket"),
-        zip_with(col("v"), col("cv"), (x, y) => x - y).as("rv"))
-    val qsv = (0 until m).map(j => qres.select(col("query_id"),
-        col("qbucket"), lit(j).as("sub"),
-        slice(col("rv"), j * dsub + 1, dsub).as("sv")))
-      .reduce(_ unionByName _)
-    val dt = qsv.join(broadcast(rCents), "sub")
-      .select(col("query_id").as("dt_query"), col("qbucket").as("dt_bucket"),
-        col("sub").as("dt_sub"), col("centroid_id").as("dt_code"),
-        l2sq(col("sv"), col("cv")).as("d2"))
-    val subSums = (0 until m).map(j =>
-      sum(when(col("dt_sub") === j, col("d2"))).as(s"s$j"))
-    val adist = (1 until m).foldLeft(col("s0"))((acc, j) => acc + col(s"s$j"))
-    corpus
-      .join(broadcast(probes), col("bucket") === col("qbucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(dt),
-        col("dt_query") === col("query_id") &&
-          col("dt_bucket") === col("bucket") &&
-          col("dt_sub") === col("sub") && col("dt_code") === col("code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(subSums.head, subSums.tail: _*)
-      .select(col("query_id"), col("vec_id"), adist.as("adist"))
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("adist"), col("vec_id")), k, descFirst = false).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.adist").as("adist"))
+    adcScan(probedCodes(codes(residuals, rCents, m, dsub), buckets, probes),
+        slices(qres, Seq(col("query_id"), col("qbucket")), residual, m, dsub),
+        rCents, Seq("cand_query" -> "query_id", "bucket" -> "qbucket"), k, m)
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -402,16 +370,13 @@ object Pq {
     ((init +: rounds) :+ code).mkString(",\n")
   }
 
-  /** Twin of [[ivfAdcTopK]] tail CTEs. Needs BOTH
-    * [[Similarity.kMeansCtesSql]] (the IVF index, `cents$ivfIters`) and
-    * [[pqCtesSql]] (`sv`/`pc$iters`/`pcode`) in scope before it.
-    * `cosSql` is the cosine expression over aliases `e` (vector side) and
-    * `c` (centroid side). Emits the final SELECT. */
-  def ivfAdcTailSql(cosSql: String, m: Int, dsub: Int, iters: Int,
-      ivfIters: Int, nQueries: Int, k: Int, nProbe: Int): String = {
-    val sumChain = (0 until m)
-      .map(j => s"SUM(CASE WHEN sub = $j THEN d2 END)")
-      .mkString(" + ")
+  /** Twin of [[ivfBuckets]] over `e` and the IVF index `cents$ivfIters`
+    * ([[Similarity.kMeansCtesSql]]): `bkt(vec_id, bucket)` and, for the
+    * queries `vec_id < nQueries`, `probes(query_id, qbucket)`. `cosSql`
+    * is the cosine over aliases `e` (vector side) and `c` (centroid
+    * side). */
+  private def ivfBucketsSql(cosSql: String, ivfIters: Int, nQueries: Int,
+      nProbe: Int): String =
     s"""ivfscored AS (SELECT e.vec_id, c.centroid_id, $cosSql AS cos
        |  FROM e CROSS JOIN cents$ivfIters c),
        |ivfranked AS (SELECT vec_id, centroid_id,
@@ -420,18 +385,34 @@ object Pq {
        |  FROM ivfscored),
        |bkt AS (SELECT vec_id, centroid_id AS bucket FROM ivfranked WHERE rnk = 1),
        |probes AS (SELECT vec_id AS query_id, centroid_id AS qbucket
-       |  FROM ivfranked WHERE vec_id < $nQueries AND rnk <= $nProbe),
-       |qdt AS MATERIALIZED (SELECT s.vec_id AS query_id, s.sub, c.centroid_id,
+       |  FROM ivfranked WHERE vec_id < $nQueries AND rnk <= $nProbe)""".stripMargin
+
+  /** Twin of [[probedCodes]] over `pcode`, `bkt` and `probes`. */
+  private val probedCodesSql =
+    """(SELECT pc.vec_id, pc.sub, pc.code, b.bucket, p.query_id AS cand_query
+      |  FROM pcode pc JOIN bkt b ON b.vec_id = pc.vec_id
+      |       JOIN probes p ON p.qbucket = b.bucket)""".stripMargin
+
+  /** Twin of [[adcScan]]: the distance table `qdt` of the views `qsv`
+    * (`qdtKeys` selected over alias `s`) against the codebooks
+    * `pc$iters`, each candidate row of `cand(vec_id, sub, code, …)`
+    * looking up its entry (`on`: candidate column → table key), the
+    * self-match dropped, the fixed-subspace-order sum, the rank. Emits
+    * the final SELECT. */
+  private def adcSql(qdtKeys: String, qsv: String, cand: String,
+      on: Seq[(String, String)], m: Int, dsub: Int, iters: Int,
+      k: Int): String = {
+    val sumChain = (0 until m)
+      .map(j => s"SUM(CASE WHEN sub = $j THEN d2 END)")
+      .mkString(" + ")
+    val keyMatch = on.map { case (c, q) => s" AND q.$q = pc.$c" }.mkString
+    s"""qdt AS MATERIALIZED (SELECT $qdtKeys, s.sub, c.centroid_id,
        |    ${d2Sql("s", "c", dsub)} AS d2
-       |  FROM sv s JOIN pc$iters c ON c.sub = s.sub
-       |  WHERE s.vec_id < $nQueries),
-       |cand AS (SELECT p.query_id, b.vec_id
-       |  FROM probes p JOIN bkt b ON b.bucket = p.qbucket
-       |  WHERE b.vec_id <> p.query_id),
-       |contrib AS (SELECT ca.query_id, ca.vec_id, q.sub, q.d2
-       |  FROM cand ca JOIN pcode pc ON pc.vec_id = ca.vec_id
-       |       JOIN qdt q ON q.query_id = ca.query_id AND q.sub = pc.sub
-       |                  AND q.centroid_id = pc.code),
+       |  FROM $qsv s JOIN pc$iters c ON c.sub = s.sub),
+       |contrib AS (SELECT q.query_id, pc.vec_id, q.sub, q.d2
+       |  FROM $cand pc
+       |  JOIN qdt q ON q.sub = pc.sub AND q.centroid_id = pc.code$keyMatch
+       |  WHERE pc.vec_id <> q.query_id),
        |ad AS (SELECT query_id, vec_id, $sumChain AS adist
        |  FROM contrib GROUP BY query_id, vec_id),
        |rankedf AS (SELECT query_id, vec_id, adist,
@@ -442,6 +423,29 @@ object Pq {
        |FROM rankedf WHERE rnk <= $k""".stripMargin
   }
 
+  /** The queries' views of the `sv` CTE, for [[adcSql]]. */
+  private def querySvSql(nQueries: Int): String =
+    s"(SELECT * FROM sv WHERE vec_id < $nQueries)"
+
+  /** Twin of [[adcTopK]] tail CTEs (needs [[pqCtesSql]] before it):
+    * distance table for queries `vec_id < nQueries`, fixed-subspace-order
+    * sum, rank. Emits final SELECT. */
+  def adcTailSql(m: Int, dsub: Int, iters: Int, nQueries: Int,
+      k: Int): String =
+    adcSql("s.vec_id AS query_id", querySvSql(nQueries), "pcode", Seq.empty,
+      m, dsub, iters, k)
+
+  /** Twin of [[ivfAdcTopK]] tail CTEs. Needs BOTH
+    * [[Similarity.kMeansCtesSql]] (the IVF index, `cents$ivfIters`) and
+    * [[pqCtesSql]] (`sv`/`pc$iters`/`pcode`) in scope before it.
+    * `cosSql` is the cosine expression over aliases `e` (vector side) and
+    * `c` (centroid side). Emits the final SELECT. */
+  def ivfAdcTailSql(cosSql: String, m: Int, dsub: Int, iters: Int,
+      ivfIters: Int, nQueries: Int, k: Int, nProbe: Int): String =
+    s"""${ivfBucketsSql(cosSql, ivfIters, nQueries, nProbe)},
+       |${adcSql("s.vec_id AS query_id", querySvSql(nQueries), probedCodesSql,
+           Seq("cand_query" -> "query_id"), m, dsub, iters, k)}""".stripMargin
+
   /** Twin of [[ivfAdcResidualTopK]] — everything after
     * [[Similarity.kMeansCtesSql]] (which must define `cents$ivfIters`
     * over a raw `e(vec_id, v)`): IVF rank, residual corpus `er`, the PQ
@@ -450,21 +454,10 @@ object Pq {
   def ivfAdcResidualTailSql(cosSql: String, m: Int, dsub: Int, ksub: Int,
       iters: Int, ivfIters: Int, nQueries: Int, k: Int, nProbe: Int,
       dim: Int): String = {
-    val sumChain = (0 until m)
-      .map(j => s"SUM(CASE WHEN sub = $j THEN d2 END)")
-      .mkString(" + ")
     val qsvSelects = (0 until m).map(j =>
       s"SELECT query_id, qbucket, $j AS sub, rv[${j * dsub + 1}:${(j + 1) * dsub}] AS sv FROM qr")
       .mkString("\n  UNION ALL ")
-    s"""ivfscored AS (SELECT e.vec_id, c.centroid_id, $cosSql AS cos
-       |  FROM e CROSS JOIN cents$ivfIters c),
-       |ivfranked AS (SELECT vec_id, centroid_id,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id
-       |      ORDER BY cos DESC, centroid_id) AS rnk
-       |  FROM ivfscored),
-       |bkt AS (SELECT vec_id, centroid_id AS bucket FROM ivfranked WHERE rnk = 1),
-       |probes AS (SELECT vec_id AS query_id, centroid_id AS qbucket
-       |  FROM ivfranked WHERE vec_id < $nQueries AND rnk <= $nProbe),
+    s"""${ivfBucketsSql(cosSql, ivfIters, nQueries, nProbe)},
        |er AS MATERIALIZED (SELECT e.vec_id,
        |    list_transform(range(1, ${dim + 1}),
        |                   i -> e.v[CAST(i AS INT)] - c.v[CAST(i AS INT)]) AS v
@@ -478,47 +471,8 @@ object Pq {
        |       JOIN cents$ivfIters c ON c.centroid_id = p.qbucket),
        |qsv AS (
        |  $qsvSelects),
-       |qdt AS MATERIALIZED (SELECT s.query_id, s.qbucket, s.sub, c.centroid_id,
-       |    ${d2Sql("s", "c", dsub)} AS d2
-       |  FROM qsv s JOIN pc$iters c ON c.sub = s.sub),
-       |contrib AS (SELECT p.query_id, pc.vec_id, q.sub, q.d2
-       |  FROM pcode pc JOIN bkt b ON b.vec_id = pc.vec_id
-       |       JOIN probes p ON p.qbucket = b.bucket
-       |       JOIN qdt q ON q.query_id = p.query_id AND q.qbucket = b.bucket
-       |                  AND q.sub = pc.sub AND q.centroid_id = pc.code
-       |  WHERE pc.vec_id <> p.query_id),
-       |ad AS (SELECT query_id, vec_id, $sumChain AS adist
-       |  FROM contrib GROUP BY query_id, vec_id),
-       |rankedf AS (SELECT query_id, vec_id, adist,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, vec_id) AS rnk
-       |  FROM ad)
-       |SELECT query_id, vec_id AS neighbor_id, rnk, adist
-       |FROM rankedf WHERE rnk <= $k""".stripMargin
-  }
-
-  /** Twin of [[adcTopK]] tail CTEs (needs [[pqCtesSql]] before it):
-    * distance table for queries `vec_id < nQueries`, fixed-subspace-order
-    * sum, rank. Emits final SELECT. */
-  def adcTailSql(m: Int, dsub: Int, iters: Int, nQueries: Int,
-      k: Int): String = {
-    val sumChain = (0 until m)
-      .map(j => s"SUM(CASE WHEN sub = $j THEN d2 END)")
-      .mkString(" + ")
-    s"""qdt AS MATERIALIZED (SELECT s.vec_id AS query_id, s.sub, c.centroid_id,
-       |    ${d2Sql("s", "c", dsub)} AS d2
-       |  FROM sv s JOIN pc$iters c ON c.sub = s.sub
-       |  WHERE s.vec_id < $nQueries),
-       |contrib AS (SELECT q.query_id, p.vec_id, q.sub, q.d2
-       |  FROM pcode p JOIN qdt q ON q.sub = p.sub AND q.centroid_id = p.code
-       |  WHERE p.vec_id <> q.query_id),
-       |adist AS (SELECT query_id, vec_id, $sumChain AS adist
-       |  FROM contrib GROUP BY query_id, vec_id),
-       |ranked AS (SELECT query_id, vec_id, adist,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, vec_id) AS rnk
-       |  FROM adist)
-       |SELECT query_id, vec_id AS neighbor_id, rnk, adist
-       |FROM ranked WHERE rnk <= $k""".stripMargin
+       |${adcSql("s.query_id, s.qbucket", "qsv", probedCodesSql,
+           Seq("cand_query" -> "query_id", "bucket" -> "qbucket"), m, dsub,
+           iters, k)}""".stripMargin
   }
 }

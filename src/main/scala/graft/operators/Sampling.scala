@@ -58,14 +58,11 @@ object Sampling {
     * 100 TB" a cheap pass. */
   def reservoir(df: DataFrame, key: Column, stratum: Column, k: Int,
       salt: String): DataFrame =
-    df.select(stratum.as("stratum"), key.as("doc_id"),
-        md5Hash54(concat(lit(salt + ":"), key.cast("string"))).as("h"))
-      .groupBy(col("stratum"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("h"), col("doc_id")), k, descFirst = false).as("top"))
-      .select(col("stratum"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("stratum"), col("t.doc_id").as("doc_id"),
-        (col("pos") + 1).as("rnk"))
+    graft.plans.GraftExtensions.topKPerGroup(
+        df.select(stratum.as("stratum"), key.as("doc_id"),
+          md5Hash54(concat(lit(salt + ":"), key.cast("string"))).as("h")),
+        Seq("stratum"), k, descFirst = false)(col("h"), col("doc_id"))
+      .select(col("stratum"), col("doc_id"), col("rnk"))
       .orderBy(col("stratum"), col("rnk"))
 
   /** DuckDB twin of [[reservoir]] over `$src` with columns

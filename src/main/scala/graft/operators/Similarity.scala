@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.GraftExtensions.topKPerGroup
 import graft.plans.Pins.PinnedOps
 
 import graft.functions.TextFns.md5Hash54
@@ -75,18 +76,15 @@ object Similarity {
     val e = emb.select(col("vec_id"), vecD(col("embedding")).as("v"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    q.crossJoin(e)
+    val pairs = q.crossJoin(e)
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("qv"), col("v")))
-      // bounded per-query top-k (map-side compaction) — the |Q|·|N| pair
-      // stream never reaches an exchange, same order contract as the
-      // row_number window it replaced (cos DESC, vec_id)
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("cos"), col("vec_id")), k, descFirst = true).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.cos").as("cos"))
+    // bounded per-query top-k (map-side compaction) — the |Q|·|N| pair
+    // stream never reaches an exchange
+    topKPerGroup(pairs, Seq("query_id"), k, descFirst = true)(
+        col("cos"), col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+        col("cos"))
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -152,6 +150,21 @@ object Similarity {
   def ivfAssign(emb: DataFrame, nCentroids: Int): DataFrame =
     ivfAssignWith(emb, kMeansCentroids(emb, nCentroids, iters = 0))
 
+  /** The IVF probe rank every IVF scan starts from: each vector of
+    * `e0(vec_id, v)` against the broadcast centroids `(centroid_id, cv)`,
+    * its `nProbe` nearest ranked (cos DESC, centroid_id) by one bounded
+    * top-nProbe aggregate. Returns `(vec_id, rnk, cos, centroid_id,
+    * payload…)`: rank 1 is the vector's bucket, ranks ≤ nProbe a query's
+    * probes — one aggregate for both, where a window formulation
+    * shuffled the |corpus|·k cross join twice. */
+  private[graft] def ivfProbeRank(e0: DataFrame, cents: DataFrame,
+      nProbe: Int, payload: Column*): DataFrame =
+    topKPerGroup(
+      e0.crossJoin(broadcast(cents.select(col("centroid_id"), col("cv"))))
+        .withColumn("cos", cosine(col("v"), col("cv"))),
+      Seq("vec_id"), nProbe, descFirst = true)(
+      col("cos") +: col("centroid_id") +: payload: _*)
+
   /** IVF ANN with multi-probe: per query, search the buckets of its
     * `nProbe` nearest centroids (nProbe=1 → classic single-probe; higher
     * nProbe trades compute for recall — the standard IVF knob). Returns
@@ -159,20 +172,7 @@ object Similarity {
   def ivfTopKWith(emb: DataFrame, cents: DataFrame, isQuery: Column, k: Int,
       nProbe: Int = 1): DataFrame = {
     val e0 = emb.select(col("vec_id"), vecD(col("embedding")).as("v"))
-    val c = cents.select(col("centroid_id"), col("cv"))
-    // ONE bounded top-nProbe aggregation ranks each vector's centroids
-    // (cos DESC, centroid_id) and serves both consumers: rank 1 is the
-    // bucket assignment, ranks ≤ nProbe are the query's probes — where
-    // the window formulation shuffled the |corpus|·k crossJoin twice
-    val ranked = e0.crossJoin(broadcast(c))
-      .withColumn("cos", cosine(col("v"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("cos"), col("centroid_id"), col("v")), nProbe,
-          descFirst = true).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("vec_id"), (col("pos") + 1).as("rnk"),
-        col("t.centroid_id").as("centroid_id"), col("t.v").as("v"))
+    val ranked = ivfProbeRank(e0, cents, nProbe, col("v"))
     // corpus side: each vector lives in its single nearest bucket
     val assigned = ranked.filter(col("rnk") === 1)
       .select(col("vec_id"), col("v"), col("centroid_id"))
@@ -183,17 +183,15 @@ object Similarity {
     // no broadcast hint: the probe join is an equi-join on bucket id, so
     // at scale both sides shuffle-partition by centroid (the IVF design);
     // AQE still broadcasts the query side at runtime when it's small
-    q.join(assigned, col("centroid_id") === col("qc"))
+    val cand = q.join(assigned, col("centroid_id") === col("qc"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("qv"), col("v")))
       // a neighbor can surface from several probed buckets → dedup first
       .select(col("query_id"), col("vec_id"), col("cos")).distinct()
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("cos"), col("vec_id")), k, descFirst = true).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.cos").as("cos"))
+    topKPerGroup(cand, Seq("query_id"), k, descFirst = true)(
+        col("cos"), col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+        col("cos"))
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -240,7 +238,8 @@ object Similarity {
     val q = qz.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("codes").as("qc"),
         col("norm2").as("qn"))
-    q.crossJoin(qz.select(col("vec_id"), col("codes"), col("norm2")))
+    val pairs = q
+      .crossJoin(qz.select(col("vec_id"), col("codes"), col("norm2")))
       .filter(col("vec_id") =!= col("query_id"))
       // the cross join's whole cost is this inner product: the native
       // codegen dot_i64 (graft.plans.DotI64) replaces the interpreted
@@ -250,14 +249,10 @@ object Similarity {
         graft.plans.GraftExtensions.dotI64(col("qc"), col("codes")))
       .withColumn("cos_q", col("dot_q").cast("double") /
         sqrt((col("qn") * col("norm2")).cast("double")))
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("cos_q"), col("vec_id"), col("dot_q")), k,
-        descFirst = true).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.vec_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.dot_q").as("dot_q"),
-        col("t.cos_q").as("cos_q"))
+    topKPerGroup(pairs, Seq("query_id"), k, descFirst = true)(
+        col("cos_q"), col("vec_id"), col("dot_q"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+        col("dot_q"), col("cos_q"))
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -271,18 +266,15 @@ object Similarity {
     val coarse = quantizedTopK(emb, isQuery, shortlist)
       .select(col("query_id"), col("neighbor_id"))
     val e = emb.select(col("vec_id"), vecD(col("embedding")).as("v"))
-    coarse
+    val pairs = coarse
       .join(e.select(col("vec_id").as("query_id"), col("v").as("qv")),
         "query_id")
       .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("nv")),
         "neighbor_id")
       .withColumn("cos", cosine(col("qv"), col("nv")))
-      .groupBy(col("query_id"))
-      .agg(graft.plans.GraftExtensions.boundedTopK(
-        struct(col("cos"), col("neighbor_id")), k, descFirst = true).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.neighbor_id").as("neighbor_id"),
-        (col("pos") + 1).as("rnk"), col("t.cos").as("cos"))
+    topKPerGroup(pairs, Seq("query_id"), k, descFirst = true)(
+        col("cos"), col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("cos"))
       .orderBy(col("query_id"), col("rnk"))
   }
 

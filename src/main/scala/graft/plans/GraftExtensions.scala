@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.functions.{col, posexplode, struct}
 import org.apache.spark.sql.graftshim.Shims
 
 /** Session-extension injection for the engine's native expressions —
@@ -157,4 +158,20 @@ object GraftExtensions {
   def boundedTopK(s: Column, k: Int, descFirst: Boolean): Column =
     Shims.column(BoundedTopK(Shims.expression(s), k, descFirst)
       .toAggregateExpression())
+
+  /** The finish of every ranked-output operator: per group of `groups`,
+    * the `k` best rows of `df` by `struct(fields)` through [[boundedTopK]]
+    * (field 0 the score, `descFirst` = score descending; field 1 the
+    * ascending tie-break id; the rest payload; the field order is the sort
+    * key). Returns the group columns, `rnk` (1-based and dense per group:
+    * `row_number` over that order) and the struct's fields by name. Adds
+    * no `orderBy`: a caller that needs ordered output sorts it itself. */
+  private[graft] def topKPerGroup(df: DataFrame, groups: Seq[String], k: Int,
+      descFirst: Boolean)(fields: Column*): DataFrame = {
+    val g = groups.map(col)
+    df.groupBy(g: _*)
+      .agg(boundedTopK(struct(fields: _*), k, descFirst).as("top"))
+      .select(g :+ posexplode(col("top")).as(Seq("pos", "t")): _*)
+      .select(g ++ Seq((col("pos") + 1).as("rnk"), col("t.*")): _*)
+  }
 }

@@ -84,17 +84,14 @@ object EventQueries extends QueryModule {
     // BoundedTopK aggregate — map-side compaction keeps state at k rows
     // per window, no rank window over the full hourly fan-out.
     "evt_hourly_top_users" -> ((s, dir) => {
-      Tables.events(s, dir)
+      val hourly = Tables.events(s, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("user_id"))
         .agg(count(lit(1)).as("c"))
         .select(unix_timestamp(col("w.start")).as("window_start"),
           col("user_id"), col("c"))
-        .groupBy(col("window_start"))
-        .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("c"), col("user_id")), 3, descFirst = true).as("top"))
-        .select(col("window_start"), posexplode(col("top")).as(Seq("p", "t")))
-        .select(col("window_start"), col("t.user_id").as("user_id"),
-          (col("p") + 1).as("rnk"), col("t.c").as("c"))
+      graft.plans.GraftExtensions.topKPerGroup(hourly, Seq("window_start"), 3,
+          descFirst = true)(col("c"), col("user_id"))
+        .select(col("window_start"), col("user_id"), col("rnk"), col("c"))
         .orderBy(col("window_start"), col("rnk"))
     }),
 

@@ -81,6 +81,49 @@ object GraphQueries extends QueryModule {
     scores.join(
       dim.select(col(key).as("id"), col(nameCol).as("name")), Seq("id"))
 
+  /** The embedding-retrieval body of `g_fastrp_topk` and
+    * `g_hard_negatives`: per query node `id < 20`, the top-5 cosine
+    * neighbors in fastRP space. Dots and norms are exact BIGINT sums over
+    * the integer embeddings (scale 1e6 keeps Σ products « 2^63); cosine
+    * is one fixed-shape double expression; the finish is the bounded
+    * per-query top-k. With `hardNegatives` the candidates exclude the
+    * query's graph neighbors: one anti-join against the undirected edge
+    * set, keyed on (query, candidate) — a plain shuffle. The embedding
+    * has three consumers (norms, queries, candidates) and is pinned once;
+    * with `hardNegatives` the edges feed both the embedding build and the
+    * anti-join and are pinned too. */
+  private def fastRpNeighbors(edges: DataFrame,
+      hardNegatives: Boolean): DataFrame = {
+    val e = if (hardNegatives) graft.plans.Pins.pin(edges) else edges
+    val emb = graft.plans.Pins.pin(
+      Graph.fastRpFixed(e, dim = 8, iters = 3, scale = 1000000L))
+    val norms = emb.groupBy(col("id"))
+      .agg(sum(col("emb") * col("emb")).as("n2"))
+      .filter(col("n2") > 0)
+    val q = emb.select(col("id").as("qid"), col("pos"), col("emb").as("qv"))
+      .filter(col("qid") < 20)
+    val dots = q.join(emb.select(col("id").as("nid"), col("pos"),
+          col("emb").as("nv")), Seq("pos"))
+      .filter(col("qid") =!= col("nid"))
+      .groupBy(col("qid"), col("nid"))
+      .agg(sum(col("qv") * col("nv")).as("dot"))
+    val cand = if (!hardNegatives) dots else dots.join(
+      e.select(col("src").as("qid"), col("dst").as("nid"))
+        .union(e.select(col("dst").as("qid"), col("src").as("nid")))
+        .distinct(),
+      Seq("qid", "nid"), "left_anti")
+    val scored = cand
+      .join(norms.select(col("id").as("qid"), col("n2").as("qn2")), Seq("qid"))
+      .join(norms.select(col("id").as("nid"), col("n2").as("nn2")), Seq("nid"))
+      .withColumn("cos", col("dot").cast("double") /
+        (sqrt(col("qn2").cast("double")) * sqrt(col("nn2").cast("double"))))
+    graft.plans.GraftExtensions.topKPerGroup(scored, Seq("qid"), 5,
+        descFirst = true)(col("cos"), col("nid"))
+      .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
+        col("rnk"), col("cos"))
+      .orderBy(col("query_id"), col("rnk"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S9/D6 — heterogeneous nodes/edges build, idempotent by distinct;
     // checked via per-type counts + key sums.
@@ -341,40 +384,9 @@ object GraphQueries extends QueryModule {
 
     // Graph-embedding RETRIEVAL (the node2vec-style use of fastRP):
     // cosine top-k similar parts in embedding space — structurally
-    // similar nodes surface without sharing any direct edge. Dots and
-    // norms are exact BIGINT sums over the integer embeddings (scale
-    // 1e6 keeps Σ products « 2^63); cosine is one fixed-shape double
-    // expression; per-query top-k via the bounded aggregate.
-    "g_fastrp_topk" -> ((s, dir) => {
-      // r17: emb has THREE consumers (norms, queries, candidates) and was
-      // unpinned — the union+groupBy over the fastRP iteration pins ran
-      // per consumer. One pin, identical values.
-      val emb = graft.plans.Pins.pin(Graph.fastRpFixed(refEdges(s, dir),
-        dim = 8, iters = 3, scale = 1000000L))
-      val norms = emb.groupBy(col("id"))
-        .agg(sum(col("emb") * col("emb")).as("n2"))
-        .filter(col("n2") > 0)
-      val q = emb.select(col("id").as("qid"), col("pos"), col("emb").as("qv"))
-        .filter(col("qid") < 20)
-      val dots = q.join(emb.select(col("id").as("nid"), col("pos"),
-            col("emb").as("nv")), Seq("pos"))
-        .filter(col("qid") =!= col("nid"))
-        .groupBy(col("qid"), col("nid"))
-        .agg(sum(col("qv") * col("nv")).as("dot"))
-      dots
-        .join(norms.select(col("id").as("qid"), col("n2").as("qn2")), Seq("qid"))
-        .join(norms.select(col("id").as("nid"), col("n2").as("nn2")), Seq("nid"))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("qn2").cast("double")) * sqrt(col("nn2").cast("double"))))
-        .groupBy(col("qid"))
-        .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("cos"), col("nid")), 5, descFirst = true).as("top"))
-        .select(col("qid").as("query_id"),
-          posexplode(col("top")).as(Seq("p", "t")))
-        .select(col("query_id"), col("t.nid").as("neighbor_id"),
-          (col("p") + 1).as("rnk"), col("t.cos").as("cos"))
-        .orderBy(col("query_id"), col("rnk"))
-    }),
+    // similar nodes surface without sharing any direct edge.
+    "g_fastrp_topk" -> ((s, dir) =>
+      fastRpNeighbors(refEdges(s, dir), hardNegatives = false)),
 
     // 2-D NetMF embedding (r9): second eigenvector via implicit
     // deflation (M − λ₁v₁v₁ᵀ applied inside the snapped mat-vec — the
@@ -407,44 +419,9 @@ object GraphQueries extends QueryModule {
     // Hard-negative mining (r9): per query node, the top-5 CLOSEST
     // embedding neighbors that are NOT graph neighbors — the pairs a
     // contrastive trainer needs (positives = edges, hard negatives =
-    // close-but-unlinked). Same exact-BIGINT cosine machinery as
-    // g_fastrp_topk plus one anti-join against the undirected edge set;
-    // the anti-join keys on (query, candidate) — a plain shuffle.
-    "g_hard_negatives" -> ((s, dir) => {
-      // r17: e feeds BOTH the embedding build and the anti-join edge set
-      // (the lineitem self-join ran twice unpinned), and emb has three
-      // consumers exactly as in g_fastrp_topk. Two pins, identical values.
-      val e = graft.plans.Pins.pin(refEdges(s, dir))
-      val emb = graft.plans.Pins.pin(
-        Graph.fastRpFixed(e, dim = 8, iters = 3, scale = 1000000L))
-      val norms = emb.groupBy(col("id"))
-        .agg(sum(col("emb") * col("emb")).as("n2"))
-        .filter(col("n2") > 0)
-      val q = emb.select(col("id").as("qid"), col("pos"), col("emb").as("qv"))
-        .filter(col("qid") < 20)
-      val und = e.select(col("src").as("qid"), col("dst").as("nid"))
-        .union(e.select(col("dst").as("qid"), col("src").as("nid")))
-        .distinct()
-      val dots = q.join(emb.select(col("id").as("nid"), col("pos"),
-            col("emb").as("nv")), Seq("pos"))
-        .filter(col("qid") =!= col("nid"))
-        .groupBy(col("qid"), col("nid"))
-        .agg(sum(col("qv") * col("nv")).as("dot"))
-        .join(und, Seq("qid", "nid"), "left_anti")
-      dots
-        .join(norms.select(col("id").as("qid"), col("n2").as("qn2")), Seq("qid"))
-        .join(norms.select(col("id").as("nid"), col("n2").as("nn2")), Seq("nid"))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("qn2").cast("double")) * sqrt(col("nn2").cast("double"))))
-        .groupBy(col("qid"))
-        .agg(graft.plans.GraftExtensions.boundedTopK(
-          struct(col("cos"), col("nid")), 5, descFirst = true).as("top"))
-        .select(col("qid").as("query_id"),
-          posexplode(col("top")).as(Seq("p", "t")))
-        .select(col("query_id"), col("t.nid").as("neighbor_id"),
-          (col("p") + 1).as("rnk"), col("t.cos").as("cos"))
-        .orderBy(col("query_id"), col("rnk"))
-    }),
+    // close-but-unlinked).
+    "g_hard_negatives" -> ((s, dir) =>
+      fastRpNeighbors(refEdges(s, dir), hardNegatives = true)),
 
     // G5 — community detection via connected components. Min-label
     // propagation converges to min-node-id-per-component, which a
@@ -673,6 +650,38 @@ object GraphQueries extends QueryModule {
       |      FROM lineitem a JOIN lineitem b
       |        ON a.l_orderkey = b.l_orderkey
       |       AND b.l_linenumber = a.l_linenumber + 1)""".stripMargin
+
+  /** Twin of [[fastRpNeighbors]]. */
+  private def fastRpNeighborsSql(hardNegatives: Boolean): String = {
+    val notLinked = if (!hardNegatives) "" else
+      """
+        |  WHERE NOT EXISTS (SELECT 1 FROM e x
+        |    WHERE (x.src = q.qid AND x.dst = n.id)
+        |       OR (x.src = n.id AND x.dst = q.qid))""".stripMargin
+    s"""WITH $refEdgesSql,
+       |frund AS MATERIALIZED (SELECT src, dst FROM (
+       |    SELECT src, dst FROM e UNION SELECT dst, src FROM e)
+       |  WHERE src <> dst),
+       |${Graph.fastRpCtesSql("frund", 8, 3, scale = 1000000L)},
+       |fnorm AS MATERIALIZED (SELECT id, CAST(SUM(emb * emb) AS BIGINT) AS n2
+       |  FROM fremb GROUP BY id HAVING SUM(emb * emb) > 0),
+       |fq AS (SELECT id AS qid, pos, emb AS qv FROM fremb WHERE id < 20),
+       |fdot AS (SELECT q.qid, n.id AS nid,
+       |    CAST(SUM(q.qv * n.emb) AS BIGINT) AS dot
+       |  FROM fq q JOIN fremb n ON n.pos = q.pos AND n.id <> q.qid$notLinked
+       |  GROUP BY q.qid, n.id),
+       |fcos AS (SELECT d.qid, d.nid,
+       |    CAST(d.dot AS DOUBLE)
+       |      / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
+       |  FROM fdot d JOIN fnorm a ON a.id = d.qid
+       |       JOIN fnorm b ON b.id = d.nid),
+       |franked AS (SELECT qid, nid, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk
+       |  FROM fcos)
+       |SELECT qid AS query_id, nid AS neighbor_id, CAST(rnk AS INT) AS rnk, cos
+       |FROM franked WHERE rnk <= 5
+       |ORDER BY query_id, rnk""".stripMargin
+  }
 
   /** Closure-CTE component-size twin shared by `g_components` and
     * `g_components_star` (identical canonical output by construction). */
@@ -1082,33 +1091,7 @@ object GraphQueries extends QueryModule {
          |${Graph.kTrussCtesSql("e", 4)}
          |SELECT a, b FROM kt8 ORDER BY a, b""".stripMargin,
 
-    "g_hard_negatives" ->
-      s"""WITH $refEdgesSql,
-         |frund AS MATERIALIZED (SELECT src, dst FROM (
-         |    SELECT src, dst FROM e UNION SELECT dst, src FROM e)
-         |  WHERE src <> dst),
-         |${Graph.fastRpCtesSql("frund", 8, 3, scale = 1000000L)},
-         |fnorm AS MATERIALIZED (SELECT id, CAST(SUM(emb * emb) AS BIGINT) AS n2
-         |  FROM fremb GROUP BY id HAVING SUM(emb * emb) > 0),
-         |fq AS (SELECT id AS qid, pos, emb AS qv FROM fremb WHERE id < 20),
-         |fdot AS (SELECT q.qid, n.id AS nid,
-         |    CAST(SUM(q.qv * n.emb) AS BIGINT) AS dot
-         |  FROM fq q JOIN fremb n ON n.pos = q.pos AND n.id <> q.qid
-         |  WHERE NOT EXISTS (SELECT 1 FROM e x
-         |    WHERE (x.src = q.qid AND x.dst = n.id)
-         |       OR (x.src = n.id AND x.dst = q.qid))
-         |  GROUP BY q.qid, n.id),
-         |fcos AS (SELECT d.qid, d.nid,
-         |    CAST(d.dot AS DOUBLE)
-         |      / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-         |  FROM fdot d JOIN fnorm a ON a.id = d.qid
-         |       JOIN fnorm b ON b.id = d.nid),
-         |franked AS (SELECT qid, nid, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk
-         |  FROM fcos)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rnk AS INT) AS rnk, cos
-         |FROM franked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
+    "g_hard_negatives" -> fastRpNeighborsSql(hardNegatives = true),
 
     "g_walk_cooc" ->
       s"""WITH $refEdgesSql,
@@ -1123,30 +1106,7 @@ object GraphQueries extends QueryModule {
          |${Graph.pmiEmbedCtesSql(5)}
          |SELECT id, w AS emb FROM pw5 ORDER BY id""".stripMargin,
 
-    "g_fastrp_topk" ->
-      s"""WITH $refEdgesSql,
-         |frund AS MATERIALIZED (SELECT src, dst FROM (
-         |    SELECT src, dst FROM e UNION SELECT dst, src FROM e)
-         |  WHERE src <> dst),
-         |${Graph.fastRpCtesSql("frund", 8, 3, scale = 1000000L)},
-         |fnorm AS MATERIALIZED (SELECT id, CAST(SUM(emb * emb) AS BIGINT) AS n2
-         |  FROM fremb GROUP BY id HAVING SUM(emb * emb) > 0),
-         |fq AS (SELECT id AS qid, pos, emb AS qv FROM fremb WHERE id < 20),
-         |fdot AS (SELECT q.qid, n.id AS nid,
-         |    CAST(SUM(q.qv * n.emb) AS BIGINT) AS dot
-         |  FROM fq q JOIN fremb n ON n.pos = q.pos AND n.id <> q.qid
-         |  GROUP BY q.qid, n.id),
-         |fcos AS (SELECT d.qid, d.nid,
-         |    CAST(d.dot AS DOUBLE)
-         |      / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-         |  FROM fdot d JOIN fnorm a ON a.id = d.qid
-         |       JOIN fnorm b ON b.id = d.nid),
-         |franked AS (SELECT qid, nid, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk
-         |  FROM fcos)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rnk AS INT) AS rnk, cos
-         |FROM franked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
+    "g_fastrp_topk" -> fastRpNeighborsSql(hardNegatives = false),
 
     "g_pagerank_weighted" ->
       s"""WITH we AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst,

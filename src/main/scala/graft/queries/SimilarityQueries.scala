@@ -328,17 +328,61 @@ object SimilarityQueries extends QueryModule {
   private def cosExpr(a: String, b: String): String =
     s"list_dot_product($a.v, $b.v) / sqrt(list_dot_product($a.v, $a.v) * list_dot_product($b.v, $b.v))"
 
+  /** Twin of the IVF probe rank ([[Similarity.ivfProbeRank]]) over `e`
+    * and the trained `cents`: `ranked0(vec_id, v, centroid_id, rnk)`,
+    * rank 1 being the vector's bucket. */
+  private val ivfRankCtes =
+    s"""scored AS (SELECT e.vec_id, e.v, c.centroid_id, ${cosExpr("e", "c")} AS cos
+       |           FROM e CROSS JOIN cents$kmIters c),
+       |ranked0 AS (SELECT vec_id, v, centroid_id,
+       |                   ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                     ORDER BY cos DESC, centroid_id) AS rnk
+       |            FROM scored)""".stripMargin
+
+  /** Twin of [[Similarity.ivfTopKWith]]'s candidates after
+    * [[ivfRankCtes]]: `cand(query_id, vec_id, cos)`, every corpus vector
+    * in the `nProbe` buckets nearest each query, self-match excluded,
+    * deduplicated. */
+  private def ivfCandCtes(nProbe: Int): String =
+    s"""$ivfRankCtes,
+       |assigned AS (SELECT vec_id, v, centroid_id FROM ranked0 WHERE rnk = 1),
+       |q AS (SELECT vec_id AS query_id, v, centroid_id AS qc
+       |      FROM ranked0 WHERE vec_id < $nQueries AND rnk <= $nProbe),
+       |cand AS (SELECT DISTINCT q.query_id, a.vec_id, ${cosExpr("q", "a")} AS cos
+       |         FROM q JOIN assigned a ON a.centroid_id = q.qc
+       |                               AND a.vec_id <> q.query_id)""".stripMargin
+
+  /** Twin of [[Similarity.ivfTopKWith]] over the trained index. */
+  private def ivfTopKSql(nProbe: Int): String =
+    s"""WITH $eCte,
+       |${Similarity.kMeansCtesSql(nCentroids, kmIters, dim)},
+       |${ivfCandCtes(nProbe)},
+       |ranked AS (SELECT query_id, vec_id, cos,
+       |                  ROW_NUMBER() OVER (PARTITION BY query_id
+       |                    ORDER BY cos DESC, vec_id) AS rnk
+       |           FROM cand)
+       |SELECT query_id, vec_id AS neighbor_id, rnk, cos
+       |FROM ranked WHERE rnk <= $ivfK
+       |ORDER BY query_id, rnk""".stripMargin
+
+  /** Twin of [[Similarity.bruteForceTopK]]'s ranking over `e`:
+    * `branked(query_id, vec_id, cos, rnk)`, every non-self vector ranked
+    * per query. */
+  private val bruteRankCtes =
+    s"""bq AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $nQueries),
+       |bscored AS (SELECT bq.query_id, e.vec_id, ${cosExpr("bq", "e")} AS cos
+       |            FROM bq JOIN e ON e.vec_id <> bq.query_id),
+       |branked AS (SELECT query_id, vec_id, cos,
+       |                   ROW_NUMBER() OVER (PARTITION BY query_id
+       |                     ORDER BY cos DESC, vec_id) AS rnk
+       |            FROM bscored)""".stripMargin
+
   /** Twin of [[Similarity.semDedup]] as a CTE chain over `e` + trained
     * `cents` — ends in `surv(vec_id, centroid_id, v)`; shared by the
     * dd_semdedup oracle and the composed embedding pipeline. */
   private def semDedupCtes: String =
-    s"""scored AS (SELECT e.vec_id, c.centroid_id, ${cosExpr("e", "c")} AS cos, e.v
-       |           FROM e CROSS JOIN cents$kmIters c),
-       |m AS (SELECT vec_id, centroid_id, v FROM (
-       |        SELECT vec_id, centroid_id, v,
-       |               ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                 ORDER BY cos DESC, centroid_id) AS rnk
-       |        FROM scored) WHERE rnk = 1),
+    s"""$ivfRankCtes,
+       |m AS (SELECT vec_id, centroid_id, v FROM ranked0 WHERE rnk = 1),
        |dups AS (SELECT DISTINCT b.vec_id
        |         FROM m a JOIN m b ON a.centroid_id = b.centroid_id
        |                          AND a.vec_id < b.vec_id
@@ -346,9 +390,13 @@ object SimilarityQueries extends QueryModule {
        |surv AS (SELECT vec_id, centroid_id, v FROM m
        |         WHERE vec_id NOT IN (SELECT vec_id FROM dups))""".stripMargin
 
-  /** Twin of [[Similarity.quantize]]: same `floor(x/s·127 + 0.5)` grid,
-    * BIGINT code sums via an index fold over the fixed dim. */
-  private def quantizeCtes: String =
+  /** Twin of [[Similarity.quantizedTopK]]'s ranking: the
+    * [[Similarity.quantize]] grid (`floor(x/s·127 + 0.5)`, BIGINT code
+    * sums via an index fold over the fixed dim), the exact BIGINT dots of
+    * each query against every other non-zero vector, and
+    * `qranked(query_id, vec_id, dot_q, cos_q, rnk)` by (cos_q DESC,
+    * vec_id). */
+  private val quantizedRankCtes: String =
     s"""qs AS (SELECT vec_id, v,
        |         list_max(list_transform(v, x -> abs(x))) AS s FROM e),
        |qz0 AS (SELECT vec_id, s,
@@ -359,47 +407,35 @@ object SimilarityQueries extends QueryModule {
        |qz AS (SELECT vec_id, s, codes,
        |         CAST(list_sum(list_transform(range(1, ${dim + 1}),
        |           i -> codes[CAST(i AS INT)] * codes[CAST(i AS INT)])) AS BIGINT) AS norm2
-       |       FROM qz0)""".stripMargin
+       |       FROM qz0),
+       |qq AS (SELECT vec_id AS query_id, codes AS qc, norm2 AS qn
+       |       FROM qz WHERE vec_id < $nQueries AND norm2 > 0),
+       |scored AS (SELECT q.query_id, c.vec_id,
+       |    CAST(list_sum(list_transform(range(1, ${dim + 1}),
+       |      i -> q.qc[CAST(i AS INT)] * c.codes[CAST(i AS INT)])) AS BIGINT) AS dot_q,
+       |    q.qn, c.norm2
+       |  FROM qq q CROSS JOIN (SELECT vec_id, codes, norm2 FROM qz WHERE norm2 > 0) c
+       |  WHERE c.vec_id <> q.query_id),
+       |qranked AS (SELECT query_id, vec_id, dot_q,
+       |    CAST(dot_q AS DOUBLE) / sqrt(CAST(qn * norm2 AS DOUBLE)) AS cos_q,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY CAST(dot_q AS DOUBLE) / sqrt(CAST(qn * norm2 AS DOUBLE)) DESC,
+       |               vec_id) AS rnk
+       |  FROM scored)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "sim_quantized_topk" ->
       s"""WITH $eCte,
-         |$quantizeCtes,
-         |qq AS (SELECT vec_id AS query_id, codes AS qc, norm2 AS qn
-         |       FROM qz WHERE vec_id < $nQueries AND norm2 > 0),
-         |scored AS (SELECT q.query_id, c.vec_id,
-         |    CAST(list_sum(list_transform(range(1, ${dim + 1}),
-         |      i -> q.qc[CAST(i AS INT)] * c.codes[CAST(i AS INT)])) AS BIGINT) AS dot_q,
-         |    q.qn, c.norm2
-         |  FROM qq q CROSS JOIN (SELECT vec_id, codes, norm2 FROM qz WHERE norm2 > 0) c
-         |  WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, vec_id, dot_q,
-         |    CAST(dot_q AS DOUBLE) / sqrt(CAST(qn * norm2 AS DOUBLE)) AS cos_q,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY CAST(dot_q AS DOUBLE) / sqrt(CAST(qn * norm2 AS DOUBLE)) DESC,
-         |               vec_id) AS rnk
-         |  FROM scored)
+         |$quantizedRankCtes
          |SELECT query_id, vec_id AS neighbor_id, rnk, dot_q, cos_q
-         |FROM ranked WHERE rnk <= $topK
+         |FROM qranked WHERE rnk <= $topK
          |ORDER BY query_id, rnk""".stripMargin,
 
     "sim_quantized_rerank" ->
       s"""WITH $eCte,
-         |$quantizeCtes,
-         |qq AS (SELECT vec_id AS query_id, codes AS qc, norm2 AS qn
-         |       FROM qz WHERE vec_id < $nQueries AND norm2 > 0),
-         |scored AS (SELECT q.query_id, c.vec_id,
-         |    CAST(list_sum(list_transform(range(1, ${dim + 1}),
-         |      i -> q.qc[CAST(i AS INT)] * c.codes[CAST(i AS INT)])) AS BIGINT) AS dot_q,
-         |    q.qn, c.norm2
-         |  FROM qq q CROSS JOIN (SELECT vec_id, codes, norm2 FROM qz WHERE norm2 > 0) c
-         |  WHERE c.vec_id <> q.query_id),
-         |coarse AS (SELECT query_id, vec_id AS neighbor_id FROM (
-         |    SELECT query_id, vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY CAST(dot_q AS DOUBLE) / sqrt(CAST(qn * norm2 AS DOUBLE)) DESC,
-         |                 vec_id) AS rnk
-         |    FROM scored) WHERE rnk <= ${4 * topK}),
+         |$quantizedRankCtes,
+         |coarse AS (SELECT query_id, vec_id AS neighbor_id FROM qranked
+         |           WHERE rnk <= ${4 * topK}),
          |rer AS (SELECT co.query_id, co.neighbor_id,
          |    list_dot_product(a.v, b.v) / sqrt(list_dot_product(a.v, a.v) * list_dot_product(b.v, b.v)) AS cos
          |  FROM coarse co JOIN e a ON a.vec_id = co.query_id
@@ -412,15 +448,9 @@ object SimilarityQueries extends QueryModule {
 
     "sim_bruteforce_topk" ->
       s"""WITH $eCte,
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $nQueries),
-         |scored AS (SELECT q.query_id, e.vec_id, ${cosExpr("q", "e")} AS cos
-         |           FROM q JOIN e ON e.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, vec_id, cos,
-         |                  ROW_NUMBER() OVER (PARTITION BY query_id
-         |                    ORDER BY cos DESC, vec_id) AS rnk
-         |           FROM scored)
+         |$bruteRankCtes
          |SELECT query_id, vec_id AS neighbor_id, rnk, cos
-         |FROM ranked WHERE rnk <= $topK
+         |FROM branked WHERE rnk <= $topK
          |ORDER BY query_id, rnk""".stripMargin,
 
     "sim_kmeans_centroids" ->
@@ -450,33 +480,14 @@ object SimilarityQueries extends QueryModule {
     "sim_recall_eval" ->
       s"""WITH $eCte,
          |${Similarity.kMeansCtesSql(nCentroids, kmIters, dim)},
-         |scored AS (SELECT e.vec_id, c.centroid_id, ${cosExpr("e", "c")} AS cos
-         |           FROM e CROSS JOIN cents$kmIters c),
-         |assign AS (SELECT vec_id, centroid_id FROM (
-         |             SELECT vec_id, centroid_id,
-         |                    ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                      ORDER BY cos DESC, centroid_id) AS rnk
-         |             FROM scored) WHERE rnk = 1),
-         |ea AS (SELECT e.vec_id, e.v, a.centroid_id
-         |       FROM e JOIN assign a ON a.vec_id = e.vec_id),
-         |q AS (SELECT vec_id AS query_id, v, centroid_id AS qc
-         |      FROM ea WHERE vec_id < $nQueries),
-         |cand AS (SELECT q.query_id, ea.vec_id, ${cosExpr("q", "ea")} AS cos
-         |         FROM q JOIN ea ON ea.centroid_id = q.qc
-         |                       AND ea.vec_id <> q.query_id),
+         |${ivfCandCtes(nProbe = 1)},
          |approx AS (SELECT query_id, vec_id FROM (
          |             SELECT query_id, vec_id,
          |                    ROW_NUMBER() OVER (PARTITION BY query_id
          |                      ORDER BY cos DESC, vec_id) AS rnk
          |             FROM cand) WHERE rnk <= $ivfK),
-         |bq AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $nQueries),
-         |bscored AS (SELECT bq.query_id, e.vec_id, ${cosExpr("bq", "e")} AS cos
-         |            FROM bq JOIN e ON e.vec_id <> bq.query_id),
-         |truth AS (SELECT query_id, vec_id FROM (
-         |            SELECT query_id, vec_id,
-         |                   ROW_NUMBER() OVER (PARTITION BY query_id
-         |                     ORDER BY cos DESC, vec_id) AS rnk
-         |            FROM bscored) WHERE rnk <= $ivfK),
+         |$bruteRankCtes,
+         |truth AS (SELECT query_id, vec_id FROM branked WHERE rnk <= $ivfK),
          |h AS (SELECT t.query_id, COUNT(*) AS n_hit
          |      FROM truth t JOIN approx a
          |        ON a.query_id = t.query_id AND a.vec_id = t.vec_id
@@ -550,62 +561,13 @@ object SimilarityQueries extends QueryModule {
     "sim_ivf_assign" ->
       s"""WITH $eCte,
          |${Similarity.kMeansCtesSql(nCentroids, kmIters, dim)},
-         |scored AS (SELECT e.vec_id, c.centroid_id, ${cosExpr("e", "c")} AS cos
-         |           FROM e CROSS JOIN cents$kmIters c),
-         |ranked AS (SELECT vec_id, centroid_id,
-         |                  ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                    ORDER BY cos DESC, centroid_id) AS rnk
-         |           FROM scored)
-         |SELECT vec_id, centroid_id FROM ranked WHERE rnk = 1
+         |$ivfRankCtes
+         |SELECT vec_id, centroid_id FROM ranked0 WHERE rnk = 1
          |ORDER BY vec_id""".stripMargin,
 
-    "sim_ivf_topk" ->
-      s"""WITH $eCte,
-         |${Similarity.kMeansCtesSql(nCentroids, kmIters, dim)},
-         |scored AS (SELECT e.vec_id, c.centroid_id, ${cosExpr("e", "c")} AS cos
-         |           FROM e CROSS JOIN cents$kmIters c),
-         |assign AS (SELECT vec_id, centroid_id FROM (
-         |             SELECT vec_id, centroid_id,
-         |                    ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                      ORDER BY cos DESC, centroid_id) AS rnk
-         |             FROM scored) WHERE rnk = 1),
-         |ea AS (SELECT e.vec_id, e.v, a.centroid_id
-         |       FROM e JOIN assign a ON a.vec_id = e.vec_id),
-         |q AS (SELECT vec_id AS query_id, v, centroid_id AS qc
-         |      FROM ea WHERE vec_id < $nQueries),
-         |cand AS (SELECT q.query_id, ea.vec_id, ${cosExpr("q", "ea")} AS cos
-         |         FROM q JOIN ea ON ea.centroid_id = q.qc
-         |                       AND ea.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, vec_id, cos,
-         |                  ROW_NUMBER() OVER (PARTITION BY query_id
-         |                    ORDER BY cos DESC, vec_id) AS rnk
-         |           FROM cand)
-         |SELECT query_id, vec_id AS neighbor_id, rnk, cos
-         |FROM ranked WHERE rnk <= $ivfK
-         |ORDER BY query_id, rnk""".stripMargin,
+    "sim_ivf_topk" -> ivfTopKSql(nProbe = 1),
 
-    "sim_ivf_probe2" ->
-      s"""WITH $eCte,
-         |${Similarity.kMeansCtesSql(nCentroids, kmIters, dim)},
-         |scored AS (SELECT e.vec_id, e.v, c.centroid_id, ${cosExpr("e", "c")} AS cos
-         |           FROM e CROSS JOIN cents$kmIters c),
-         |ranked0 AS (SELECT vec_id, v, centroid_id, cos,
-         |                   ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                     ORDER BY cos DESC, centroid_id) AS rnk
-         |            FROM scored),
-         |assigned AS (SELECT vec_id, v, centroid_id FROM ranked0 WHERE rnk = 1),
-         |q AS (SELECT vec_id AS query_id, v, centroid_id AS qc
-         |      FROM ranked0 WHERE vec_id < $nQueries AND rnk <= 2),
-         |cand AS (SELECT DISTINCT q.query_id, a.vec_id, ${cosExpr("q", "a")} AS cos
-         |         FROM q JOIN assigned a ON a.centroid_id = q.qc
-         |                               AND a.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, vec_id, cos,
-         |                  ROW_NUMBER() OVER (PARTITION BY query_id
-         |                    ORDER BY cos DESC, vec_id) AS rnk
-         |           FROM cand)
-         |SELECT query_id, vec_id AS neighbor_id, rnk, cos
-         |FROM ranked WHERE rnk <= $ivfK
-         |ORDER BY query_id, rnk""".stripMargin,
+    "sim_ivf_probe2" -> ivfTopKSql(nProbe = 2),
 
     "sim_lsh_near_pairs" ->
       s"""WITH $eCte,

@@ -4,11 +4,14 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
+  ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -105,35 +108,55 @@ case class ApiOffset(n: Long) extends Offset {
   * the id files that appeared since the last committed offset, planned
   * through the same partition/transport machinery as the batch scan —
   * the reference's scheduled API pulls as a Structured Streaming
-  * source. */
+  * source.
+  *
+  * The driver lists `dir` through its Hadoop `FileSystem`, so the landing
+  * dir's listing works on any scheme the session can resolve. The
+  * default [[LandedFileTransport]] reads the files on the executors
+  * through `java.nio`, so with it the landing dir stays local; a
+  * transport with remote reads lifts that.
+  *
+  * `Trigger.AvailableNow` runs to the listing taken at query start
+  * ([[prepareForTriggerAvailableNow]]): files landed later wait for the
+  * next run. The read limit stays all-available, so such a run is one
+  * micro-batch over everything landed, as before. */
 class ApiMicroBatchStream(props: Map[String, String], numPartitions: Int,
-    batchSize: Int, transportClass: String) extends MicroBatchStream {
-  private val dir = props.getOrElse("dir",
-    sys.error("graft-api streaming needs the 'dir' option"))
+    batchSize: Int, transportClass: String)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+  private val dir = new Path(props.getOrElse("dir",
+    sys.error("graft-api streaming needs the 'dir' option")))
+  private lazy val fs =
+    dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
 
-  private def idsNow(): Array[String] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(p)) Array.empty
-    else {
-      val ds = java.nio.file.Files.list(p)
-      try {
-        ds.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.endsWith(".json"))
-          .map(_.stripSuffix(".json"))
-          .toArray.sorted
-      } finally ds.close()
-    }
+  /** The newest sorted listing of the landed ids. */
+  @volatile private var listed = Array.empty[String]
+  /** The offset an `AvailableNow` run stops at. */
+  @volatile private var availableNowEnd = Option.empty[Long]
+
+  private def list(): Array[String] = {
+    listed =
+      if (!fs.exists(dir)) Array.empty
+      else fs.listStatus(dir).map(_.getPath.getName)
+        .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).sorted
+    listed
   }
 
   override def initialOffset(): Offset = ApiOffset(0L)
-  override def latestOffset(): Offset = ApiOffset(idsNow().length.toLong)
+  override def latestOffset(): Offset = ApiOffset(list().length.toLong)
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val n = list().length.toLong
+    ApiOffset(availableNowEnd.fold(n)(math.min(_, n)))
+  }
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(list().length.toLong)
   override def deserializeOffset(json: String): Offset =
     ApiOffset(json.trim.toLong)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ApiOffset].n.toInt
     val e = end.asInstanceOf[ApiOffset].n.toInt
-    val slice = idsNow().slice(s, e)
+    // the listing `latestOffset` took covers `end` unless this stream
+    // was restarted into a recovered batch
+    val slice = (if (listed.length >= e) listed else list()).slice(s, e)
     if (slice.isEmpty) Array.empty
     else {
       val per = math.max(1, (slice.length + numPartitions - 1) / numPartitions)
@@ -187,8 +210,9 @@ trait ApiTransport extends Serializable {
 }
 
 /** Offline transport: serves `<id>.json` from a landed directory (what
-  * the reference's dump step produces; this container has no egress).
-  * Missing ids yield a null payload — the dead-letter trigger. */
+  * the reference's dump step produces). Missing ids yield a null payload
+  * — the dead-letter trigger. Reads run on the executors through
+  * `java.nio`, so `dir` must be a local path that every executor sees. */
 class LandedFileTransport extends ApiTransport {
   private var dir: String = _
   override def open(props: Map[String, String]): Unit =

@@ -4,12 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.{Pq, Sampling, Similarity}
 
 /** [[graft.plans.BoundedTopK]] vs the window `row_number` formulation it
   * replaces: identical rows AND ranks on tied and untied scores, both
-  * orderings; and the quantizedTopK plan it serves must show the bounded
-  * aggregate with no Window operator (the pair shuffle is gone). */
+  * orderings; and the plans of the operators it serves must show the
+  * bounded aggregate with no Window operator (the pair shuffle is gone). */
 class BoundedTopKSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -63,5 +63,34 @@ class BoundedTopKSpec extends AnyFunSuite {
       col("vec_id") < 5, 3).queryExecution.executedPlan.toString
     assert(plan.contains("bounded_topk"), s"no bounded_topk in:\n$plan")
     assert(!plan.contains("Window"), s"Window survived in:\n$plan")
+  }
+
+  test("every operator finishing through topKPerGroup plans a bounded aggregate, no Window") {
+    import spark.implicits._
+    // 16 vectors of dim 8: planning reads no table, and the one operator
+    // that executes anything (the residual codebook pins) pins 16 rows
+    val emb = (0L until 16L).map(i => (i,
+        Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val (m, dsub, isQ) = (2, 4, col("vec_id") < 3)
+    val ivfC = Similarity.kMeansCentroids(emb, 3, iters = 0)
+    val pqC = Pq.subVectors(emb, m, dsub).filter(col("vec_id") < 3)
+      .select(col("sub"), col("vec_id").as("centroid_id"), col("sv").as("cv"))
+    Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(emb, isQ, 3),
+      "quantizedRerankTopK" ->
+        Similarity.quantizedRerankTopK(emb, isQ, 3, shortlist = 6),
+      "ivfTopKWith" -> Similarity.ivfTopKWith(emb, ivfC, isQ, 3, nProbe = 2),
+      "adcTopK" -> Pq.adcTopK(emb, pqC, isQ, 3, m, dsub),
+      "ivfAdcTopK" -> Pq.ivfAdcTopK(emb, ivfC, pqC, isQ, 3, m, dsub, nProbe = 2),
+      "ivfAdcResidualTopK" -> Pq.ivfAdcResidualTopK(emb, ivfC, isQ, 3, m,
+        dsub, ksub = 2, pqIters = 0, nProbe = 2),
+      "reservoir" -> Sampling.reservoir(emb, col("vec_id"),
+        col("vec_id") % 2, 3, "s")
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("bounded_topk"), s"$name: no bounded_topk in:\n$plan")
+      assert(!plan.contains("Window"), s"$name: a Window in:\n$plan")
+    }
   }
 }

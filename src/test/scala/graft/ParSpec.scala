@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.Shims
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.Par
@@ -58,5 +63,46 @@ class ParSpec extends AnyFunSuite {
       graft.plans.Pins.pin(df.selectExpr("count(x) as c")).head.getLong(0))
     assert(s1 === 500500L)
     assert(s2 === 1000L)
+  }
+
+  test("a failed leg cancels its sibling's running Spark jobs before both throws") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val running = ConcurrentHashMap.newKeySet[Int]()
+    val started = new CountDownLatch(1)
+    val sibling = "par-spec-sibling"
+    // only the sibling's jobs count: a stray job of another suite must
+    // neither release leg a early nor show up as still running
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == sibling)) {
+          running.add(e.jobId); started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
+    }
+    Shims.drainListenerBus(spark)
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalStateException] {
+        Par.both(
+          {
+            assert(started.await(60, TimeUnit.SECONDS), "sibling job never started")
+            throw new IllegalStateException("leg a failed")
+          }: Long,
+          // one task that runs until it is killed (capped past both's
+          // 60 s bounded join, so an uncancelled job outlives the call)
+          { sc.setJobDescription(sibling); sc.parallelize(Seq(1), 1) }.map { x =>
+            val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(90)
+            while (System.nanoTime() < deadline &&
+                !TaskContext.get().isInterrupted()) Thread.sleep(20)
+            x
+          }.count())
+      }
+      assert(e.getMessage === "leg a failed", "the first failure is rethrown")
+      assert(e.getSuppressed.nonEmpty, "the cancelled sibling's failure rides along")
+      Shims.drainListenerBus(spark)
+      assert(running.isEmpty, s"sibling jobs still running: $running")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -5,10 +5,13 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{LandedFileTransport, Sources}
+import graft.sources.{ApiDataSource, ApiInputPartition, LandedFileTransport, Sources}
 
 /** Landed-file transport that records every fetch group's size (static —
   * local-mode executors share the JVM), proving the one-request-per-
@@ -121,6 +124,30 @@ class SourcesSpec extends AnyFunSuite {
     val second = spark.read.parquet(out).collect().map(_.getString(0)).sorted
     // exactly-once: the first three are NOT re-consumed on resume
     assert(second.toSeq == Seq("w001", "w002", "w003", "w004", "w005"))
+  }
+
+  test("graft-api AvailableNow run stops at the listing taken when it starts") {
+    val dir = Files.createTempDirectory("apinow").toString
+    def land(i: Int): Unit = Files.writeString(
+      java.nio.file.Paths.get(dir, f"w$i%03d.json"), s"""{"id":"w$i"}""")
+    (1 to 3).foreach(land)
+    val opts = new CaseInsensitiveStringMap(
+      Map("dir" -> dir, "numPartitions" -> "2").asJava)
+    val stream = new ApiDataSource().getTable(ApiDataSource.schema,
+        Array.empty, opts).asInstanceOf[SupportsRead]
+      .newScanBuilder(opts).build()
+      .toMicroBatchStream(Files.createTempDirectory("apinow-ck").toString)
+    assert(stream.isInstanceOf[SupportsTriggerAvailableNow],
+      "without it Spark folds an AvailableNow run into one Trigger.Once batch")
+    val s = stream.asInstanceOf[MicroBatchStream with SupportsTriggerAvailableNow]
+    s.prepareForTriggerAvailableNow()
+    land(4)
+    val start = s.initialOffset()
+    val end = s.latestOffset(start, s.getDefaultReadLimit)
+    assert(end.json() == "3", "a file landed after the run started waits for the next run")
+    val planned = s.planInputPartitions(start, end).toSeq
+      .flatMap(_.asInstanceOf[ApiInputPartition].ids)
+    assert(planned == Seq("w001", "w002", "w003"))
   }
 
   test("partitioned parquet write prunes partitions on read") {

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{AcidBucketTable, StreamingWarehouse, Warehouse}
+import graft.sources.{ApiInputPartition, ApiMicroBatchStream, LandedFileTransport}
 import graft.streaming.{EventStream, ParquetUpsertTable, StreamingSketches, StreamingTextPipeline}
 
 /** The local disk under a scheme of its own: a Hadoop `FileSystem` that
@@ -192,6 +193,23 @@ class StateDirsSpec extends AnyFunSuite {
     }
     assert(local == (Some("v1"), Seq("[1,11]", "[2,5]")))
     assert(onScheme == local)
+  }
+
+  test("the graft-api stream lists a landing dir on a non-local scheme") {
+    val dir = tmp("sd-api")
+    Seq("w002", "w001", "w003").foreach(i =>
+      Files.writeString(java.nio.file.Paths.get(dir, s"$i.json"), "{}"))
+    Files.writeString(java.nio.file.Paths.get(dir, "notes.txt"), "")
+    val got = withHadoopConf(s"fs.${SchemeLocalFileSystem.Scheme}.impl",
+        classOf[SchemeLocalFileSystem].getName) {
+      val s = new ApiMicroBatchStream(
+        Map("dir" -> s"${SchemeLocalFileSystem.Scheme}://$dir"), 2, 50,
+        classOf[LandedFileTransport].getName)
+      val end = s.latestOffset()
+      (end.json(), s.planInputPartitions(s.initialOffset(), end).toSeq
+        .flatMap(_.asInstanceOf[ApiInputPartition].ids))
+    }
+    assert(got == (("3", Seq("w001", "w002", "w003"))))
   }
 
   test("a committer that writes no _SUCCESS fails the text pipeline instead of hiding its state") {
