@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.plans.Pins
 import graft.plans.Pins.PinnedOps
@@ -14,14 +21,17 @@ import graft.plans.Pins.PinnedOps
   * of joins+aggregations with `localCheckpoint` lineage truncation per
   * iteration.
   *
-  * Scale notes: an iteration is not one Spark job. Measured on Spark
-  * 4.1.2 at local[2] (a 200-node, 400-edge graph), each two-round
-  * [[pageRankFixed]] pin costs 7 jobs and 2 executed shuffle-map stages:
-  * one shuffle keyed by node id per round executes, while AQE runs every
-  * query stage and broadcast as a job of its own. The natural
-  * co-partitioning for a 1000-executor run is hash(id) on both ranks and
-  * edges so the join is local after the first shuffle. Nothing collects
-  * to the driver except loop counters and convergence checks (single-row
+  * Scale notes: in a DataFrame loop an iteration is not one Spark job.
+  * Each round re-runs Catalyst (analysis, optimization, AQE
+  * re-planning) on the driver, and AQE runs every query stage and
+  * broadcast as a job of its own. The rank, label-propagation and k-core
+  * fixed points therefore run as co-partitioned RDD rounds instead
+  * ([[coRounds]]): the static side (adjacency) and the state are
+  * hash(id)-partitioned alike, the joins are local, and a round is one
+  * shuffle stage with map-side combine; a two-round cut is one job. At
+  * sf0.001 and local[2] `g_pagerank_parts` went from 71 to 17 jobs
+  * (BASELINE.md "Co-partitioned RDD rounds"). Nothing collects to the
+  * driver except loop counters and convergence checks (single-row
   * aggregates).
   */
 object Graph {
@@ -34,33 +44,172 @@ object Graph {
     new java.util.concurrent.ConcurrentHashMap[
       org.apache.spark.SparkContext, SparkSession]
 
-  private val PinEvery = 2 // see `rounds`
+  private val PinEvery = 2 // see `coRounds`
 
-  /** `iters` rounds of `step` from `init`, pinning every second round
-    * and always the last — the loop of [[rankFixed]],
-    * [[labelPropagation]] and [[kCoreFixed]]. Legal only when the round
-    * frame has ONE mid-loop consumer (the next round's join): pinning
-    * every second round then halves the eager-materialization job count
-    * without ever double-evaluating a two-consumer frame (the r8
-    * fifth-wave regression came from UNPINNING such frames, not from
-    * deeper per-pin plans; BASELINE.md "Round-9 pin-cadence A/B"
-    * measured cadence 1 vs 2). The final round always pins, so the
-    * result is a materialized leaf. */
-  private def rounds(init: DataFrame, iters: Int)(
-      step: DataFrame => DataFrame): DataFrame =
-    (1 to iters).foldLeft(init) { (cur, t) =>
-      val next = step(cur)
-      if (t % PinEvery == 0 || t == iters) next.pinned else next
+  /** One node's static side in [[coRounds]]: the nodes it sends to, one
+    * entry per edge, with an integer weight per entry (`null` = every
+    * weight 1); `deg` is the weight sum. */
+  private final class Adj(val to: Array[Long], val w: Array[Long]) extends Serializable {
+    def weight(i: Int): Long = if (w == null) 1L else w(i)
+    val deg: Long = if (w == null) to.length.toLong else w.foldLeft(0L)(Math.addExact)
+  }
+
+  /** A node's targets as they arrive at its partition. */
+  private final class Targets extends Serializable {
+    val to = new mutable.ArrayBuilder.ofLong
+    val w = new mutable.ArrayBuilder.ofLong
+    def add(t: (Long, Long)): Targets = {
+      if (t != null) { to += t._1; w += t._2 }
+      this
+    }
+    def addAll(o: Targets): Targets = { to ++= o.to.result(); w ++= o.w.result(); this }
+  }
+
+  /** The static side of [[coRounds]], built under the label `<op>
+    * setup`: `edges`' `src`, `dst` and integer `weight` column (1 when
+    * absent), read as longs off the executed plan (a null endpoint fails
+    * loudly), turned by `sends` into (node, (target, weight)) rows —
+    * `null` for a node with nothing to send —, grouped per node by
+    * `finish` and hash-partitioned by node id into the session's
+    * `spark.sql.shuffle.partitions`. Each partition is sorted by id, so a
+    * recomputed partition comes back in the same order. */
+  private def adjacency(op: String, edges: DataFrame, weight: Option[String])(
+      sends: ((Long, Long, Long)) => Iterator[(Long, (Long, Long))])(
+      finish: (Long, Targets) => Adj): RDD[(Long, Adj)] = {
+    val spark = edges.sparkSession
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    labelled(spark.sparkContext, s"$op setup") {
+      edges.select(col("src").cast("long"), col("dst").cast("long"),
+          weight.fold(lit(1L))(col(_).cast("long")))
+        .queryExecution.toRdd.flatMap { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1), s"$op: null node id in edges")
+          sends((r.getLong(0), r.getLong(1), r.getLong(2)))
+        }
+    }.combineByKeyWithClassTag[Targets](new Targets().add(_), _.add(_),
+        _.addAll(_), new HashPartitioner(parts), mapSideCombine = false)
+      .mapPartitions(_.map { case (id, t) => (id, finish(id, t)) }
+        .toArray.sortBy(_._1).iterator, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Both directions of every edge, self-loops kept only with
+    * `selfLoops`, each node's targets distinct and sorted, plus its own id
+    * once more with `selfVote` — the vote edges of [[labelPropagation]]
+    * and the neighbor lists of [[kCoreFixed]]. */
+  private def undirectedAdjacency(op: String, edges: DataFrame,
+      selfLoops: Boolean, selfVote: Boolean): RDD[(Long, Adj)] =
+    adjacency(op, edges, None) {
+      case (s, d, _) if s != d || selfLoops => Iterator(s -> (d, 1L), d -> (s, 1L))
+      case _ => Iterator.empty
+    } { (id, t) =>
+      val to = t.to.result().sorted.distinct
+      new Adj(if (selfVote) to :+ id else to, null)
     }
 
-  /** One rank variant's pieces: the per-edge contribution (over
-    * `rank_fp`, `deg`, edge columns), initial rank and teleport (`id`). */
-  private final case class RankTerms(contrib: Column, init: Column, teleport: Column)
+  /** Run `f` with the thread's job description and short call site set to
+    * `label` (so an event log, the UI and [[graft.obs.QueryProfile]] name
+    * the operator and round), then restore both. Job tags, such as a
+    * [[graft.plans.Par]] leg's, are left alone. */
+  private def labelled[T](sc: SparkContext, label: String)(f: => T): T = {
+    val keys = Seq("spark.job.description", "callSite.short")
+    val previous = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, label))
+    try f finally keys.zip(previous).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 
-  private val plainContrib = "(rank_fp * 85) DIV (deg * 100)"
+  /** The fixed-point loop of [[rankFixed]], [[labelPropagation]] and
+    * [[kCoreFixed]] as co-partitioned RDD rounds, with no Catalyst
+    * planning inside the loop. The state (node id → value, starting at
+    * `init`) lives on `adj`'s partitioner, in `adj`'s row order. A round
+    * zips each state partition with its `adj` partition, sends
+    * `send(value, adj, i)` along every target `i`, and combines what
+    * arrives per target in ONE shuffle onto the same partitioner (map-side
+    * combine through `one`/`add`/`merge`); zipping that with `adj` again
+    * gives each node `next(id, combined)`. Joins are therefore local and
+    * a round is one shuffle stage, whatever the graph's size.
+    *
+    * Every [[PinEvery]]-th round and the last are cut with
+    * `localCheckpoint` and one count (one job that runs the rounds since
+    * the previous cut), labelled `<op> round t/iters`; the previous cut is
+    * released then, and `adj` when the loop ends. */
+  private def coRounds[C: ClassTag](op: String, adj: RDD[(Long, Adj)],
+      iters: Int)(init: (Long, Adj) => Long, send: (Long, Adj, Int) => Long)(
+      one: Long => C, add: (C, Long) => C, merge: (C, C) => C)(
+      next: (Long, Option[C]) => Long): RDD[(Long, Long)] = {
+    val part = adj.partitioner.get
+    var state = adj.mapPartitions(_.map { case (id, a) => (id, init(id, a)) },
+      preservesPartitioning = true)
+    var cut = Option.empty[RDD[(Long, Long)]]
+    try for (t <- 1 to iters) {
+      val inflow = adj.zipPartitions(state) { (as, vs) =>
+        as.zip(vs).flatMap { case ((id, a), (vid, v)) =>
+          require(id == vid, s"$op: state row $vid beside node $id")
+          Iterator.tabulate(a.to.length)(i => (a.to(i), send(v, a, i)))
+        }
+      }.combineByKeyWithClassTag(one, add, merge, part)
+      state = adj.zipPartitions(inflow, preservesPartitioning = true) { (as, cs) =>
+        val got = mutable.LongMap.from(cs)
+        as.map { case (id, _) => (id, next(id, got.get(id))) }
+      }
+      if (t % PinEvery == 0 || t == iters) {
+        state = state.localCheckpoint()
+        labelled(adj.sparkContext, s"$op round $t/$iters")(state.count())
+        cut.foreach(_.unpersist(blocking = false))
+        cut = Some(state)
+      }
+    } finally adj.unpersist(blocking = false)
+    state
+  }
 
-  private def uniformTerms(n: Long, scale: Long, contrib: String): RankTerms =
-    RankTerms(expr(contrib), lit(scale / n), lit((15L * scale) / (100L * n)))
+  /** Per-node counts of the values [[coRounds]] sends: label votes for
+    * [[labelPropagation]], the neighbor-value histogram for
+    * [[kCoreFixed]]. Shuffled as its (value, count) pairs of longs, not
+    * as a hash table's slots. */
+  private final class Counts extends Serializable {
+    @transient private var m = new mutable.LongMap[Long]
+    def add(v: Long, n: Long = 1L): Counts = { m(v) = m.getOrElse(v, 0L) + n; this }
+    def addAll(o: Counts): Counts = { o.m.foreachEntry(add); this }
+    def entries: Iterator[(Long, Long)] = m.iterator
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+      out.writeInt(m.size)
+      m.foreachEntry { (v, n) => out.writeLong(v); out.writeLong(n) }
+    }
+    private def readObject(in: java.io.ObjectInputStream): Unit = {
+      m = new mutable.LongMap[Long]
+      for (_ <- 0 until in.readInt()) add(in.readLong(), in.readLong())
+    }
+  }
+
+  /** A [[coRounds]] result as a DataFrame `(id, <value>)`: `id` of the
+    * type and nullability the union of `edges`' endpoints has, the value
+    * field as `value` makes it from that id type. */
+  private def stateFrame(edges: DataFrame, state: RDD[(Long, Long)],
+      value: DataType => StructField): DataFrame = {
+    val id = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).schema.head
+    val v = value(id.dataType)
+    edges.sparkSession.createDataFrame(state.map { case (k, x) => Row(k, x) },
+        StructType(Seq(id.copy(dataType = LongType), v.copy(dataType = LongType))))
+      .select(col("id").cast(id.dataType).as("id"),
+        col(v.name).cast(v.dataType).as(v.name))
+  }
+
+  /** One rank variant's pieces as exact Long functions: a source's
+    * contribution over one out-edge (`rank_fp`, `deg`, edge weight), and
+    * the initial rank and teleport term of a node id. */
+  private final case class RankTerms(contrib: (Long, Long, Long) => Long,
+      init: Long => Long, teleport: Long => Long)
+
+  /** `(rank_fp * 85 * w) DIV ((deg + extraDeg) * 100)`, overflow-checked
+    * as Spark's ANSI arithmetic is. */
+  private def share(extraDeg: Long): (Long, Long, Long) => Long = (r, deg, w) =>
+    Math.multiplyExact(Math.multiplyExact(r, 85L), w) /
+      Math.multiplyExact(Math.addExact(deg, extraDeg), 100L)
+
+  private def uniformTerms(n: Long, scale: Long, extraDeg: Long = 0L): RankTerms = {
+    val (init, teleport) = (scale / n, (15L * scale) / (100L * n))
+    RankTerms(share(extraDeg), _ => init, _ => teleport)
+  }
 
   /** The fixed-point rank kernel behind [[pageRankFixed]],
     * [[pageRankWeightedFixed]], [[personalizedPageRankFixed]] and
@@ -76,45 +225,32 @@ object Graph {
     * partition/summation order, unlike a double accumulation; the twin
     * unrolling the same rounds is therefore bit-identical (the sim_kmeans
     * technique). Overflow: `rank_fp * 85 ≤ 8.5e13 << 2^63` at scale 1e12,
-    * at any graph size.
+    * at any graph size; every product and sum is `Math.*Exact`, so an
+    * overflow (a huge weight) throws as Spark's ANSI arithmetic does.
     *
-    * `edges` is the projected edge frame (`src`, `dst`, plus any column
-    * the contribution reads); `degree` aggregates a source's out-edges
-    * into `deg`. `terms` sees the cached edges and nodes, so a variant
-    * runs exactly the actions it needs (a node or edge count) and no
-    * other. Rounds follow [[rounds]]: the rank frame has one mid-loop
-    * consumer. */
-  private def rankFixed(edges: DataFrame, degree: Column, iters: Int,
-      scale: Long)(terms: (DataFrame, DataFrame) => RankTerms): DataFrame = {
-    // The input is a FOUR-consumer frame (both node-union branches, both
-    // sides of the degree self-join; ArticleRank's edge count makes
-    // five) — the r8 rule says it must not stay
-    // lazy. For cheap scan-join inputs (refEdges) this is neutral; for
-    // an expensive input it is decisive: g_articlerank_capped's 147 M-row
-    // projection was being re-derived ~4× inside this prelude (r13:
-    // 38 s per derivation vs 117 s whole-query, BASELINE.md
-    // "Round-13 measurements").
-    val e = edges.cache()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val withDeg = e.join(e.groupBy("src").agg(degree.as("deg")), "src")
-      .cache()
-    val t = terms(e, nodes)
-    val ranks = rounds(nodes.withColumn("rank_fp", t.init), iters) { r =>
-      val contribs = withDeg
-        .join(r, withDeg("src") === r("id"))
-        .select(col("dst"), t.contrib.as("c"))
-        .groupBy("dst").agg(sum("c").as("csum"))
-      nodes
-        .join(contribs, nodes("id") === contribs("dst"), "left")
-        .select(col("id"),
-          (t.teleport + coalesce(col("csum"), lit(0L))).as("rank_fp"))
+    * `edges` carries `src`, `dst` and, with `weight`, that integer weight
+    * column; every edge row counts, a repeated row twice, in `deg` = the
+    * source's weight sum and in its contributions. `terms` may ask
+    * `sizes()` for (node count, edge-row count): one job over the built
+    * adjacency, run only by the variants that need it. Rounds run in
+    * [[coRounds]] with the adjacency keyed by source (every node present,
+    * a sink with no targets). */
+  private def rankFixed(op: String, edges: DataFrame, weight: Option[String],
+      iters: Int, scale: Long)(terms: (() => (Long, Long)) => RankTerms): DataFrame = {
+    val adj = adjacency(op, edges, weight) {
+      case (s, d, w) => Iterator(s -> (d, w), d -> null)
+    }((_, t) => new Adj(t.to.result(), if (weight.isDefined) t.w.result() else null))
+    val t = labelled(edges.sparkSession.sparkContext, s"$op setup") {
+      terms(() => adj.map(_._2.to.length.toLong)
+        .aggregate((0L, 0L))((c, m) => (c._1 + 1, c._2 + m),
+          (a, b) => (a._1 + b._1, a._2 + b._2)))
     }
-    e.unpersist()
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks.withColumn("rank",
-      col("rank_fp").cast("double") / lit(scale.toDouble))
+    val ranks = coRounds[Long](op, adj, iters)((id, _) => t.init(id),
+      (r, a, i) => t.contrib(r, a.deg, a.weight(i)))(
+      identity, Math.addExact(_: Long, _: Long), Math.addExact(_: Long, _: Long))(
+      (id, c) => Math.addExact(t.teleport(id), c.getOrElse(0L)))
+    stateFrame(edges, ranks, _ => StructField("rank_fp", LongType, nullable = false))
+      .withColumn("rank", col("rank_fp").cast("double") / lit(scale.toDouble))
   }
 
   /** DuckDB twin of [[rankFixed]] over an existing CTE `edgesCte`: an
@@ -169,8 +305,9 @@ object Graph {
     * `(rank_fp * 85) DIV (deg * 100)`. Twin: [[pageRankCtesSql]]. */
   def pageRankFixed(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame =
-    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
-      scale) { (_, nodes) => uniformTerms(nodes.count(), scale, plainContrib) }
+    rankFixed("Graph.pageRank", edges, None, iters, scale) { sizes =>
+      uniformTerms(sizes()._1, scale)
+    }
 
   /** DuckDB twin of [[pageRankFixed]] over `edgesCte(src, dst)`; final
     * ranks in `pr$iters(id, rank_fp)`. */
@@ -185,9 +322,8 @@ object Graph {
     * scale 1e12. Twin: [[pageRankWeightedCtesSql]]. */
   def pageRankWeightedFixed(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame =
-    rankFixed(edges.select(col("src"), col("dst"), col("w")),
-      sum(col("w")), iters, scale) { (_, nodes) =>
-      uniformTerms(nodes.count(), scale, "(rank_fp * 85 * w) DIV (deg * 100)")
+    rankFixed("Graph.pageRankWeighted", edges, Some("w"), iters, scale) { sizes =>
+      uniformTerms(sizes()._1, scale)
     }
 
   /** DuckDB twin of [[pageRankWeightedFixed]] over `edgesCte(src, dst,
@@ -206,12 +342,11 @@ object Graph {
   def personalizedPageRankFixed(edges: DataFrame, sources: Seq[Long],
       iters: Int, scale: Long = 1000000000000L): DataFrame = {
     val nS = sources.size.toLong
-    val isSrc = col("id").isin(sources: _*)
-    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
-      scale) { (_, _) =>
-      RankTerms(expr(plainContrib),
-        when(isSrc, lit(scale / nS)).otherwise(lit(0L)),
-        when(isSrc, lit((15L * scale) / (100L * nS))).otherwise(lit(0L)))
+    val isSrc = sources.toSet
+    val (init, teleport) = (scale / nS, (15L * scale) / (100L * nS))
+    rankFixed("Graph.personalizedPageRank", edges, None, iters, scale) { _ =>
+      RankTerms(share(0L), id => if (isSrc(id)) init else 0L,
+        id => if (isSrc(id)) teleport else 0L)
     }
   }
 
@@ -242,11 +377,9 @@ object Graph {
     * implements, oracle-checked via [[articleRankCtesSql]]. */
   def articleRankFixed(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame =
-    rankFixed(edges.select(col("src"), col("dst")), count(lit(1)), iters,
-      scale) { (e, nodes) =>
-      val n = nodes.count()
-      val avgDeg = e.count() / n // floored — see scaladoc
-      uniformTerms(n, scale, s"(rank_fp * 85) DIV ((deg + $avgDeg) * 100)")
+    rankFixed("Graph.articleRank", edges, None, iters, scale) { sizes =>
+      val (n, m) = sizes()
+      uniformTerms(n, scale, extraDeg = m / n) // avgDeg floored — see scaladoc
     }
 
   /** DuckDB twin of [[articleRankFixed]] — [[pageRankCtesSql]] with the
@@ -960,40 +1093,24 @@ object Graph {
     * node into one community; LPA recovers internal community structure.
     * Each iteration is one shuffle keyed by node id.
     *
-    * r11 restructure (the SCC fold template, VERDICT r10 #1): the
-    * self-vote is folded into the edge list as (id, id) self-loop rows —
-    * the vote multiset (neighbor labels + own label) is unchanged, but
-    * the label frame's per-round consumer count drops from two (edge
-    * join + union branch) to ONE, legalizing the [[rounds]] cadence; and
-    * the per-node argmax runs as a hash aggregate over
-    * max(struct(votes, −label)) — lexicographically identical to the
-    * twin's `votes DESC, label ASC` ROW_NUMBER — with map-side partial
-    * combine instead of a sort window. Measured −34% median / −33% min
-    * at sf0.1 quiet (BASELINE.md round-11). */
+    * The vote edges are the distinct undirected edges (an input self-loop
+    * casts its one edge-vote) plus one own-label vote per node, the
+    * multiset of [[lpaCtesSql]]. Rounds run in [[coRounds]]: a node sends
+    * its label along its vote edges, the per-node label counts combine
+    * map-side, and the new label is the most-voted one, ties to the
+    * smaller label — the twin's `votes DESC, label ASC` ROW_NUMBER. */
   def labelPropagation(edges: DataFrame, iters: Int = 10): DataFrame = {
-    // pin the edge plan before the two-sided union (rationale: undirect)
-    val e = edges.pinned
-    val undD = e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val nodes = undD.select(col("src").as("id")).distinct()
-    // UNION ALL with the self-loops, deliberately: an input self-loop
-    // (a,a) survives undD's distinct and still casts its one edge-vote,
-    // and the appended row is the old union branch's own-label vote —
-    // the per-node multiset matches the prior formulation exactly
-    val und = undD
-      .union(nodes.select(col("id").as("src"), col("id").as("dst")))
-      .cache()
-    val init = nodes.withColumn("label", col("id")).pinned
-    val labels = rounds(init, iters) { l =>
-      und.join(l, und("dst") === l("id"))
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("votes"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("votes"), (-col("label")).as("nl"))).as("b"))
-        .select(col("src").as("id"), (-col("b.nl")).as("label"))
+    // each node votes to its distinct neighbors (an input self-loop
+    // included) and to itself once more: the vote multiset of the twin
+    val adj = undirectedAdjacency("Graph.labelPropagation", edges,
+      selfLoops = true, selfVote = true)
+    val labels = coRounds[Counts]("Graph.labelPropagation", adj, iters)(
+      (id, _) => id, (label, _, _) => label)(
+      new Counts().add(_), _.add(_), _.addAll(_)) { (_, votes) =>
+      // most votes, then the smallest label
+      votes.get.entries.maxBy { case (label, n) => (n, -label) }._1
     }
-    und.unpersist()
-    labels
+    stateFrame(edges, labels, StructField("label", _, nullable = true))
   }
 
   /** Newman modularity of a community labelling (closes the gap between
@@ -1525,36 +1642,26 @@ object Graph {
     * graph's peeling depth ≤ iters — GraphSpec proves exactness on a
     * clique-plus-tail fixture).
     *
-    * All-integer arithmetic (degree counts, row numbers, LEAST/MAX), so
-    * the unrolled [[kCoreCtesSql]] twin is bit-identical. The per-round
-    * H-index is one partitioned window (`row_number` over neighbors by
-    * value desc) + one groupBy — both shuffle on node id, the same
-    * co-partitioning every round; no global window, no driver state.
-    * `max(least(val, rn))` is invariant to tie order among equal values,
-    * but the order is pinned (val DESC, dst) anyway. */
+    * All-integer arithmetic (degree counts, LEAST/MAX), so the unrolled
+    * [[kCoreCtesSql]] twin is bit-identical. Rounds run in [[coRounds]]:
+    * a node sends its value to its distinct non-self neighbors, each node
+    * combines a histogram of what arrives (map-side), and its H-index is
+    * the max over values v of min(v, #values ≥ v) — the twin's
+    * `max(least(val, rn))`, which no tie order among equal values moves. */
   def kCoreFixed(edges: DataFrame, iters: Int): DataFrame = {
-    val e = edges.pinned
-    val und = e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct().cache()
-    val deg = und.groupBy(col("src"))
-      .agg(count(lit(1)).as("val"))
-      .select(col("src").as("id"), col("val"))
-      .pinned
-    // single mid-loop consumer → the `rounds` cadence
-    val vals = rounds(deg, iters) { v =>
-      val nbr = und.join(v, und("dst") === v("id"))
-        .select(col("src"), col("dst"), col("val"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("val").desc, col("dst"))
-      nbr.withColumn("rn", row_number().over(w).cast("long"))
-        .groupBy(col("src"))
-        .agg(max(least(col("val"), col("rn"))).as("val"))
-        .select(col("src").as("id"), col("val"))
+    val adj = undirectedAdjacency("Graph.kCore", edges,
+      selfLoops = false, selfVote = false)
+    val vals = coRounds[Counts]("Graph.kCore", adj, iters)(
+      (_, a) => a.to.length.toLong, (v, _, _) => v)(
+      new Counts().add(_), _.add(_), _.addAll(_)) { (_, hist) =>
+      // H-index: max over values v of min(v, #neighbors holding ≥ v)
+      var atLeast = 0L
+      hist.get.entries.toArray.sortBy(-_._1).foldLeft(0L) { case (h, (v, n)) =>
+        atLeast += n
+        math.max(h, math.min(v, atLeast))
+      }
     }
-    und.unpersist()
-    vals.select(col("id"), col("val").as("core"))
+    stateFrame(edges, vals, _ => StructField("core", LongType, nullable = true))
   }
 
   /** DuckDB twin of [[kCoreFixed]] over an undirected, self-loop-free,

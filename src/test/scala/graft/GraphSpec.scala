@@ -602,4 +602,156 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hm == Map(2L -> 1000000000L, 3L -> 500000000L, 4L -> 333333333L))
   }
+
+  // ------------------------------------------------------------------
+  // The co-partitioned fixed points (rank variants, LPA, k-core) must not
+  // depend on how the session partitions them. The fixture has a
+  // dangling node (9: in-edges only), two source-only nodes (7, 8), a
+  // repeated edge row (1→2 twice: it counts twice in deg and in the
+  // contributions), an input self-loop (5→5: an extra LPA vote, dropped
+  // by k-core) and two components. Rows and schemas below were frozen
+  // from the DataFrame-round kernels these replaced.
+  // ------------------------------------------------------------------
+  private val fixedPointEdges = Seq(1L -> 2L, 1L -> 2L, 2L -> 3L, 3L -> 1L,
+    1L -> 4L, 4L -> 5L, 5L -> 6L, 6L -> 4L, 2L -> 5L, 5L -> 5L, 8L -> 3L,
+    6L -> 9L, 10L -> 11L, 11L -> 12L, 12L -> 10L, 12L -> 9L, 7L -> 1L,
+    3L -> 12L)
+
+  private val frozenFixedPoints: Map[String, (String, Seq[String])] = Map(
+    "pr" -> ("id:bigint:false,rank_fp:bigint:false,rank:double:true", Seq(
+        "[1,39687954951,0.039687954951]", "[10,51965677082,0.051965677082]",
+        "[11,56670825519,0.056670825519]", "[12,72780697082,0.072780697082]",
+        "[2,36721353188,0.036721353188]", "[3,39844689995,0.039844689995]",
+        "[4,59813148978,0.059813148978]", "[5,145850450724,0.145850450724]",
+        "[6,76063354318,0.076063354318]", "[7,12500000000,0.0125]",
+        "[8,12500000000,0.0125]", "[9,87168149466,0.087168149466]")),
+    "wpr" -> ("id:bigint:false,rank_fp:bigint:false,rank:double:true", Seq(
+        "[1,35399332482,0.035399332482]", "[10,77962798719,0.077962798719]",
+        "[11,68125711803,0.068125711803]",
+        "[12,121894771114,0.121894771114]", "[2,25448001652,0.025448001652]",
+        "[3,38290500990,0.03829050099]", "[4,71255343343,0.071255343343]",
+        "[5,113653584140,0.11365358414]", "[6,85176928402,0.085176928402]",
+        "[7,12500000000,0.0125]", "[8,12500000000,0.0125]",
+        "[9,84564740223,0.084564740223]")),
+    "ppr" -> ("id:bigint:false,rank_fp:bigint:false,rank:double:true", Seq(
+        "[1,128258033854,0.128258033854]", "[10,14777382812,0.014777382812]",
+        "[11,28275338541,0.028275338541]",
+        "[12,108721197916,0.108721197916]", "[2,62203177082,0.062203177082]",
+        "[3,100662725694,0.100662725694]", "[4,56114388020,0.05611438802]",
+        "[5,188142261283,0.188142261283]", "[6,77341367187,0.077341367187]",
+        "[7,0,0.0]", "[8,75000000000,0.075]",
+        "[9,39790182291,0.039790182291]")),
+    "ar" -> ("id:bigint:false,rank_fp:bigint:false,rank:double:true", Seq(
+        "[1,25162018550,0.02516201855]", "[10,21629462247,0.021629462247]",
+        "[11,21813775800,0.0218137758]", "[12,30138909765,0.030138909765]",
+        "[2,23678875264,0.023678875264]", "[3,24570016396,0.024570016396]",
+        "[4,26630976266,0.026630976266]", "[5,45746797582,0.045746797582]",
+        "[6,27169931646,0.027169931646]", "[7,12500000000,0.0125]",
+        "[8,12500000000,0.0125]", "[9,30171000881,0.030171000881]")),
+    "lpa" -> ("id:bigint:false,label:bigint:true", Seq(
+        "[1,1]", "[10,10]", "[11,10]", "[12,10]", "[2,1]", "[3,1]", "[4,1]",
+        "[5,1]", "[6,1]", "[7,1]", "[8,1]", "[9,1]")),
+    "lpa2" -> ("id:bigint:false,label:bigint:true", Seq(
+        "[1,1]", "[10,10]", "[11,10]", "[12,10]", "[2,1]", "[3,1]", "[4,1]",
+        "[5,1]", "[6,1]", "[7,1]", "[8,1]", "[9,3]")),
+    "lpa1" -> ("id:bigint:false,label:bigint:true", Seq(
+        "[1,1]", "[10,10]", "[11,10]", "[12,3]", "[2,1]", "[3,1]", "[4,1]",
+        "[5,5]", "[6,4]", "[7,1]", "[8,3]", "[9,6]")),
+    "kc" -> ("id:bigint:false,core:bigint:true", Seq(
+        "[1,2]", "[10,2]", "[11,2]", "[12,2]", "[2,2]", "[3,2]", "[4,2]",
+        "[5,2]", "[6,2]", "[7,1]", "[8,1]", "[9,2]")),
+    "kc1" -> ("id:bigint:false,core:bigint:true", Seq(
+        "[1,3]", "[10,2]", "[11,2]", "[12,2]", "[2,3]", "[3,3]", "[4,3]",
+        "[5,3]", "[6,2]", "[7,1]", "[8,1]", "[9,2]")),
+    "pr_int" -> ("id:int:false,rank_fp:bigint:false,rank:double:true", Seq(
+        "[1,73593749999,0.073593749999]", "[10,62968749999,0.062968749999]",
+        "[11,53229166666,0.053229166666]",
+        "[12,133802083332,0.133802083332]", "[2,79791666666,0.079791666666]",
+        "[3,48506944444,0.048506944444]", "[4,66510416666,0.066510416666]",
+        "[5,164201388886,0.164201388886]", "[6,78020833332,0.078020833332]",
+        "[7,12500000000,0.0125]", "[8,12500000000,0.0125]",
+        "[9,83333333332,0.083333333332]")),
+    "lpa_int" -> ("id:int:false,label:int:true", Seq(
+        "[1,1]", "[10,10]", "[11,10]", "[12,3]", "[2,1]", "[3,1]", "[4,1]",
+        "[5,5]", "[6,4]", "[7,1]", "[8,3]", "[9,6]")),
+    "kc_int" -> ("id:int:false,core:bigint:true", Seq(
+        "[1,3]", "[10,2]", "[11,2]", "[12,2]", "[2,3]", "[3,3]", "[4,3]",
+        "[5,3]", "[6,2]", "[7,1]", "[8,1]", "[9,2]")))
+
+  test("rank, LPA and k-core fixed points: same rows and schema at 1, 3 and 7 partitions") {
+    val es = edges(fixedPointEdges: _*)
+    val we = fixedPointEdges.map { case (s, d) => (s, d, (s * 3 + d) % 5 + 1) }
+      .toDF("src", "dst", "w")
+    val ie = fixedPointEdges.map { case (s, d) => (s.toInt, d.toInt) }.toDF("src", "dst")
+    val runs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pr" -> (() => Graph.pageRankFixed(es, iters = 6)),
+      "wpr" -> (() => Graph.pageRankWeightedFixed(we, iters = 5)),
+      "ppr" -> (() => Graph.personalizedPageRankFixed(es, Seq(1L, 8L), iters = 5)),
+      "ar" -> (() => Graph.articleRankFixed(es, iters = 5)),
+      "lpa" -> (() => Graph.labelPropagation(es, iters = 4)),
+      "lpa2" -> (() => Graph.labelPropagation(es, iters = 2)),
+      "lpa1" -> (() => Graph.labelPropagation(es, iters = 1)),
+      "kc" -> (() => Graph.kCoreFixed(es, iters = 3)),
+      "kc1" -> (() => Graph.kCoreFixed(es, iters = 1)),
+      "pr_int" -> (() => Graph.pageRankFixed(ie, iters = 2)),
+      "lpa_int" -> (() => Graph.labelPropagation(ie, iters = 1)),
+      "kc_int" -> (() => Graph.kCoreFixed(ie, iters = 1)))
+    val key = "spark.sql.shuffle.partitions"
+    val previous = spark.conf.get(key)
+    try Seq("1", "3", "7").foreach { parts =>
+      spark.conf.set(key, parts)
+      runs.foreach { case (name, run) =>
+        val df = run()
+        val schema = df.schema.fields.map(f =>
+          s"${f.name}:${f.dataType.simpleString}:${f.nullable}").mkString(",")
+        val (wantSchema, wantRows) = frozenFixedPoints(name)
+        assert(schema == wantSchema, s"$name at $parts partitions")
+        assert(df.collect().map(_.toString).sorted.toSeq == wantRows,
+          s"$name at $parts partitions")
+      }
+    } finally spark.conf.set(key, previous)
+  }
+
+  test("pageRankWeightedFixed: a weight overflowing rank_fp * 85 * w throws") {
+    // rank_fp starts at 5e11: 5e11 * 85 * 1e6 > 2^63. A wrapping multiply
+    // would return wrong ranks without a word.
+    val e = intercept[Exception] {
+      Graph.pageRankWeightedFixed(Seq((1L, 2L, 1000000L), (2L, 1L, 1L))
+        .toDF("src", "dst", "w"), iters = 3).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+  }
+
+  test("fixed-point rounds: jobs named by operator and round, keep the Par tag") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((String.valueOf(e.properties.getProperty("spark.job.description")),
+          String.valueOf(e.properties.getProperty("spark.job.tags"))))
+    }
+    sc.setJobDescription("outer")
+    sc.addSparkListener(listener)
+    val p = try graft.obs.QueryProfile.during(spark) {
+      graft.plans.Par.both(
+        Graph.pageRankFixed(edges(1L -> 2L, 2L -> 3L, 3L -> 1L), iters = 5),
+        Graph.labelPropagation(edges(1L -> 2L, 2L -> 3L), iters = 3))
+    } finally sc.removeSparkListener(listener)
+    // the previous description is back once the loops are done
+    assert(sc.getLocalProperty("spark.job.description") == "outer")
+    sc.setJobDescription(null)
+    val sites = p.perJob.map(_.callSite).toSet
+    Seq("Graph.pageRank setup", "Graph.pageRank round 2/5",
+      "Graph.pageRank round 4/5", "Graph.pageRank round 5/5",
+      "Graph.labelPropagation round 2/3", "Graph.labelPropagation round 3/3")
+      .foreach(l => assert(sites(l), s"no job labelled $l in $sites"))
+    import scala.jdk.CollectionConverters._
+    val rounds = seen.asScala.toSeq.filter(_._1.startsWith("Graph."))
+    assert(rounds.nonEmpty)
+    // every round job still carries its Par leg's cancellation tag
+    rounds.foreach { case (label, tags) =>
+      assert(tags.contains("graft-par-"), s"$label ran without a Par tag: $tags")
+    }
+  }
 }

@@ -190,16 +190,19 @@ class PlanGuardSpec extends AnyFunSuite {
   // a restructure that adds even one shuffle PER ROUND costs 6–12
   // stages and still trips. The budgets are version-pinned (below), so
   // the tightness is deliberate: on THIS Spark, ±1 is the whole jitter.
+  // The rank, LPA and k-core loops run as co-partitioned RDD rounds, one
+  // shuffle stage per round: re-measured pagerank 18, weighted 13, ppr
+  // 13, tightcap 34, lpa 14, kcore 15 (from 20/15/14/35/26/16).
   private val shuffleBudgets: Map[String, Int] = Map(
-    "g_lpa_communities" -> 28,
+    "g_lpa_communities" -> 16,
     "g_hits" -> 51,
     "g_louvain2" -> 114,
     "g_scc" -> 34,
-    "g_pagerank_parts" -> 23,
+    "g_pagerank_parts" -> 20,
     // r13 late wave: the remaining loop shapes + the composed pipeline
     // (measured 16/16/47/12/36, same +2 convention; betweenness reads 27
     // since the r17 sweep trim)
-    "g_kcore" -> 18,
+    "g_kcore" -> 17,
     "g_components" -> 18,
     "g_betweenness_sample" -> 29,
     "g_harmonic" -> 14,
@@ -213,16 +216,18 @@ class PlanGuardSpec extends AnyFunSuite {
     "g_eccentricity" -> 14,
     "g_fastrp" -> 10,
     "g_pmi_embed2" -> 113,
-    "g_ppr_sample" -> 16,
-    "g_pagerank_weighted" -> 17,
+    "g_ppr_sample" -> 15,
+    "g_pagerank_weighted" -> 15,
     "g_components_star" -> 32,
     // r16: the capped projected-rank BENCH configuration enters the
     // timed headline, so its loop shape (kHopReach counts + projection
     // + 10 pageRankFixed rounds) gets pinned like its siblings
     // (measured 35, same +2 convention)
-    "g_articlerank_tightcap" -> 37,
+    "g_articlerank_tightcap" -> 36,
     // the BFS level loop's third caller (measured 11, same +2 convention)
-    "g_sssp" -> 13)
+    "g_sssp" -> 13,
+    // the second label-propagation caller (measured 17, same +2 convention)
+    "g_modularity" -> 19)
 
   /** The Spark version the budgets were measured on (ADVICE r13): a
     * Spark upgrade can legitimately shift executed map stages, so on any
@@ -234,15 +239,17 @@ class PlanGuardSpec extends AnyFunSuite {
   // Job budgets beside the shuffle budgets: an extra action on a cached
   // frame (say, a rank kernel that starts counting nodes for the
   // personalized variant) executes no new shuffle, so only the job count
-  // sees it. Measured 71/53/51/94/48/43 at sf0.001, counted by the same
+  // sees it. Measured 17/14/13/55/12/14/16 at sf0.001 (the DataFrame
+  // rounds ran 71/53/51/94/48/43 for the first six), counted by the same
   // listener in the same run as the stages; same +2 convention.
   private val jobBudgets: Map[String, Int] = Map(
-    "g_pagerank_parts" -> 73,
-    "g_pagerank_weighted" -> 55,
-    "g_ppr_sample" -> 53,
-    "g_articlerank_tightcap" -> 96,
-    "g_lpa_communities" -> 50,
-    "g_kcore" -> 45,
+    "g_pagerank_parts" -> 19,
+    "g_pagerank_weighted" -> 16,
+    "g_ppr_sample" -> 15,
+    "g_articlerank_tightcap" -> 57,
+    "g_lpa_communities" -> 14,
+    "g_kcore" -> 16,
+    "g_modularity" -> 18,
     // the BFS level loop and Louvain's level one (measured 65–66/39/37/
     // 38/87/202–206 across Profile and test runs, +2 on the highest)
     "g_betweenness_sample" -> 68,
@@ -281,6 +288,40 @@ class PlanGuardSpec extends AnyFunSuite {
     val overJobs = got.collect { case (q, _, j) if jobBudgets.get(q).exists(j > _) =>
       s"$q=$j>(${jobBudgets(q)})" }
     assert(overJobs.isEmpty, s"job budgets exceeded: ${overJobs.mkString(", ")}")
+  }
+
+  // ROADMAP direction 1's "one exchange per round": with broadcast joins
+  // off, g_pagerank_parts still executes exactly one shuffle stage per
+  // rank round, plus a fixed prelude (the edge self-join and distinct,
+  // the adjacency build, the final name join and sort). Each cut job
+  // runs one map stage per round since the previous cut and the cut's
+  // result stage, one task per partition each.
+  private val pageRankRounds = 15
+  private val pageRankPreludeStagesNoBroadcast = 7
+
+  test("g_pagerank_parts: one shuffle stage per round with broadcast joins off") {
+    assume(spark.version == budgetSparkVersion,
+      s"the prelude stage count was measured on Spark $budgetSparkVersion")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val previous = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val p = try QueryProfile.during(spark) {
+      SparkEntry.queries("g_pagerank_parts")(spark, sf)
+        .write.mode("overwrite").format("noop").save()
+    } finally spark.conf.set(key, previous)
+    assert(spark.conf.get(key) == previous)
+    info(s"g_pagerank_parts, no broadcast: ${p.shuffleStages} shuffle stages, ${p.jobs} jobs")
+    assert(p.shuffleStages == pageRankRounds + pageRankPreludeStagesNoBroadcast, p)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val cuts = p.perJob.map(_.callSite).collect {
+      case s if s.startsWith("Graph.pageRank round ") =>
+        s.stripPrefix("Graph.pageRank round ").takeWhile(_ != '/').toInt
+    }
+    assert(cuts == (2 to pageRankRounds by 2) :+ pageRankRounds, p.perJob)
+    val roundJobs = p.perJob.filter(_.callSite.startsWith("Graph.pageRank round "))
+    cuts.zip(0 +: cuts).zip(roundJobs).foreach { case ((t, prev), j) =>
+      assert(j.tasks == (t - prev + 1) * parts, s"round $t: $j")
+    }
   }
 
   test("query profile: one grouped aggregation has the known shape") {
