@@ -340,6 +340,13 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(p.shuffleWriteBytes > 0 && p.shuffleReadBytes == p.shuffleWriteBytes, p)
     // the map-stage job and the write — not the count before the window
     assert(p.jobs == 2, p)
+    // a 10-group aggregate's task holds a fast-hash-map page and the
+    // BytesToBytesMap's pointer array: a few heap-sized pages
+    // (Sessions.allocationSizes; 1 MB at a 7 GB heap), not Spark's
+    // 64 MB cluster-default pages
+    val page = Sessions.allocationSizes(Runtime.getRuntime.maxMemory).pageBytes
+    info(s"peak execution memory ${p.peakExecMemBytes} bytes, page $page bytes")
+    assert(p.peakExecMemBytes <= 4 * page, p)
   }
 
   test("decon_semantic broadcasts the quarantine side only") {
