@@ -66,14 +66,15 @@ object Profile {
         f"${p.shuffleStages} shuffle stages, ${p.tasks} tasks, " +
         f"run ${p.runMs / 1e3}%.2f s, cpu ${p.cpuMs / 1e3}%.2f s, " +
         f"shuffle read ${mb(p.shuffleReadBytes)}%.2f MB, " +
-        f"write ${mb(p.shuffleWriteBytes)}%.2f MB, " +
+        f"write ${mb(p.shuffleWriteBytes)}%.2f MB (${p.shuffleWriteRecords} records), " +
         f"spill mem ${mb(p.memorySpillBytes)}%.2f MB disk ${mb(p.diskSpillBytes)}%.2f MB, " +
         f"peak exec ${mb(p.peakExecMemBytes)}%.2f MB; " +
         (if (flags.isEmpty) "ok" else flags.mkString(", ")))
       p.perJob.foreach { j =>
         println(f"[profile]   job ${j.id}%5d ${j.callSite}%-48s " +
           f"${j.wallMs / 1e3}%7.2f s ${j.tasks}%5d tasks " +
-          f"${mb(j.shuffleWriteBytes)}%8.2f MB shuffle write")
+          f"${mb(j.shuffleWriteBytes)}%8.2f MB shuffle write " +
+          f"${j.shuffleWriteRecords}%8d records")
       }
       // nothing carries over between profiled queries
       spark.catalog.clearCache()

@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftshim.Shims
 
 /** One Spark job seen inside a [[QueryProfile]] window: its call site,
-  * wall time start → end, tasks run and shuffle bytes written. The call
+  * wall time start → end, tasks run, and shuffle bytes and records
+  * written. The call
   * site is the one the submitting thread set (`callSite.short`: a
   * stream's query thread sets its `start` site, [[graft.plans.Pins.pin]]
   * the pinning operator's), else its SQL execution's (e.g. a recovery's
@@ -17,11 +18,12 @@ import org.apache.spark.sql.graftshim.Shims
   * stage jobs from pool threads whose own call site names no engine
   * code; a job outside any SQL execution keeps its final stage's name. */
 final case class JobProfile(id: Int, callSite: String, wallMs: Long,
-    tasks: Int, shuffleWriteBytes: Long)
+    tasks: Int, shuffleWriteBytes: Long, shuffleWriteRecords: Long)
 
 /** What the engine ran while one block of code ran: jobs started,
   * shuffle-map stages executed, tasks, executor run/CPU time, shuffle
-  * bytes, spill and peak execution memory, plus one [[JobProfile]] per job.
+  * bytes, shuffle records written, spill and peak execution memory, plus
+  * one [[JobProfile]] per job.
   *
   * A stage counts as a shuffle stage when it ran at least one
   * ShuffleMapTask. Counting tasks — not stage submissions — makes the
@@ -31,7 +33,7 @@ final case class JobProfile(id: Int, callSite: String, wallMs: Long,
   * loop budgets pin. */
 final case class QueryProfile(jobs: Int, shuffleStages: Int, tasks: Int,
     runMs: Long, cpuMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-    memorySpillBytes: Long, diskSpillBytes: Long, peakExecMemBytes: Long,
+    shuffleWriteRecords: Long, memorySpillBytes: Long, diskSpillBytes: Long, peakExecMemBytes: Long,
     perJob: Seq[JobProfile])
 
 object QueryProfile {
@@ -55,13 +57,13 @@ object QueryProfile {
     * drain, and `synchronized` publishes the fields to the reader. */
   private final class Acc extends SparkListener {
     private final class Job(val callSite: String, val startMs: Long) {
-      var endMs = startMs; var tasks = 0; var shuffleWrite = 0L
+      var endMs = startMs; var tasks = 0; var shuffleWrite, shuffleRecords = 0L
     }
     private val jobs = mutable.LinkedHashMap[Int, Job]()
     private val executionSite = mutable.HashMap[String, String]()
     private val stageJob = mutable.HashMap[Int, Int]()
     private val shuffleStages = mutable.HashSet[Int]()
-    private var tasks, runMs, cpuNs, read, write, memSpill, diskSpill, peak = 0L
+    private var tasks, runMs, cpuNs, read, write, records, memSpill, diskSpill, peak = 0L
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart =>
@@ -91,18 +93,23 @@ object QueryProfile {
         cpuNs += m.executorCpuTime
         read += m.shuffleReadMetrics.totalBytesRead
         write += m.shuffleWriteMetrics.bytesWritten
+        records += m.shuffleWriteMetrics.recordsWritten
         memSpill += m.memoryBytesSpilled
         diskSpill += m.diskBytesSpilled
         peak = math.max(peak, m.peakExecutionMemory)
-        job.foreach(_.shuffleWrite += m.shuffleWriteMetrics.bytesWritten)
+        job.foreach { j =>
+          j.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          j.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
+        }
       }
     }
 
     def result: QueryProfile = synchronized {
       QueryProfile(jobs.size, shuffleStages.size, tasks.toInt, runMs,
-        cpuNs / 1000000L, read, write, memSpill, diskSpill, peak,
+        cpuNs / 1000000L, read, write, records, memSpill, diskSpill, peak,
         jobs.toSeq.map { case (id, j) =>
-          JobProfile(id, j.callSite, j.endMs - j.startMs, j.tasks, j.shuffleWrite)
+          JobProfile(id, j.callSite, j.endMs - j.startMs, j.tasks, j.shuffleWrite,
+            j.shuffleRecords)
         })
     }
   }

@@ -1,15 +1,10 @@
 package graft.operators
 
-import scala.collection.mutable
-import scala.reflect.ClassTag
-
-import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.plans.Pins
 import graft.plans.Pins.PinnedOps
@@ -26,13 +21,17 @@ import graft.plans.Pins.PinnedOps
   * re-planning) on the driver, and AQE runs every query stage and
   * broadcast as a job of its own. The rank, label-propagation and k-core
   * fixed points therefore run as co-partitioned RDD rounds instead
-  * ([[coRounds]]): the static side (adjacency) and the state are
+  * ([[BlockRounds]]): the static side (adjacency) and the state are
   * hash(id)-partitioned alike, the joins are local, and a round is one
-  * shuffle stage with map-side combine; a two-round cut is one job. At
-  * sf0.001 and local[2] `g_pagerank_parts` went from 71 to 17 jobs
-  * (BASELINE.md "Co-partitioned RDD rounds"). Nothing collects to the
-  * driver except loop counters and convergence checks (single-row
-  * aggregates).
+  * shuffle stage; a two-round cut is one job. At sf0.001 and local[2]
+  * `g_pagerank_parts` went from 71 to 17 jobs (BASELINE.md
+  * "Co-partitioned RDD rounds"). Every RDD of those loops holds one
+  * record per partition (a CSR block, a state array, one pre-combined
+  * message block per destination partition), so Spark's per-record
+  * machinery (size estimation, combiner maps, per-object serialization)
+  * stays out of the rounds (BASELINE.md "Blocked co-partitioned rounds").
+  * Nothing collects to the driver except loop counters and convergence
+  * checks (single-row aggregates).
   */
 object Graph {
 
@@ -44,172 +43,25 @@ object Graph {
     new java.util.concurrent.ConcurrentHashMap[
       org.apache.spark.SparkContext, SparkSession]
 
-  private val PinEvery = 2 // see `coRounds`
-
-  /** One node's static side in [[coRounds]]: the nodes it sends to, one
-    * entry per edge, with an integer weight per entry (`null` = every
-    * weight 1); `deg` is the weight sum. */
-  private final class Adj(val to: Array[Long], val w: Array[Long]) extends Serializable {
-    def weight(i: Int): Long = if (w == null) 1L else w(i)
-    val deg: Long = if (w == null) to.length.toLong else w.foldLeft(0L)(Math.addExact)
-  }
-
-  /** A node's targets as they arrive at its partition. */
-  private final class Targets extends Serializable {
-    val to = new mutable.ArrayBuilder.ofLong
-    val w = new mutable.ArrayBuilder.ofLong
-    def add(t: (Long, Long)): Targets = {
-      if (t != null) { to += t._1; w += t._2 }
-      this
-    }
-    def addAll(o: Targets): Targets = { to ++= o.to.result(); w ++= o.w.result(); this }
-  }
-
-  /** The static side of [[coRounds]], built under the label `<op>
-    * setup`: `edges`' `src`, `dst` and integer `weight` column (1 when
-    * absent), read as longs off the executed plan (a null endpoint fails
-    * loudly), turned by `sends` into (node, (target, weight)) rows —
-    * `null` for a node with nothing to send —, grouped per node by
-    * `finish` and hash-partitioned by node id into the session's
-    * `spark.sql.shuffle.partitions`. Each partition is sorted by id, so a
-    * recomputed partition comes back in the same order. */
-  private def adjacency(op: String, edges: DataFrame, weight: Option[String])(
-      sends: ((Long, Long, Long)) => Iterator[(Long, (Long, Long))])(
-      finish: (Long, Targets) => Adj): RDD[(Long, Adj)] = {
-    val spark = edges.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    labelled(spark.sparkContext, s"$op setup") {
-      edges.select(col("src").cast("long"), col("dst").cast("long"),
-          weight.fold(lit(1L))(col(_).cast("long")))
-        .queryExecution.toRdd.flatMap { r =>
-          require(!r.isNullAt(0) && !r.isNullAt(1), s"$op: null node id in edges")
-          sends((r.getLong(0), r.getLong(1), r.getLong(2)))
-        }
-    }.combineByKeyWithClassTag[Targets](new Targets().add(_), _.add(_),
-        _.addAll(_), new HashPartitioner(parts), mapSideCombine = false)
-      .mapPartitions(_.map { case (id, t) => (id, finish(id, t)) }
-        .toArray.sortBy(_._1).iterator, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Both directions of every edge, self-loops kept only with
-    * `selfLoops`, each node's targets distinct and sorted, plus its own id
-    * once more with `selfVote` — the vote edges of [[labelPropagation]]
-    * and the neighbor lists of [[kCoreFixed]]. */
-  private def undirectedAdjacency(op: String, edges: DataFrame,
-      selfLoops: Boolean, selfVote: Boolean): RDD[(Long, Adj)] =
-    adjacency(op, edges, None) {
-      case (s, d, _) if s != d || selfLoops => Iterator(s -> (d, 1L), d -> (s, 1L))
-      case _ => Iterator.empty
-    } { (id, t) =>
-      val to = t.to.result().sorted.distinct
-      new Adj(if (selfVote) to :+ id else to, null)
-    }
-
-  /** Run `f` with the thread's job description and short call site set to
-    * `label` (so an event log, the UI and [[graft.obs.QueryProfile]] name
-    * the operator and round), then restore both. Job tags, such as a
-    * [[graft.plans.Par]] leg's, are left alone. */
-  private def labelled[T](sc: SparkContext, label: String)(f: => T): T = {
-    val keys = Seq("spark.job.description", "callSite.short")
-    val previous = keys.map(sc.getLocalProperty)
-    keys.foreach(sc.setLocalProperty(_, label))
-    try f finally keys.zip(previous).foreach { case (k, v) => sc.setLocalProperty(k, v) }
-  }
-
-  /** The fixed-point loop of [[rankFixed]], [[labelPropagation]] and
-    * [[kCoreFixed]] as co-partitioned RDD rounds, with no Catalyst
-    * planning inside the loop. The state (node id → value, starting at
-    * `init`) lives on `adj`'s partitioner, in `adj`'s row order. A round
-    * zips each state partition with its `adj` partition, sends
-    * `send(value, adj, i)` along every target `i`, and combines what
-    * arrives per target in ONE shuffle onto the same partitioner (map-side
-    * combine through `one`/`add`/`merge`); zipping that with `adj` again
-    * gives each node `next(id, combined)`. Joins are therefore local and
-    * a round is one shuffle stage, whatever the graph's size.
-    *
-    * Every [[PinEvery]]-th round and the last are cut with
-    * `localCheckpoint` and one count (one job that runs the rounds since
-    * the previous cut), labelled `<op> round t/iters`; the previous cut is
-    * released then, and `adj` when the loop ends. */
-  private def coRounds[C: ClassTag](op: String, adj: RDD[(Long, Adj)],
-      iters: Int)(init: (Long, Adj) => Long, send: (Long, Adj, Int) => Long)(
-      one: Long => C, add: (C, Long) => C, merge: (C, C) => C)(
-      next: (Long, Option[C]) => Long): RDD[(Long, Long)] = {
-    val part = adj.partitioner.get
-    var state = adj.mapPartitions(_.map { case (id, a) => (id, init(id, a)) },
-      preservesPartitioning = true)
-    var cut = Option.empty[RDD[(Long, Long)]]
-    try for (t <- 1 to iters) {
-      val inflow = adj.zipPartitions(state) { (as, vs) =>
-        as.zip(vs).flatMap { case ((id, a), (vid, v)) =>
-          require(id == vid, s"$op: state row $vid beside node $id")
-          Iterator.tabulate(a.to.length)(i => (a.to(i), send(v, a, i)))
-        }
-      }.combineByKeyWithClassTag(one, add, merge, part)
-      state = adj.zipPartitions(inflow, preservesPartitioning = true) { (as, cs) =>
-        val got = mutable.LongMap.from(cs)
-        as.map { case (id, _) => (id, next(id, got.get(id))) }
-      }
-      if (t % PinEvery == 0 || t == iters) {
-        state = state.localCheckpoint()
-        labelled(adj.sparkContext, s"$op round $t/$iters")(state.count())
-        cut.foreach(_.unpersist(blocking = false))
-        cut = Some(state)
-      }
-    } finally adj.unpersist(blocking = false)
-    state
-  }
-
-  /** Per-node counts of the values [[coRounds]] sends: label votes for
-    * [[labelPropagation]], the neighbor-value histogram for
-    * [[kCoreFixed]]. Shuffled as its (value, count) pairs of longs, not
-    * as a hash table's slots. */
-  private final class Counts extends Serializable {
-    @transient private var m = new mutable.LongMap[Long]
-    def add(v: Long, n: Long = 1L): Counts = { m(v) = m.getOrElse(v, 0L) + n; this }
-    def addAll(o: Counts): Counts = { o.m.foreachEntry(add); this }
-    def entries: Iterator[(Long, Long)] = m.iterator
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.writeInt(m.size)
-      m.foreachEntry { (v, n) => out.writeLong(v); out.writeLong(n) }
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      m = new mutable.LongMap[Long]
-      for (_ <- 0 until in.readInt()) add(in.readLong(), in.readLong())
-    }
-  }
-
-  /** A [[coRounds]] result as a DataFrame `(id, <value>)`: `id` of the
-    * type and nullability the union of `edges`' endpoints has, the value
-    * field as `value` makes it from that id type. */
-  private def stateFrame(edges: DataFrame, state: RDD[(Long, Long)],
+  /** A [[BlockRounds.run]] result as a DataFrame `(id, <value>)`: `id`
+    * of the type and nullability the union of `edges`' endpoints has, the
+    * value field as `value` makes it from that id type. */
+  private def stateFrame(edges: DataFrame, state: RDD[(Array[Long], Array[Long])],
       value: DataType => StructField): DataFrame = {
     val id = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).schema.head
     val v = value(id.dataType)
-    edges.sparkSession.createDataFrame(state.map { case (k, x) => Row(k, x) },
+    edges.sparkSession.createDataFrame(
+        state.flatMap { case (ids, xs) => ids.indices.iterator.map(i => Row(ids(i), xs(i))) },
         StructType(Seq(id.copy(dataType = LongType), v.copy(dataType = LongType))))
       .select(col("id").cast(id.dataType).as("id"),
         col(v.name).cast(v.dataType).as(v.name))
   }
 
-  /** One rank variant's pieces as exact Long functions: a source's
-    * contribution over one out-edge (`rank_fp`, `deg`, edge weight), and
-    * the initial rank and teleport term of a node id. */
-  private final case class RankTerms(contrib: (Long, Long, Long) => Long,
-      init: Long => Long, teleport: Long => Long)
-
-  /** `(rank_fp * 85 * w) DIV ((deg + extraDeg) * 100)`, overflow-checked
-    * as Spark's ANSI arithmetic is. */
-  private def share(extraDeg: Long): (Long, Long, Long) => Long = (r, deg, w) =>
-    Math.multiplyExact(Math.multiplyExact(r, 85L), w) /
-      Math.multiplyExact(Math.addExact(deg, extraDeg), 100L)
-
-  private def uniformTerms(n: Long, scale: Long, extraDeg: Long = 0L): RankTerms = {
-    val (init, teleport) = (scale / n, (15L * scale) / (100L * n))
-    RankTerms(share(extraDeg), _ => init, _ => teleport)
-  }
+  /** A uniform rank variant's kernel over `n` nodes: every node starts at
+    * `scale DIV n` and teleports `15·scale DIV 100·n`. */
+  private def uniformKernel(n: Long, scale: Long, extraDeg: Long = 0L): RankKernel =
+    new RankKernel(extraDeg, scale / n, (15L * scale) / (100L * n), null)
 
   /** The fixed-point rank kernel behind [[pageRankFixed]],
     * [[pageRankWeightedFixed]], [[personalizedPageRankFixed]] and
@@ -233,22 +85,16 @@ object Graph {
     * source's weight sum and in its contributions. `terms` may ask
     * `sizes()` for (node count, edge-row count): one job over the built
     * adjacency, run only by the variants that need it. Rounds run in
-    * [[coRounds]] with the adjacency keyed by source (every node present,
-    * a sink with no targets). */
+    * [[BlockRounds.run]] with the adjacency keyed by source (every node
+    * present, a sink with no targets); [[RankKernel]] holds the
+    * arithmetic. */
   private def rankFixed(op: String, edges: DataFrame, weight: Option[String],
-      iters: Int, scale: Long)(terms: (() => (Long, Long)) => RankTerms): DataFrame = {
-    val adj = adjacency(op, edges, weight) {
-      case (s, d, w) => Iterator(s -> (d, w), d -> null)
-    }((_, t) => new Adj(t.to.result(), if (weight.isDefined) t.w.result() else null))
-    val t = labelled(edges.sparkSession.sparkContext, s"$op setup") {
-      terms(() => adj.map(_._2.to.length.toLong)
-        .aggregate((0L, 0L))((c, m) => (c._1 + 1, c._2 + m),
-          (a, b) => (a._1 + b._1, a._2 + b._2)))
+      iters: Int, scale: Long)(kernel: (() => (Long, Long)) => RankKernel): DataFrame = {
+    val adj = Csr.adjacency(op, edges, weight, undirected = None)
+    val k = BlockRounds.labelled(edges.sparkSession.sparkContext, s"$op setup") {
+      kernel(() => BlockRounds.sizes(adj))
     }
-    val ranks = coRounds[Long](op, adj, iters)((id, _) => t.init(id),
-      (r, a, i) => t.contrib(r, a.deg, a.weight(i)))(
-      identity, Math.addExact(_: Long, _: Long), Math.addExact(_: Long, _: Long))(
-      (id, c) => Math.addExact(t.teleport(id), c.getOrElse(0L)))
+    val ranks = BlockRounds.run(op, adj, iters, k)
     stateFrame(edges, ranks, _ => StructField("rank_fp", LongType, nullable = false))
       .withColumn("rank", col("rank_fp").cast("double") / lit(scale.toDouble))
   }
@@ -290,7 +136,7 @@ object Graph {
 
   private val plainContribSql = "(r.rank_fp * 85) // (d.deg * 100)"
 
-  /** [[rankCtesSql]] with [[uniformTerms]]' start and teleport. */
+  /** [[rankCtesSql]] with [[uniformKernel]]'s start and teleport. */
   private def uniformCtesSql(p: String, edgesCte: String, iters: Int,
       scale: Long, degree: String, contrib: String,
       extra: Seq[String] = Nil): String =
@@ -306,7 +152,7 @@ object Graph {
   def pageRankFixed(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame =
     rankFixed("Graph.pageRank", edges, None, iters, scale) { sizes =>
-      uniformTerms(sizes()._1, scale)
+      uniformKernel(sizes()._1, scale)
     }
 
   /** DuckDB twin of [[pageRankFixed]] over `edgesCte(src, dst)`; final
@@ -323,7 +169,7 @@ object Graph {
   def pageRankWeightedFixed(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L): DataFrame =
     rankFixed("Graph.pageRankWeighted", edges, Some("w"), iters, scale) { sizes =>
-      uniformTerms(sizes()._1, scale)
+      uniformKernel(sizes()._1, scale)
     }
 
   /** DuckDB twin of [[pageRankWeightedFixed]] over `edgesCte(src, dst,
@@ -342,11 +188,9 @@ object Graph {
   def personalizedPageRankFixed(edges: DataFrame, sources: Seq[Long],
       iters: Int, scale: Long = 1000000000000L): DataFrame = {
     val nS = sources.size.toLong
-    val isSrc = sources.toSet
-    val (init, teleport) = (scale / nS, (15L * scale) / (100L * nS))
     rankFixed("Graph.personalizedPageRank", edges, None, iters, scale) { _ =>
-      RankTerms(share(0L), id => if (isSrc(id)) init else 0L,
-        id => if (isSrc(id)) teleport else 0L)
+      new RankKernel(0L, scale / nS, (15L * scale) / (100L * nS),
+        sources.toArray.sorted.distinct)
     }
   }
 
@@ -379,7 +223,7 @@ object Graph {
       scale: Long = 1000000000000L): DataFrame =
     rankFixed("Graph.articleRank", edges, None, iters, scale) { sizes =>
       val (n, m) = sizes()
-      uniformTerms(n, scale, extraDeg = m / n) // avgDeg floored — see scaladoc
+      uniformKernel(n, scale, extraDeg = m / n) // avgDeg floored — see scaladoc
     }
 
   /** DuckDB twin of [[articleRankFixed]] — [[pageRankCtesSql]] with the
@@ -744,7 +588,7 @@ object Graph {
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      // two propagation rounds per pin+probe (`PinEvery`): the mid frame
+      // two propagation rounds per pin+probe (as in `BlockRounds`): the mid frame
       // is lazy and single-consumer, so the unroll halves the job count
       // without double-evaluating anything. Propagation is monotone and
       // idempotent at the fixpoint, so probing only even rounds at worst
@@ -1095,21 +939,17 @@ object Graph {
     *
     * The vote edges are the distinct undirected edges (an input self-loop
     * casts its one edge-vote) plus one own-label vote per node, the
-    * multiset of [[lpaCtesSql]]. Rounds run in [[coRounds]]: a node sends
-    * its label along its vote edges, the per-node label counts combine
-    * map-side, and the new label is the most-voted one, ties to the
-    * smaller label — the twin's `votes DESC, label ASC` ROW_NUMBER. */
+    * multiset of [[lpaCtesSql]]. Rounds run in [[BlockRounds.run]]: a
+    * node sends its label along its vote edges, the (node, label) counts
+    * combine map-side, and the new label is the most-voted one, ties to
+    * the smaller label ([[LpaKernel]]) — the twin's `votes DESC, label
+    * ASC` ROW_NUMBER. */
   def labelPropagation(edges: DataFrame, iters: Int = 10): DataFrame = {
     // each node votes to its distinct neighbors (an input self-loop
     // included) and to itself once more: the vote multiset of the twin
-    val adj = undirectedAdjacency("Graph.labelPropagation", edges,
-      selfLoops = true, selfVote = true)
-    val labels = coRounds[Counts]("Graph.labelPropagation", adj, iters)(
-      (id, _) => id, (label, _, _) => label)(
-      new Counts().add(_), _.add(_), _.addAll(_)) { (_, votes) =>
-      // most votes, then the smallest label
-      votes.get.entries.maxBy { case (label, n) => (n, -label) }._1
-    }
+    val adj = Csr.adjacency("Graph.labelPropagation", edges, None,
+      undirected = Some(true), selfVote = true)
+    val labels = BlockRounds.run("Graph.labelPropagation", adj, iters, LpaKernel)
     stateFrame(edges, labels, StructField("label", _, nullable = true))
   }
 
@@ -1643,24 +1483,16 @@ object Graph {
     * clique-plus-tail fixture).
     *
     * All-integer arithmetic (degree counts, LEAST/MAX), so the unrolled
-    * [[kCoreCtesSql]] twin is bit-identical. Rounds run in [[coRounds]]:
-    * a node sends its value to its distinct non-self neighbors, each node
-    * combines a histogram of what arrives (map-side), and its H-index is
-    * the max over values v of min(v, #values ≥ v) — the twin's
-    * `max(least(val, rn))`, which no tie order among equal values moves. */
+    * [[kCoreCtesSql]] twin is bit-identical. Rounds run in
+    * [[BlockRounds.run]]: a node sends its value to its distinct non-self
+    * neighbors, the (node, value) counts combine map-side, and its
+    * H-index is the largest h with ≥ h neighbors holding ≥ h
+    * ([[KCoreKernel]]) — equal to the max over values v of min(v, #values
+    * ≥ v), the twin's `max(least(val, rn))`, which no tie order among
+    * equal values moves. */
   def kCoreFixed(edges: DataFrame, iters: Int): DataFrame = {
-    val adj = undirectedAdjacency("Graph.kCore", edges,
-      selfLoops = false, selfVote = false)
-    val vals = coRounds[Counts]("Graph.kCore", adj, iters)(
-      (_, a) => a.to.length.toLong, (v, _, _) => v)(
-      new Counts().add(_), _.add(_), _.addAll(_)) { (_, hist) =>
-      // H-index: max over values v of min(v, #neighbors holding ≥ v)
-      var atLeast = 0L
-      hist.get.entries.toArray.sortBy(-_._1).foldLeft(0L) { case (h, (v, n)) =>
-        atLeast += n
-        math.max(h, math.min(v, atLeast))
-      }
-    }
+    val adj = Csr.adjacency("Graph.kCore", edges, None, undirected = Some(false))
+    val vals = BlockRounds.run("Graph.kCore", adj, iters, KCoreKernel)
     stateFrame(edges, vals, _ => StructField("core", LongType, nullable = true))
   }
 

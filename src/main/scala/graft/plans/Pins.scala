@@ -64,11 +64,12 @@ object Pins {
       case _ => pin
     }
 
-  /** Drop a pin's checkpoint blocks (non-blocking). Only for a pin that
-    * no returned plan reads any more. */
+  /** Drop a pin's checkpoint blocks (non-blocking, no WARN:
+    * `Shims.releaseCheckpoint`). Only for a pin that no returned plan
+    * reads any more. */
   private[graft] def release(pin: DataFrame): Unit =
     pin.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case lr: LogicalRDD => Shims.releaseCheckpoint(lr.rdd)
       case _ => ()
     }
 }

@@ -25,6 +25,15 @@ object Shims {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Drop a locally checkpointed RDD's blocks (non-blocking) the way
+    * Spark's `ContextCleaner` drops an unreachable RDD's, through
+    * `SparkContext.unpersistRDD` (`private[spark]`). `RDD.unpersist`
+    * would also log a WARN that the RDD's lineage is truncated, true of
+    * every local checkpoint and noise for one nothing reads any more.
+    * Only for an RDD no plan or job reads again. */
+  def releaseCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Strip the origin statistics a `localCheckpoint` carries over from
     * its source plan (`LogicalRDD.fromDataset` preserves them). In an
     * iterative algorithm each round's joins MULTIPLY the carried

@@ -712,6 +712,79 @@ class GraphSpec extends AnyFunSuite {
     } finally spark.conf.set(key, previous)
   }
 
+  // ------------------------------------------------------------------
+  // Edge cases of the blocked rounds, all six kernels at 1 and 7
+  // partitions. `pair` (1→2) has two nodes, so at 7 partitions most
+  // blocks are empty. `mixed` has six nodes: 4 is source-only, 5 is
+  // sink-only, 1→2 is repeated (it counts twice in the ranks), 3→3 is an
+  // input self-loop (an extra LPA vote, dropped by k-core), and both of
+  // 6's neighbours (4 and 5) start with k-core value 2. Rows were frozen
+  // from the per-record kernels these replaced.
+  // ------------------------------------------------------------------
+  private val blockFixtures: Map[String, Seq[(Long, Long)]] = Map(
+    "pair" -> Seq(1L -> 2L),
+    "mixed" -> Seq(1L -> 2L, 1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 3L,
+      4L -> 1L, 4L -> 6L, 2L -> 5L, 6L -> 5L))
+
+  private val frozenBlockEdgeCases: Map[String, Seq[String]] = Map(
+    "pair/pr" -> Seq("[1,75000000000,0.075]", "[2,138750000000,0.13875]"),
+    "pair/wpr" -> Seq("[1,75000000000,0.075]", "[2,138750000000,0.13875]"),
+    "pair/ppr" -> Seq("[1,75000000000,0.075]", "[2,63750000000,0.06375]"),
+    "pair/ar" -> Seq("[1,75000000000,0.075]", "[2,138750000000,0.13875]"),
+    "pair/lpa" -> Seq("[1,1]", "[2,1]"),
+    "pair/lpa1" -> Seq("[1,1]", "[2,1]"),
+    "pair/kc" -> Seq("[1,1]", "[2,1]"),
+    "pair/kc1" -> Seq("[1,1]", "[2,1]"),
+    "mixed/pr" -> Seq(
+      "[1,106458333333,0.106458333333]", "[2,115489583332,0.115489583332]",
+      "[3,144916406249,0.144916406249]", "[4,25000000000,0.025]",
+      "[5,104364322916,0.104364322916]", "[6,35625000000,0.035625]"),
+    "mixed/wpr" -> Seq(
+      "[1,95725235420,0.09572523542]", "[2,104839562406,0.104839562406]",
+      "[3,264354948660,0.26435494866]", "[4,25000000000,0.025]",
+      "[5,78902946959,0.078902946959]", "[6,35625000000,0.035625]"),
+    "mixed/ppr" -> Seq(
+      "[1,183640625000,0.183640625]", "[2,156094531250,0.15609453125]",
+      "[3,115374218750,0.11537421875]", "[4,75000000000,0.075]",
+      "[5,65702343750,0.06570234375]", "[6,31875000000,0.031875]"),
+    "mixed/ar" -> Seq(
+      "[1,54047788064,0.054047788064]", "[2,58061676952,0.058061676952]",
+      "[3,64632561726,0.064632561726]", "[4,25000000000,0.025]",
+      "[5,56303523661,0.056303523661]", "[6,32083333333,0.032083333333]"),
+    "mixed/lpa" -> Seq("[1,1]", "[2,1]", "[3,1]", "[4,1]", "[5,1]", "[6,1]"),
+    "mixed/lpa1" -> Seq("[1,1]", "[2,1]", "[3,3]", "[4,1]", "[5,2]", "[6,4]"),
+    "mixed/kc" -> Seq("[1,2]", "[2,2]", "[3,2]", "[4,2]", "[5,2]", "[6,2]"),
+    "mixed/kc1" -> Seq("[1,2]", "[2,2]", "[3,2]", "[4,2]", "[5,2]", "[6,2]"))
+
+  test("fixed points on edge-case blocks: empty blocks, sinks, sources, repeats, self-loops") {
+    val key = "spark.sql.shuffle.partitions"
+    val previous = spark.conf.get(key)
+    val got = try (for {
+      parts <- Seq("1", "7")
+      (fixture, es) <- blockFixtures.toSeq.sortBy(_._1)
+      (kernel, run) <- {
+        val e = es.toDF("src", "dst")
+        val we = es.map { case (s, d) => (s, d, (s * 3 + d) % 5 + 1) }.toDF("src", "dst", "w")
+        Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "pr" -> (() => Graph.pageRankFixed(e, iters = 4)),
+          "wpr" -> (() => Graph.pageRankWeightedFixed(we, iters = 4)),
+          "ppr" -> (() => Graph.personalizedPageRankFixed(e, Seq(1L, 4L), iters = 4)),
+          "ar" -> (() => Graph.articleRankFixed(e, iters = 4)),
+          "lpa" -> (() => Graph.labelPropagation(e, iters = 3)),
+          "lpa1" -> (() => Graph.labelPropagation(e, iters = 1)),
+          "kc" -> (() => Graph.kCoreFixed(e, iters = 2)),
+          "kc1" -> (() => Graph.kCoreFixed(e, iters = 1)))
+      }
+    } yield {
+      spark.conf.set(key, parts)
+      (s"$fixture/$kernel", parts, run().collect().map(_.toString).sorted.toSeq)
+    }) finally spark.conf.set(key, previous)
+    got.foreach { case (name, parts, rows) =>
+      assert(frozenBlockEdgeCases.get(name).contains(rows),
+        s"$name at $parts partitions: ${rows.map("\"" + _ + "\"").mkString(", ")}")
+    }
+  }
+
   test("pageRankWeightedFixed: a weight overflowing rank_fp * 85 * w throws") {
     // rank_fp starts at 5e11: 5e11 * 85 * 1e6 > 2^63. A wrapping multiply
     // would return wrong ranks without a word.
@@ -752,6 +825,44 @@ class GraphSpec extends AnyFunSuite {
     // every round job still carries its Par leg's cancellation tag
     rounds.foreach { case (label, tags) =>
       assert(tags.contains("graft-par-"), s"$label ran without a Par tag: $tags")
+    }
+  }
+
+  test("fixed-point rounds: released cuts leave no WARN and no persisted RDD") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sc = spark.sparkContext
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graph-spec-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    def truncated = lines.toArray.map(_.toString).filter(_.contains("was locally checkpointed"))
+    try {
+      // the appender sees the line when a local checkpoint is unpersisted
+      val probe = sc.parallelize(1 to 3).localCheckpoint()
+      probe.count()
+      probe.unpersist()
+      assert(truncated.nonEmpty, "the capture appender saw no WARN")
+      lines.clear()
+      val before = sc.getPersistentRDDs.keySet
+      val ranks = Graph.pageRankFixed(edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L), iters = 5)
+      val kept = sc.getPersistentRDDs.keySet -- before
+      assert(truncated.isEmpty, truncated.mkString("\n"))
+      // only the last cut, which the result reads, stays persisted
+      assert(kept.size == 1, s"persisted after the call: $kept")
+      assert(ranks.count() == 4)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
     }
   }
 }
